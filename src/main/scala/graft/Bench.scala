@@ -269,8 +269,8 @@ object Bench {
     }.mkString("{", ",", "}")
 
     // memoized shared-relation build cost (round-12 verdict item 5):
-    // every edgeCache tag (pp/ca/cs/or/tr/lp/cc/mh/dc/lm/lw) and
-    // memoized model fit (p1) is built and eagerly materialized ONCE
+    // every SessionMemo relation tag (pp/ca/cs/or/tr/lp/cc/mh/dc/lm/lw)
+    // and model fit (p1) is built and eagerly materialized ONCE
     // per session — during the discarded warmup pass here — so no
     // per-query median ever contains the shared build. Publishing the
     // per-tag build seconds makes the steady-state per-query figures

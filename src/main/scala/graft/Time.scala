@@ -1,7 +1,8 @@
 package graft
 
 /** Ad-hoc single-query timing main for perf iteration:
-  * `sbt "runMain graft.Time <sfDir> <query> [passes]"` — runs one
+  * `sbt "runMain graft.Time <sfDir> <query> [passes]"` (local cores
+  * from `SPARK_GRAFT_CPUS`, default 8) — runs one
   * declared query through the same noop-sink methodology as Bench and
   * prints per-pass seconds, plus per-pass codegen-compilation deltas
   * (new Janino compilations + generated bytecode) and JIT/GC clocks —
@@ -14,7 +15,8 @@ object Time {
     val sfDir = args(0)
     val name = args(1)
     val passes = if (args.length > 2) args(2).toInt else 3
-    val spark = graft.session.Sessions.localBench(8, 8, "graft-time")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = graft.session.Sessions.localBench(cpus, cpus, "graft-time")
     val cg = org.apache.spark.metrics.source.CodegenMetrics
     val jit = java.lang.management.ManagementFactory.getCompilationMXBean
     def gcMs = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans

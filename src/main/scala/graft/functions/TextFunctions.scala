@@ -49,13 +49,6 @@ object TextFunctions {
     ).otherwise(array().cast("array<string>"))
   }
 
-  /** Convenience one-shot form — fine for small inputs; hot paths should
-    * stage [[normalizeWs]] through a projection and call
-    * [[charShinglesOf]].
-    */
-  def charShingles(text: Column, n: Int): Column =
-    charShinglesOf(normalizeWs(text), n)
-
   /** Word n-gram shingles over an ALREADY-PROJECTED token array (see
     * [[charShinglesOf]] for why).
     */
@@ -262,10 +255,4 @@ object TextFunctions {
     */
   def contentFingerprint(text: Column): Column =
     md5(lower(regexp_replace(trim(text), "\\s+", " ")))
-
-  /** 64-bit numeric fingerprint (xxhash64) — cheaper than md5 for
-    * join/groupBy keys at 100 TB scale (8-byte key vs 32-char string).
-    */
-  def fingerprint64(text: Column): Column =
-    xxhash64(lower(regexp_replace(trim(text), "\\s+", " ")))
 }

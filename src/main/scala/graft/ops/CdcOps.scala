@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -356,8 +356,4 @@ object CdcOps {
     * zero-task scan, no legacy conf needed (SURVEY §4 "Legacy conf").
     */
   def emptyLike(df: DataFrame): DataFrame = df.where(lit(false))
-
-  /** Empty frame from an explicit schema. */
-  def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 }

@@ -169,13 +169,19 @@ object Lake {
   def truncateTable(spark: SparkSession, table: String): Unit =
     spark.sql(s"TRUNCATE TABLE $table")
 
-  /** S8 — safe overwrite of a catalog table whose current contents feed
+  /** S8 — overwrite of a catalog table whose current contents feed
     * the new plan. The reference works around Spark's cannot-overwrite-
     * what-you-read restriction with a two-phase tmp-table dance
     * (`daily_data_handler.py:125-155`: write tmp → refresh → read back →
     * overwrite real → TRUNCATE tmp) — non-atomic across three jobs.
     * `localCheckpoint` cuts the lineage instead: one materialization,
     * then a plain overwrite, no tmp table, no legacy conf.
+    *
+    * NOT crash-safe despite the name: Spark drops the old table before
+    * it runs the CTAS from the checkpoint blocks, and those blocks exist
+    * only inside this application. If the job commit fails, the old
+    * table is already gone and the new one was never written, so the
+    * replica is lost.
     */
   def overwriteTableSafely(df: DataFrame, table: String,
                            partitionBy: Seq[String] = Nil,

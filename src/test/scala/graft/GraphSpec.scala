@@ -431,9 +431,9 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("memoized label-prop queries survive repeated + nested cache access") {
-    // regression: labelPropCached resolved its edge relation INSIDE
-    // computeIfAbsent — a nested access to the access-ordered LRU
-    // mutates modCount and threw ConcurrentModificationException
+    // regression: label-prop's build reads the memoized edge relation
+    // from inside its own memoized build; that nesting once threw
+    // ConcurrentModificationException and must keep working
     val sfDir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$sfDir/events.parquet").exists())
     val lp = SparkEntry.queries("graph_label_prop")(spark, sfDir)

@@ -103,10 +103,12 @@ object PlanMetrics {
     * pinned Eval output) would collapse the matching subtree here to an
     * InMemoryTableScan and change the counts — the gate then fails or
     * passes depending on suite ORDER. Wipe the shared cache and score
-    * the inventory on a fresh session (fresh SparkEntry memo keys) —
+    * the inventory on a fresh session: `SessionMemo` keys its cells by
+    * session, so every memoized relation and fit is rebuilt for it —
     * exactly the state a fresh `PlanGate` JVM sees, so the golden
     * matches in any order. Other suites' cached frames recompute
-    * afterwards (slower, never incorrect).
+    * afterwards (slower, never incorrect). The fresh session's memo
+    * cells live until the SparkContext stops.
     */
   def inventoryJson(spark: org.apache.spark.sql.SparkSession, sfDir: String): String = {
     spark.sharedState.cacheManager.clearCache()
