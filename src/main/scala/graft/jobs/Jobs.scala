@@ -3,7 +3,6 @@ package graft.jobs
 import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.model.TableSpec
@@ -134,29 +133,28 @@ object Jobs {
     */
   private def mergeInto(spark: SparkSession, spec: TableSpec,
                         table: String, events: DataFrame): Unit = {
-    // Cache HERE, above any caller-side distinct(), so the routed
-    // counts below and the merge itself all read one materialization
-    // (a cache below the distinct would re-run the distinct shuffle
-    // per action); released once the merge has written.
-    val ev = events.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // Materialize HERE, above any caller-side distinct(), so the count
+    // below and the merge itself read one copy (a copy below the
+    // distinct would re-run the distinct shuffle per action). A local
+    // checkpoint, not a cache: the merge reads the batch twice, and AQE
+    // shares those branches' shuffles over a checkpoint scan but not
+    // over a cache scan. Released once the merge has written.
+    val ev = events.localCheckpoint(eager = true)
     try {
       val routed = CdcOps.routeOps(ev, spec.primaryKeys)
       val existing =
         if (Lake.tableExists(spark, table)) spark.table(table)
         else CdcOps.emptyLike(routed.inserts)
-      // Tombstones past the broadcast budget switch the merge to the
-      // bloom-pruned anti-join (no full-table exchange of `existing`).
-      // |updates| + |deletes| upper-bounds the tombstone count; one
-      // cache-backed scan computes both counts.
+      // Batch keys past the broadcast budget switch the merge to the
+      // bloom-pruned joins (no full-table exchange of `existing`). The
+      // event count bounds deletes ∪ updates ∪ inserts in one scan of
+      // the checkpoint.
       val limit = spark.conf.getOption("graft.cdc.tombstoneBroadcastLimit")
         .map(_.toLong).getOrElse(1L << 22)
-      val beyond = routed.updates.select(lit(1L).as("__one"))
-        .unionByName(routed.deleteKeys.select(lit(1L).as("__one")))
-        .count() > limit
+      val beyond = ev.count() > limit
       val merged = CdcOps.mergeBatch(existing, routed, spec.primaryKeys,
         spec.orderColumns, tombstonesBeyondBroadcast = beyond)
       Lake.overwriteTableSafely(merged, table, format = spec.format)
-    } finally ev.unpersist(blocking = false)
+    } finally graft.operators.Cluster.unpersistLocalCheckpoint(ev)
   }
 }

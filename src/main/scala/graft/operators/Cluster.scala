@@ -122,12 +122,13 @@ object Cluster {
     * Releases ONLY when the plan has exactly one LogicalRDD leaf — the
     * shape the label-propagation loop guarantees (each `labels` is
     * itself the checkpoint, never a join of several checkpointed
-    * relations). A multi-leaf plan means some leaf belongs to ANOTHER
-    * live frame; blanket-releasing would silently unpersist storage
-    * still in use elsewhere, so that case is left to the
+    * relations), as does the merge's checkpointed batch in
+    * [[graft.jobs.Jobs]]. A multi-leaf plan means some leaf belongs to
+    * ANOTHER live frame; blanket-releasing would silently unpersist
+    * storage still in use elsewhere, so that case is left to the
     * ContextCleaner instead (round-8 review finding).
     */
-  private def unpersistLocalCheckpoint(df: DataFrame): Unit = {
+  private[graft] def unpersistLocalCheckpoint(df: DataFrame): Unit = {
     val leaves = df.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r
     }

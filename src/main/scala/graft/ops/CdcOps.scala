@@ -220,6 +220,18 @@ object CdcOps {
                           primaryKeys: Seq[String],
                           expectedItems: Long = 1L << 22,
                           numBits: Long = 1L << 26): DataFrame = {
+    val probed = bloomProbed(existing, tombstoneKeys, primaryKeys, expectedItems, numBits)
+    probed.filter(!col("__might")).drop("__might")
+      .unionByName(probed.filter(col("__might")).drop("__might")
+        .join(tombstoneKeys, primaryKeys, "left_anti"))
+  }
+
+  /** `existing` plus a boolean `__might`: false when the bloom filter
+    * over `keys` proves the row's key absent from them.
+    */
+  private def bloomProbed(existing: DataFrame, keys: DataFrame, primaryKeys: Seq[String],
+                          expectedItems: Long = 1L << 22,
+                          numBits: Long = 1L << 26): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.graftbridge.Bridge
@@ -235,15 +247,28 @@ object CdcOps {
     // subquery: run the sketch-building aggregate as a scalar subquery,
     // whose (single binary) result is computed once and shipped to every
     // task probing the existing table.
-    val bloom = Bridge.scalarSubquery(tombstoneKeys.agg(bloomAgg.as("__bf")))
-    val probed = existing
+    val bloom = Bridge.scalarSubquery(keys.agg(bloomAgg.as("__bf")))
+    existing
       .withColumn("__might",
         coalesce(Bridge.column(BloomFilterMightContain(
           Bridge.expression(bloom),
           Bridge.expression(xxhash64(primaryKeys.map(col): _*)))), lit(false)))
-    probed.filter(!col("__might")).drop("__might")
-      .unionByName(probed.filter(col("__might")).drop("__might")
-        .join(tombstoneKeys, primaryKeys, "left_anti"))
+  }
+
+  /** The rows of `df` equal to no row of `rows` (null-safe on every
+    * column, as `dropDuplicates` compares), in `rows`' schema: `df`'s
+    * columns must come first in it, and missing ones are null-padded.
+    * `rows` is broadcast unless it is past the broadcast budget.
+    */
+  private def withoutRowsOf(df: DataFrame, rows: DataFrame, broadcastRows: Boolean): DataFrame = {
+    val names = rows.columns
+    // positional names on both sides: payload column names may hold
+    // characters a column reference would parse
+    val padded = df.unionByName(emptyLike(rows), allowMissingColumns = true)
+      .toDF(names.indices.map(i => s"__l$i"): _*)
+    val other = rows.toDF(names.indices.map(i => s"__r$i"): _*)
+    val on = names.indices.map(i => col(s"__l$i") <=> col(s"__r$i")).reduce(_ && _)
+    padded.join(if (broadcastRows) broadcast(other) else other, on, "left_anti").toDF(names: _*)
   }
 
   /** The full batch merge (`_overwrite_daily_table`,
@@ -257,14 +282,24 @@ object CdcOps {
     * tolerance replaces the reference's positional re-select (P7,
     * `daily_data_handler.py:94,99-100`) — it survives the schema drift
     * the positional union would silently corrupt (SURVEY §7.4.1).
+    *
+    * The dedup runs over the batch's rows only. That relies on
+    * `existing` being row-distinct, which holds for every table this
+    * merge or [[foldMerge]] wrote: then the kept rows are distinct, and
+    * `dedup(kept ∪ batch) = (kept ∖ dedup(batch)) ∪ dedup(batch)`. The
+    * kept rows equal to a deduped batch row are dropped by a second
+    * broadcast anti join over the same scan, so the existing table is
+    * read once and never shuffled; the exchanges carry batch rows only.
+    * The result equals the formula above row for row, column order
+    * included.
     */
   def mergeBatch(existing: DataFrame, routed: Routed,
                  primaryKeys: Seq[String],
                  orderColumns: Seq[String] = Seq("timestamp"),
                  tombstonesBeyondBroadcast: Boolean = false): DataFrame = {
-    val dedupedUpdates = lastWriterWins(routed.updates, primaryKeys, orderColumns)
+    // LWW keeps one row per key: the updates' keys are its keys
     val tombstones = routed.deleteKeys
-      .unionByName(dedupedUpdates.select(primaryKeys.map(col): _*))
+      .unionByName(routed.updates.select(primaryKeys.map(col): _*))
     // one batch's tombstones normally broadcast; past the broadcast
     // budget the bloom-pruned variant keeps the existing (100 TB) side
     // from shuffling wholesale — identical result either way
@@ -272,10 +307,23 @@ object CdcOps {
       if (tombstonesBeyondBroadcast)
         bloomPrunedAntiJoin(existing, tombstones, primaryKeys)
       else antiJoinByKey(existing, tombstones, primaryKeys)
-    kept
+    // the batch's rows in the merged schema (kept's columns first, types
+    // widened as the full union widens them), deduped
+    val batch = emptyLike(kept)
       .unionByName(routed.inserts, allowMissingColumns = true)
-      .unionByName(dedupedUpdates, allowMissingColumns = true)
+      .unionByName(lastWriterWins(routed.updates, primaryKeys, orderColumns),
+        allowMissingColumns = true)
       .dropDuplicates()
+    // a kept row can only equal a batch row of its own key; past the
+    // budget a bloom filter over the batch keys picks the rows to check
+    val keptOnly =
+      if (tombstonesBeyondBroadcast) {
+        val probed = bloomProbed(kept, batch.select(primaryKeys.map(col): _*), primaryKeys)
+        probed.filter(!col("__might")).drop("__might")
+          .unionByName(withoutRowsOf(probed.filter(col("__might")).drop("__might"), batch,
+            broadcastRows = false), allowMissingColumns = true)
+      } else withoutRowsOf(kept, batch, broadcastRows = true)
+    keptOnly.unionByName(batch, allowMissingColumns = true)
   }
 
   /** The improved one-pass merge the reference lacks: latest op per key

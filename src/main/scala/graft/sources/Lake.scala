@@ -1,9 +1,13 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StructType
 
-/** Lake-layer IO: partitioned file writes, catalog tables, safe
+/** Lake-layer IO: partitioned file writes, catalog tables, versioned
   * overwrite. Covers SURVEY §2.1 S5, S6, S8, S9, S10.
   */
 object Lake {
@@ -166,30 +170,79 @@ object Lake {
   def refreshTable(spark: SparkSession, table: String): Unit =
     spark.catalog.refreshTable(table)
 
-  def truncateTable(spark: SparkSession, table: String): Unit =
-    spark.sql(s"TRUNCATE TABLE $table")
+  /** S10 — empty the table (`daily_data_handler.py:157-158`) by
+    * committing an empty version through [[overwriteTableSafely]]. That
+    * works on the external tables a schema-changing commit registers,
+    * where Spark refuses `TRUNCATE TABLE`, and it is crash-safe the same
+    * way.
+    */
+  def truncateTable(spark: SparkSession, table: String): Unit = {
+    val current = Bridge.catalogTable(spark, table)
+    overwriteTableSafely(spark.table(table).where(lit(false)), table,
+      current.partitionColumnNames, current.provider.getOrElse("parquet"))
+  }
 
   /** S8 — overwrite of a catalog table whose current contents feed
     * the new plan. The reference works around Spark's cannot-overwrite-
     * what-you-read restriction with a two-phase tmp-table dance
     * (`daily_data_handler.py:125-155`: write tmp → refresh → read back →
     * overwrite real → TRUNCATE tmp) — non-atomic across three jobs.
-    * `localCheckpoint` cuts the lineage instead: one materialization,
-    * then a plain overwrite, no tmp table, no legacy conf.
     *
-    * NOT crash-safe despite the name: Spark drops the old table before
-    * it runs the CTAS from the checkpoint blocks, and those blocks exist
-    * only inside this application. If the job commit fails, the old
-    * table is already gone and the new one was never written, so the
-    * replica is lost.
+    * Here each overwrite commits a new version. The table's current
+    * catalog location `<root>` or `<root>__v<n>` stays untouched while
+    * `df` (which may read it) is written to `<root>__v<n+1>`; then the
+    * catalog is repointed there, and only then is version n deleted. No
+    * copy of the data, no drop before the write. A write that fails
+    * leaves the table on version n; its partial directory is replaced by
+    * the next attempt. A crash after the repoint leaves at most version
+    * n's directory behind, which nothing reads.
+    *
+    * The repoint is one atomic `SET LOCATION` while the schema, format
+    * and (absent) partitioning stay the same. Otherwise the catalog
+    * entry is dropped and re-created as an external table over the new
+    * version with the new schema and partitioning, so for a moment the
+    * name is unregistered (both versions' data is still on disk). A
+    * table that does not exist yet is created with `saveAsTable`.
     */
   def overwriteTableSafely(df: DataFrame, table: String,
                            partitionBy: Seq[String] = Nil,
                            format: String = "parquet"): Unit = {
-    val materialized = df.localCheckpoint(eager = true)
-    val w = materialized.write.mode(SaveMode.Overwrite).format(format)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .saveAsTable(table)
+    val spark = df.sparkSession
+    val w = df.write.format(format)
+    val writer = if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w
+    if (!tableExists(spark, table)) writer.saveAsTable(table)
+    else {
+      val current = Bridge.catalogTable(spark, table)
+      val from = new Path(current.location)
+      val to = nextVersion(from)
+      writer.mode(SaveMode.Overwrite).save(to.toString)
+      val quotedTo = "'" + to.toString.replace("\\", "\\\\").replace("'", "\\'") + "'"
+      val sameShape = partitionBy.isEmpty && current.partitionColumnNames.isEmpty &&
+        current.provider.contains(format) &&
+        DataTypeUtils.equalsIgnoreNullability(current.schema, df.schema)
+      if (sameShape) spark.sql(s"ALTER TABLE $table SET LOCATION $quotedTo")
+      else {
+        // a managed table's drop deletes version n, already superseded
+        spark.sql(s"DROP TABLE $table")
+        val partitioned =
+          if (partitionBy.isEmpty) ""
+          else partitionBy.map(c => s"`$c`").mkString("PARTITIONED BY (", ", ", ")")
+        val schema = StructType(df.schema.filterNot(f => partitionBy.contains(f.name)) ++
+          partitionBy.map(df.schema(_)))
+        spark.sql(s"CREATE TABLE $table (${schema.toDDL}) " +
+          s"USING $format $partitioned LOCATION $quotedTo")
+        if (partitionBy.nonEmpty) spark.catalog.recoverPartitions(table)
+      }
+      from.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(from, true)
+    }
+  }
+
+  private val Versioned = "(.*)__v(\\d+)".r
+
+  /** `<root>` and `<root>__v<n>` are followed by `<root>__v<n+1>`. */
+  private def nextVersion(p: Path): Path = p.getName match {
+    case Versioned(root, n) => new Path(p.getParent, s"${root}__v${n.toLong + 1}")
+    case root => new Path(p.getParent, s"${root}__v1")
   }
 
   /** S8 — plain append `saveAsTable` (increment mode,

@@ -7,8 +7,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Bridge into `private[sql]` Column↔Expression conversion (Spark 4
   * moved `Column` to a backend-agnostic ColumnNode representation; the
   * classic converters live behind `private[sql]`). This is the only
-  * place the engine reaches past the public API, and only to wrap its
-  * own Catalyst expressions as `Column`s.
+  * place the engine reaches past the public API: to wrap its own
+  * Catalyst expressions as `Column`s, and to read a table's catalog
+  * entry.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -34,4 +35,13 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** The catalog entry of `table`: location, provider, schema and
+    * partition columns in one lookup.
+    */
+  def catalogTable(spark: org.apache.spark.sql.SparkSession, table: String)
+      : org.apache.spark.sql.catalyst.catalog.CatalogTable = {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    state.catalog.getTableMetadata(state.sqlParser.parseTableIdentifier(table))
+  }
 }

@@ -55,11 +55,10 @@ object HiveCatalogE2E {
       Lake.refreshTable(spark, t)
       require(spark.table(t).count() == 200, "refreshTable broke the read")
 
-      // S8 SAFE overwrite of a table from a plan READING that table —
-      // the reference's tmp-table dance, done as one checkpointed
-      // overwrite. This is the seam an in-memory catalog cannot prove:
-      // Hive's saveAsTable(Overwrite) drops + recreates metastore
-      // state while the source data is mid-read.
+      // S8 overwrite of a table from a plan READING that table — the
+      // reference's tmp-table dance, done as a versioned commit. The
+      // schema and partitioning change here, so the commit re-registers
+      // the table over its new version in the Hive metastore.
       val folded = spark.table(t).filter(col("k") < 3)
         .groupBy(col("k")).agg(count(lit(1)).as("n"))
       Lake.overwriteTableSafely(folded, t)
@@ -68,16 +67,31 @@ object HiveCatalogE2E {
       require(after == Seq((0L, 30L), (1L, 30L), (2L, 28L)),
         s"overwriteTableSafely wrong contents: $after")
 
-      // S10 TRUNCATE (daily_data_handler.py:157-158): rows gone,
-      // table + schema still registered
+      // S10 TRUNCATE (daily_data_handler.py:157-158) of the now
+      // external table: rows gone, table + schema still registered
       Lake.truncateTable(spark, t)
       require(spark.table(t).count() == 0, "TRUNCATE left rows")
       require(Lake.tableExists(spark, t), "TRUNCATE dropped the table")
+
+      // S8 versioned commit with the schema unchanged on a managed
+      // table: the metastore entry is repointed to `<root>__v1` and the
+      // previous version's directory is deleted
+      val m = "graft_e2e.replica"
+      def location(table: String) = new org.apache.hadoop.fs.Path(
+        org.apache.spark.sql.graftbridge.Bridge.catalogTable(spark, table).location)
+      Lake.overwriteTableSafely(spark.range(0, 10).toDF("id"), m)
+      val v0 = location(m)
+      Lake.overwriteTableSafely(spark.table(m).where(col("id") < 5), m)
+      require(spark.table(m).count() == 5, "versioned overwrite wrong contents")
+      require(location(m).getName == s"${v0.getName}__v1", s"not repointed: ${location(m)}")
+      require(!v0.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(v0),
+        s"previous version $v0 left on disk")
 
       // metastore persistence: a NEW session over the SAME derby db
       // still sees the table (the property an in-memory catalog lacks)
       val s2 = spark.newSession()
       require(s2.catalog.tableExists(t), "table invisible to a new session")
+      require(s2.table(m).count() == 5, "new session reads a stale version")
 
       println("HIVE_E2E_OK")
     } finally {

@@ -4,12 +4,28 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.LocalDate
 
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.JobContext
+import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.jobs.Jobs
 import graft.model.TableSpec
+import graft.ops.CdcOps
 import graft.sources.{Lake, RawSource}
+
+/** A file commit protocol whose job commit always fails: the task files
+  * are written, the output is never committed.
+  */
+class FailingCommitProtocol(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
+    extends SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
+  override def commitJob(jobContext: JobContext, taskCommits: Seq[TaskCommitMessage]): Unit =
+    throw new java.io.IOException("injected job commit failure")
+}
 
 /** End-to-end file-based pipeline (SURVEY §7.2): streaming raw ingest
   * (file source in Kafka's place) → daily merge → history merge, in a
@@ -221,5 +237,108 @@ class JobsSpec extends AnyFunSuite {
 
     Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // reads ds-1 = Jan 1
     assert(spark.table(spec.historyTable).count() == 2)
+  }
+
+  /** A fresh lake and spec whose tables do not exist yet, and a writer
+    * of raw envelope rows into it.
+    */
+  private def freshLake(name: String): (TableSpec, Seq[(Timestamp, String)] => Unit) = {
+    val root = tmp(name)
+    val spec = TableSpec(name, "graft_db", Seq("ID"), s"$root/lake", s"$root/ckpt", "topic")
+    spark.sql("CREATE DATABASE IF NOT EXISTS graft_db")
+    Seq(spec.dailyTable, spec.historyTable).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    (spec, rows => Lake.appendPartitioned(
+      CdcOps.withDatePartitions(rows.toDF("timestamp", "value")), spec.dataDir))
+  }
+
+  private def location(table: String): Path = new Path(Bridge.catalogTable(spark, table).location)
+
+  /** Rows as sorted strings, columns in name order (a merge puts the
+    * key columns first, the backfill keeps the payload's order).
+    */
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).sorted.toSeq
+
+  /** The LWW fold of every raw event, as the history layer names columns. */
+  private def foldOfAll(spec: TableSpec): DataFrame =
+    CdcOps.foldMerge(Jobs.parseRaw(Lake.readAll(spark, spec.dataDir)
+      .drop(Lake.partitionColumns: _*), lowerNames = true).distinct(),
+      spec.primaryKeys, spec.orderColumns)
+
+  test("a payload column that appears on day 2 reaches the daily and the history table") {
+    val (spec, append) = freshLake("drift")
+    append(Seq(envelope(ts(1, 1), "c", "1", "LOAN"), envelope(ts(1, 2), "c", "2", "CARD")))
+    Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 1))
+    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill, truncates daily
+    append(Seq((ts(2, 1),
+      """{"ID":"1","PRODUCT":"LOAN","RATE":"0.05","__op":"u","__deleted":"false"}""")))
+    Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 2))
+    val daily = spark.table(spec.dailyTable).select($"ID", $"RATE").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(daily == Map("1" -> "0.05"))
+
+    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 3)) // merges day 2
+    val hist = spark.table(spec.historyTable).select($"id", $"rate").collect()
+      .map(r => r.getString(0) -> Option(r.getString(1))).toMap
+    assert(hist == Map("1" -> Some("0.05"), "2" -> None))
+    // the truncation keeps the new column
+    assert(spark.table(spec.dailyTable).count() == 0)
+    assert(spark.table(spec.dailyTable).columns.contains("RATE"))
+  }
+
+  test("after three history merges one version directory of the history table is on disk") {
+    val (spec, append) = freshLake("versions")
+    append(Seq(envelope(ts(1, 1), "c", "1", "P1")))
+    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill
+    for (d <- 2 to 4) {
+      append(Seq(envelope(ts(d, 1), "u", "1", s"P$d"), envelope(ts(d, 2), "c", s"${d + 10}", "N")))
+      Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, d + 1))
+    }
+    val loc = location(spec.historyTable)
+    assert(loc.getName.endsWith("__v3"), loc)
+    val root = loc.getName.stripSuffix("__v3")
+    val onDisk = new java.io.File(loc.toUri).getParentFile.listFiles.map(_.getName)
+      .filter(n => n == root || n.startsWith(s"${root}__v"))
+    assert(onDisk.toSeq == Seq(loc.getName))
+    assert(rowsOf(spark.table(spec.historyTable)) == rowsOf(foldOfAll(spec)))
+  }
+
+  test("a history merge replaces the partial version directory a failed write left") {
+    val (spec, append) = freshLake("retry")
+    append(Seq(envelope(ts(1, 1), "c", "1", "LOAN"), envelope(ts(1, 2), "c", "2", "CARD")))
+    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill
+    val before = location(spec.historyTable)
+    val partial = new Path(before.getParent, s"${before.getName}__v1")
+    Seq((ts(9, 9), "junk", "junk")).toDF("timestamp", "id", "product").write.parquet(partial.toString)
+
+    append(Seq(envelope(ts(2, 1), "u", "1", "DEPOSIT"), envelope(ts(2, 2), "d", "2", null)))
+    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 3))
+    assert(location(spec.historyTable) == partial)
+    assert(rowsOf(spark.table(spec.historyTable)) == rowsOf(foldOfAll(spec)))
+    assert(spark.table(spec.historyTable).count() == 1)
+    assert(!new java.io.File(before.toUri).exists())
+  }
+
+  test("a history merge whose job commit fails leaves the replica intact; " +
+      "the rerun lands the batch") {
+    val (spec, append) = freshLake("crash")
+    append(Seq(envelope(ts(1, 1), "r", "1", "LOAN"), envelope(ts(1, 2), "c", "2", "CARD"),
+      envelope(ts(1, 3), "r", "3", "BOND")))
+    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill
+    val before = rowsOf(spark.table(spec.historyTable))
+    assert(before.size == 3)
+
+    append(Seq(envelope(ts(2, 4), "u", "1", "DEPOSIT"), envelope(ts(2, 3), "u", "1", "SAVINGS"),
+      envelope(ts(2, 5), "d", "2", null), envelope(ts(2, 6), "c", "4", "FX")))
+    // a session of its own, so no other suite's writes see the fault
+    val faulty = spark.newSession()
+    faulty.conf.set("spark.sql.sources.commitProtocolClass", classOf[FailingCommitProtocol].getName)
+    intercept[Exception](Jobs.historyMerge(faulty, spec, LocalDate.of(2024, 1, 3)))
+    assert(Lake.tableExists(spark, spec.historyTable), "the failed merge lost the replica")
+    assert(rowsOf(spark.table(spec.historyTable)) == before)
+
+    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 3))
+    assert(rowsOf(spark.table(spec.historyTable)) == rowsOf(foldOfAll(spec)))
+    assert(spark.table(spec.historyTable).count() == 3)
   }
 }

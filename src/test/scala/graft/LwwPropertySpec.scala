@@ -2,14 +2,17 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.ops.CdcOps
 
-/** Property-based check (FIXTURES.md F5): the merged table equals a
+/** Property-based checks (FIXTURES.md F5): the merged table equals a
   * sequential in-memory fold of the same events — the merge is a LWW
-  * map, so the model is a few lines.
+  * map, so the model is a few lines — and `mergeBatch` equals the plain
+  * full-union-then-dedup formula it narrows.
   */
 class LwwPropertySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -46,6 +49,57 @@ class LwwPropertySpec extends AnyFunSuite {
       got == model(events)
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  /** The merge formula with the dedup over every row, written out. */
+  private def fullDedupMerge(existing: DataFrame, routed: CdcOps.Routed,
+                             beyondBroadcast: Boolean): DataFrame = {
+    val updates = CdcOps.lastWriterWins(routed.updates, Seq("key"))
+    val tombstones = routed.deleteKeys.unionByName(updates.select(col("key")))
+    val kept =
+      if (beyondBroadcast) CdcOps.bloomPrunedAntiJoin(existing, tombstones, Seq("key"))
+      else CdcOps.antiJoinByKey(existing, tombstones, Seq("key"))
+    kept.unionByName(routed.inserts, allowMissingColumns = true)
+      .unionByName(updates, allowMissingColumns = true)
+      .dropDuplicates()
+  }
+
+  private val genKey: Gen[Option[Int]] = Gen.frequency(1 -> Gen.const(None), 6 -> Gen.choose(1, 8).map(Some(_)))
+  private val genV: Gen[Option[String]] = Gen.option(Gen.oneOf("a", "b"))
+
+  /** A row-distinct replica, and a batch whose inserts partly copy
+    * replica rows (identical rows) or reuse their keys (different rows);
+    * every event not copying a row has its own timestamp.
+    */
+  private val genCase = for {
+    rows <- Gen.listOfN(14, Gen.zip(Gen.choose(0, 3), genKey, genV))
+    copies <- Gen.listOfN(3, Gen.choose(0, 13))
+    events <- Gen.listOfN(12, Gen.zip(Gen.oneOf("c", "r", "u", "u", "d"), genKey, genV))
+    drift <- Gen.oneOf(true, false)
+  } yield (rows.distinct, copies, events, drift)
+
+  test("mergeBatch equals the full-union dedup over random replicas and batches, " +
+      "both anti-join paths") {
+    val prop = Prop.forAll(genCase) { case (rows, copies, events, drift) =>
+      val existing = rows.map { case (t, k, v) => (new Timestamp(t * 1000L), k, v) }
+        .toDF("timestamp", "key", "v")
+      val copied = copies.map(i => rows(i % rows.size)).map { case (t, k, v) => (t, "c", k, v) }
+      val fresh = events.zipWithIndex.map { case ((op, k, v), i) => (100 + i, op, k, v) }
+      val batch0 = (copied ++ fresh)
+        .map { case (t, op, k, v) => (new Timestamp(t * 1000L), op, "false", k, v) }
+        .toDF("timestamp", "__op", "__deleted", "key", "v")
+      val batch = if (drift) batch0.withColumn("w", concat(lit("w"), col("v"))) else batch0
+      val routed = CdcOps.routeOps(batch, Seq("key"))
+      Seq(false, true).forall { beyond =>
+        val want = fullDedupMerge(existing, routed, beyond)
+        val got = CdcOps.mergeBatch(existing, routed, Seq("key"),
+          tombstonesBeyondBroadcast = beyond)
+        got.schema == want.schema &&
+          got.collect().map(_.toString).sorted.toSeq == want.collect().map(_.toString).sorted.toSeq
+      }
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(15), prop)
     assert(res.passed, res.status.toString)
   }
 }

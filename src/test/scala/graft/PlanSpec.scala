@@ -370,6 +370,42 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("mergeBatch over a parquet replica: no shuffle has the replica scan below it") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    val dir = new java.io.File(s"target/tmp/planspec-merge-${System.nanoTime()}").getAbsolutePath
+    spark.range(0L, 2000L).select(col("id").as("pk"), (col("id") % 97).as("v"),
+      lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("timestamp"))
+      .write.parquet(dir)
+    val existing = spark.read.parquet(dir)
+    val t = java.sql.Timestamp.valueOf("2024-01-02 00:00:00")
+    val batch = Seq((5000L, 1L, "c"), (7L, 7L, "c"), (3L, 100L, "u"), (4L, 0L, "d"))
+      .toDF("pk", "v", graft.ops.CdcOps.OpColumn)
+      .withColumn("timestamp", lit(t)).withColumn(graft.ops.CdcOps.DeletedColumn, lit("false"))
+    val out = graft.ops.CdcOps.mergeBatch(existing,
+      graft.ops.CdcOps.routeOps(batch, Seq("pk")), Seq("pk"))
+    // +1 fresh insert, +1 insert beside the pk-7 row (other timestamp), -1 delete
+    assert(out.count() == 2001L)
+    // every operator below `p`; with `streamedOnly`, only those whose
+    // rows flow into `p`'s output (a broadcast's build side is probed,
+    // not shuffled)
+    def below(p: SparkPlan, streamedOnly: Boolean): Seq[SparkPlan] = p match {
+      case _: BroadcastExchangeLike if streamedOnly => Nil
+      case a: AdaptiveSparkPlanExec => a +: below(a.executedPlan, streamedOnly)
+      case q: QueryStageExec => q +: below(q.plan, streamedOnly)
+      case o => o +: o.children.flatMap(below(_, streamedOnly))
+    }
+    val plan = out.queryExecution.executedPlan
+    assert(below(plan, streamedOnly = true).exists(_.isInstanceOf[FileSourceScanExec]),
+      s"no streamed replica scan:\n$plan")
+    val exchanges = below(plan, streamedOnly = false).collect { case e: ShuffleExchangeLike => e }
+    assert(exchanges.nonEmpty, s"no batch-side shuffle:\n$plan")
+    val shuffled = exchanges
+      .filter(e => below(e, streamedOnly = true).exists(_.isInstanceOf[FileSourceScanExec]))
+    assert(shuffled.isEmpty, s"the replica scan is shuffled:\n$plan")
+  }
+
   test("centroidDrift: corpus collapses in one wide aggregate; the " +
       "pairwise stage joins label rows by broadcast, no cartesian") {
     val rnd = new scala.util.Random(3)
