@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -10,6 +10,7 @@ import graft.operators.{Corpus, Dedup, Multimodal, Similarity, Sketch}
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 import graft.session.SessionMemo
 import graft.sources.Tables
+import graft.streaming.StreamingUpsert
 
 /** Driver contract: the declared query inventory (one entry per
   * implemented operator, SURVEY.md §2 + the training-data-pipeline
@@ -299,7 +300,7 @@ object SparkEntry {
     * volume, not the batch default. At these fixture scales 8
     * partitions cut the fixed per-batch store overhead ~3× vs 200
     * (measured 7.9 s → 2.8 s on the staged semi join). A round-8
-    * profile (StreamProfile) split a stream query into ~0.4 s
+    * profile (a since-deleted probe main) split a stream query into ~0.4 s
     * StreamExecution floor + ~0.3 s state stores + compute; dropping
     * SINGLE-OPERATOR aggregations to 4 partitions won ~0.1 s/query at
     * sf0.01 but LOST it back at sf0.1 (state 10× larger → fewer stores
@@ -315,13 +316,60 @@ object SparkEntry {
     * partitioning is a physical choice, and the oracle compare is
     * partitioning-blind).
     */
-  private def withStateParts[A](s: SparkSession, parts: Int = 8)(body: => A): A =
+  private[graft] def withStateParts[A](s: SparkSession, parts: Int = 8)(body: => A): A =
     this.synchronized {
       val key = "spark.sql.shuffle.partitions"
       val prev = s.conf.get(key)
       s.conf.set(key, parts.toString)
       try body finally s.conf.set(key, prev)
     }
+
+  /** Run `body` on the RocksDB state-store provider, which
+    * `transformWithState` requires (it rejects the default HDFS-backed
+    * store), restoring the session's prior provider afterwards. Call it
+    * inside [[withStateParts]], whose lock also covers this
+    * session-global conf.
+    */
+  private[graft] def withRocksDbState[A](s: SparkSession)(body: => A): A = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prior = s.conf.getOption(key)
+    s.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally prior match {
+      case Some(v) => s.conf.set(key, v)
+      case None    => s.conf.unset(key)
+    }
+  }
+
+  /** The one lifecycle of the memory-sink `stream_*` queries: start
+    * `stream` on a memory sink in output `mode` with the one-shot
+    * `AvailableNow` trigger, wait for it to finish, and return what
+    * `read` makes of the sink table. `read` also gets the finished
+    * query (for batch-count guards) and must return a MATERIALIZED
+    * result (`localCheckpoint`), because the sink view is gone once
+    * this returns. The query is stopped and the view dropped even when
+    * `read` throws.
+    */
+  private[graft] def memorySink(s: SparkSession, stream: Dataset[_], mode: String)(
+      read: (DataFrame, org.apache.spark.sql.streaming.StreamingQuery) => DataFrame): DataFrame = {
+    val sinkName = s"graft_sink_${System.nanoTime()}"
+    val q = stream.writeStream.outputMode(mode)
+      .format("memory").queryName(sinkName)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    try {
+      q.awaitTermination()
+      read(s.table(sinkName), q)
+    } finally {
+      if (q.isActive) q.stop()
+      s.catalog.dropTempView(sinkName)
+    }
+  }
+
+  /** The [[memorySink]] read of the queries whose result is the sink
+    * table itself. */
+  private val sinkRows: (DataFrame, org.apache.spark.sql.streaming.StreamingQuery) => DataFrame =
+    (sink, _) => sink.localCheckpoint(true)
 
   /** The session-memoized PC1 power-iteration direction (driver-side,
     * tiny — a Seq of doubles): the shared dominant prefix of embed_pca
@@ -560,14 +608,17 @@ object SparkEntry {
   // CDC event stream synthesized from the `events` table:
   // signup→c, view→r, error→d, click/purchase→u; key = user_id.
   // ---------------------------------------------------------------
+  private def cdcOp: Column =
+    when(col("event_type") === "signup", "c")
+      .when(col("event_type") === "view", "r")
+      .when(col("event_type") === "error", "d")
+      .otherwise("u")
+
   private def cdcEvents(s: SparkSession, dir: String): DataFrame =
     ld(s, dir, "events").select(
       col("ts").as("timestamp"),
       col("event_id"), col("user_id"),
-      when(col("event_type") === "signup", "c")
-        .when(col("event_type") === "view", "r")
-        .when(col("event_type") === "error", "d")
-        .otherwise("u").as(CdcOps.OpColumn),
+      cdcOp.as(CdcOps.OpColumn),
       when(col("event_type") === "error", "true").otherwise("false")
         .as(CdcOps.DeletedColumn),
       col("value"), col("props"))
@@ -584,6 +635,42 @@ object SparkEntry {
   private def routed(s: SparkSession, dir: String): CdcOps.Routed =
     CdcOps.routeOps(cdcEvents(s, dir), Seq("user_id"))
 
+  /** A fresh staging root for one run of a query that writes its own
+    * files (raw lake, upsert log, checkpoints): under the session
+    * scratch, which is removed at JVM exit, never inside the checkout.
+    */
+  private def runScratch(name: String): String =
+    graft.session.Sessions.scratchPath(s"run/$name-${java.util.UUID.randomUUID()}")
+
+  /** The stream_upsert* queries' keyed envelope over an events stream:
+    * key = user_id, LWW order = event_id, op = the [[cdcEvents]]
+    * mapping, payload = the [[upsertPayload]] columns as JSON.
+    */
+  private def keyedEvents(events: DataFrame): Dataset[StreamingUpsert.KeyedEvent] = {
+    import events.sparkSession.implicits._
+    events.select(
+      col("user_id").cast("string").as("key"),
+      col("event_id").as("order"),
+      cdcOp.as("op"),
+      to_json(struct(col("event_id"), col("user_id"), col("value"), col("props"))).as("payload")
+    ).as[StreamingUpsert.KeyedEvent]
+  }
+
+  private val upsertPayload =
+    StructType.fromDDL("event_id LONG, user_id LONG, value DOUBLE, props STRING")
+
+  /** The live rows of an update-mode upsert sink, materialized. The
+    * sink appends one row per changed key per micro-batch, so it is
+    * folded to the winning row per key first (correct for any batch
+    * split, not just the single-AvailableNow-batch case).
+    */
+  private def liveUpserts(sink: DataFrame): DataFrame = {
+    import sink.sparkSession.implicits._
+    StreamingUpsert.liveRows(
+      StreamingUpsert.latestPerKey(sink.as[StreamingUpsert.KeyState]), upsertPayload)
+      .localCheckpoint(true)
+  }
+
   /** Shared preamble of the three cdc_pipeline_* e2e queries:
     * synthesize the raw Kafka envelope from the events table, write it
     * as the file-source input, and stream-ingest it (AvailableNow +
@@ -594,7 +681,7 @@ object SparkEntry {
                                   format: String = "parquet"): graft.model.TableSpec = {
     import graft.jobs.Jobs
     import graft.sources.RawSource
-    val root = s"/root/repo/target/tmp/$name-${java.util.UUID.randomUUID()}"
+    val root = runScratch(name)
     cdcEvents(s, dir).select(
       col("timestamp"),
       to_json(struct(col("event_id"), col("user_id"), col("value"), col("props"),
@@ -671,6 +758,60 @@ object SparkEntry {
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)
       .withColumn("ts", graft.sources.Tables.normalizedTs(tsType))
+  }
+
+  /** The per-bin (baseline, current) counts of `value` over the
+    * events stream, split at Jan 15: the streaming state that
+    * stream_psi_drift and stream_jsd_drift read out with their own tails.
+    */
+  private def psiBinStream(s: SparkSession, dir: String): DataFrame = {
+    val split = lit("2024-01-15 00:00:00").cast("timestamp")
+    graft.operators.Eval.psiBinCounts(eventsStream(s, dir), col("value"),
+      col("ts") < split, col("ts") >= split)
+  }
+
+  /** The events table re-laid-out by `build` into a [[stagedInputDir]],
+    * as a source factory: each call opens a fresh stream over the one
+    * staged copy, one file per trigger, so each file is a micro-batch.
+    */
+  private def stagedEventsSource(s: SparkSession, dir: String, kind: String)(
+      build: (DataFrame, java.io.File) => Unit): () => DataFrame = {
+    val ev = ld(s, dir, "events")
+    val inDir = stagedInputDir(kind, dir)(in => build(ev, in))
+    () => s.readStream.schema(ev.schema)
+      .option("maxFilesPerTrigger", "1").parquet(inDir)
+  }
+
+  /** The events table as two files split at Jan 15, in mod-time order:
+    * the two-batch input of the queries whose results depend on the
+    * watermark advancing between batches.
+    */
+  private def split2Source(s: SparkSession, dir: String): () => DataFrame =
+    stagedEventsSource(s, dir, "split2") { (ev, in) =>
+      val split = lit("2024-01-15 00:00:00").cast("timestamp")
+      stageOrderedFiles(in,
+        Seq(ev.filter(col("ts") < split), ev.filter(col("ts") >= split)))
+    }
+
+  /** Each purchase interval-joined to the same user's clicks in the
+    * preceding 30 minutes, both sides watermarked at 1 hour; `src`
+    * opens one fresh events source per side. A `left_semi` join keeps
+    * the purchase columns only.
+    */
+  private def purchaseClickJoin(src: () => DataFrame, joinType: String): DataFrame = {
+    def side(tpe: String) = src()
+      .filter(col("event_type") === tpe)
+      .select(col("event_id"), col("user_id"), col("ts"))
+    val clicks =
+      if (joinType == "left_semi") Nil
+      else Seq(col("right_event_id").as("click_id"), col("right_ts").as("click_ts"))
+    graft.streaming.StreamingOps.intervalJoin(
+      side("purchase"), side("click"), "user_id",
+      leftTs = "ts", rightTs = "ts",
+      before = "30 minutes", after = "0 seconds", watermark = "1 hour",
+      joinType = joinType)
+      .select(Seq(col("event_id").as("purchase_id"), col("user_id"),
+        col("ts").as("purchase_ts")) ++ clicks: _*)
   }
 
   /** Streaming read of the embeddings table (file source), schema
@@ -2543,13 +2684,6 @@ object SparkEntry {
       Sketch.hllOverlapReport(ld(s, dir, "events"), "event_type",
         "user_id", m = 64)),
 
-    // The SAME HLL registers maintained as streaming state: a
-    // complete-mode max-aggregation over (group, bucket) — bounded at
-    // ≤ groups×64 rows no matter how long the stream runs — then the
-    // estimate folds over the sink batch-side. Same oracle as the
-    // batch path: the sketch doesn't care where its registers were
-    // built, which is exactly the merge property that lets a streaming
-    // job hand daily registers to a batch reporter.
     // PSI drift monitor as a stream: the per-bin (baseline, current)
     // counts are a complete-mode streaming aggregate (11 rows of
     // state), and the PSI tail recomputes from the materialized final
@@ -2557,22 +2691,8 @@ object SparkEntry {
     // batch oracle checks the streaming path (same contract as
     // stream_approx_distinct's HLL registers).
     "stream_psi_drift" -> ((s, dir) => withStateParts(s) {
-      val split = lit("2024-01-15 00:00:00").cast("timestamp")
-      val counts = graft.operators.Eval.psiBinCounts(
-        eventsStream(s, dir), col("value"),
-        col("ts") < split, col("ts") >= split)
-      val sinkName = s"graft_spsi_${System.nanoTime()}"
-      val q = counts.writeStream.outputMode("complete")
-        .format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        graft.operators.Eval.psiFromBinCounts(
-          s.table(sinkName).localCheckpoint(true), -5, 5)
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(sinkName)
+      memorySink(s, psiBinStream(s, dir), "complete") { (sink, _) =>
+        graft.operators.Eval.psiFromBinCounts(sink.localCheckpoint(true), -5, 5)
       }
     }),
 
@@ -2581,22 +2701,8 @@ object SparkEntry {
     // shared operators.Eval.jsdFromBinCounts tail — one tail for the
     // batch and streaming twins, one oracle SQL for both.
     "stream_jsd_drift" -> ((s, dir) => withStateParts(s) {
-      val split = lit("2024-01-15 00:00:00").cast("timestamp")
-      val counts = graft.operators.Eval.psiBinCounts(
-        eventsStream(s, dir), col("value"),
-        col("ts") < split, col("ts") >= split)
-      val sinkName = s"graft_sjsd_${System.nanoTime()}"
-      val q = counts.writeStream.outputMode("complete")
-        .format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        graft.operators.Eval.jsdFromBinCounts(
-          s.table(sinkName).localCheckpoint(true), -5, 5)
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(sinkName)
+      memorySink(s, psiBinStream(s, dir), "complete") { (sink, _) =>
+        graft.operators.Eval.jsdFromBinCounts(sink.localCheckpoint(true), -5, 5)
       }
     }),
 
@@ -2611,18 +2717,7 @@ object SparkEntry {
         .filter(col("event_type") === "error")
         .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
         .agg(count(lit(1)).as("x"))
-      val sinkName = s"graft_scusum_${System.nanoTime()}"
-      val q = daily.writeStream.outputMode("complete")
-        .format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        cusumTail(s.table(sinkName).localCheckpoint(true))
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(sinkName)
-      }
+      memorySink(s, daily, "complete")((sink, _) => cusumTail(sink.localCheckpoint(true)))
     }),
 
     // Embedding-drift monitor as a stream: the per-label count + exact
@@ -2635,18 +2730,8 @@ object SparkEntry {
     "stream_centroid_drift" -> ((s, dir) => withStateParts(s) {
       val sums = graft.operators.Eval.centroidSums(
         embeddingsStream(s, dir), "label", "embedding", dim = 64)
-      val sinkName = s"graft_scdr_${System.nanoTime()}"
-      val q = sums.writeStream.outputMode("complete")
-        .format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        graft.operators.Eval.centroidDriftFromSums(
-          s.table(sinkName).localCheckpoint(true), dim = 64)
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(sinkName)
+      memorySink(s, sums, "complete") { (sink, _) =>
+        graft.operators.Eval.centroidDriftFromSums(sink.localCheckpoint(true), dim = 64)
       }
     }),
 
@@ -2659,19 +2744,9 @@ object SparkEntry {
     "stream_heavy_hitters" -> ((s, dir) => withStateParts(s) {
       val cells = Sketch.cmsBuild(eventsStream(s, dir), "user_id",
         depth = 4, width = 64)
-      val sinkName = s"graft_scms_${System.nanoTime()}"
-      val q = cells.writeStream.outputMode("complete")
-        .format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        Sketch.heavyHittersFromSketch(
-          s.table(sinkName).localCheckpoint(true),
+      memorySink(s, cells, "complete") { (sink, _) =>
+        Sketch.heavyHittersFromSketch(sink.localCheckpoint(true),
           ld(s, dir, "events"), "user_id", depth = 4, width = 64, topN = 20)
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(sinkName)
       }
     }),
 
@@ -2685,38 +2760,26 @@ object SparkEntry {
         .filter(col("user_id").isNotNull)
         .groupBy(col("event_type"), col("user_id"))
         .agg(count(lit(1)).as("n"))
-      val sinkName = s"graft_stopk_${System.nanoTime()}"
-      val q = counts.writeStream.outputMode("complete")
-        .format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        graft.operators.TopK.topKPerGroup(
-          s.table(sinkName).localCheckpoint(true),
+      memorySink(s, counts, "complete") { (sink, _) =>
+        graft.operators.TopK.topKPerGroup(sink.localCheckpoint(true),
           Seq("event_type"), "n", "user_id", k = 3)
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(sinkName)
       }
     }),
 
+    // The SAME HLL registers as q_approx_distinct_hll maintained as
+    // streaming state: a complete-mode max-aggregation over (group,
+    // bucket) — bounded at ≤ groups×64 rows no matter how long the
+    // stream runs — then the estimate folds over the sink batch-side.
+    // Same oracle as the batch path: the sketch doesn't care where its
+    // registers were built, which is exactly the merge property that
+    // lets a streaming job hand daily registers to a batch reporter.
     "stream_approx_distinct" -> ((s, dir) => withStateParts(s) {
       val regs = Sketch.hllRegisters(
         eventsStream(s, dir).filter(col("user_id").isNotNull),
         "event_type", "user_id", m = 64)
-      val sinkName = s"graft_shll_${System.nanoTime()}"
-      val q = regs.writeStream.outputMode("complete")
-        .format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        Sketch.hllReportFromRegisters(s.table(sinkName).localCheckpoint(true),
+      memorySink(s, regs, "complete") { (sink, _) =>
+        Sketch.hllReportFromRegisters(sink.localCheckpoint(true),
           ld(s, dir, "events"), "event_type", "user_id", m = 64)
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(sinkName)
       }
     }),
 
@@ -4128,53 +4191,14 @@ object SparkEntry {
       val redelivered = src().unionByName(src())
       val deduped = graft.streaming.StreamingOps.dedupWithinWatermark(
         redelivered, Seq("event_id"), "ts", "10 minutes")
-      val sinkName = s"graft_sdedup_${System.nanoTime()}"
-      val q = deduped.writeStream.outputMode("append")
-        .format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        s.table(sinkName).localCheckpoint(true)
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(sinkName)
-      }
+      memorySink(s, deduped, "append")(sinkRows)
     }),
 
     // Streaming LWW upsert over flatMapGroupsWithState, file-source
     // fed; state sharded by key, only live (non-tombstoned) rows out.
     "stream_upsert" -> ((s, dir) => withStateParts(s) {
-      import s.implicits._
-      import graft.streaming.StreamingUpsert
-      val keyed = eventsStream(s, dir).select(
-        col("user_id").cast("string").as("key"),
-        col("event_id").as("order"),
-        when(col("event_type") === "signup", "c")
-          .when(col("event_type") === "view", "r")
-          .when(col("event_type") === "error", "d")
-          .otherwise("u").as("op"),
-        to_json(struct(col("event_id"), col("user_id"), col("value"), col("props"))).as("payload")
-      ).as[StreamingUpsert.KeyedEvent]
-      val sinkName = s"graft_upsert_${System.nanoTime()}"
-      val q = StreamingUpsert.upsert(keyed).writeStream
-        .outputMode("update").format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        // the update-mode sink appends one row per changed key per
-        // micro-batch — fold to the winning row per key before
-        // extracting live rows (correct for any batch split, not just
-        // the single-AvailableNow-batch case)
-        StreamingUpsert.liveRows(
-          StreamingUpsert.latestPerKey(s.table(sinkName).as[StreamingUpsert.KeyState]),
-          StructType.fromDDL("event_id LONG, user_id LONG, value DOUBLE, props STRING"))
-          .localCheckpoint(true)
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(sinkName)
-      }
+      memorySink(s, StreamingUpsert.upsert(keyedEvents(eventsStream(s, dir))), "update")(
+        (sink, _) => liveUpserts(sink))
     }),
 
     // The same LWW upsert on Spark 4's transformWithState API (typed
@@ -4182,42 +4206,9 @@ object SparkEntry {
     // support) — pinned to the SAME oracle as stream_upsert: two state
     // APIs, one truth.
     "stream_upsert_tws" -> ((s, dir) => withStateParts(s) {
-      import s.implicits._
-      import graft.streaming.StreamingUpsert
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prior = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val keyed = eventsStream(s, dir).select(
-          col("user_id").cast("string").as("key"),
-          col("event_id").as("order"),
-          when(col("event_type") === "signup", "c")
-            .when(col("event_type") === "view", "r")
-            .when(col("event_type") === "error", "d")
-            .otherwise("u").as("op"),
-          to_json(struct(col("event_id"), col("user_id"), col("value"), col("props"))).as("payload")
-        ).as[StreamingUpsert.KeyedEvent]
-        val sinkName = s"graft_upsert_tws_${System.nanoTime()}"
-        val q = StreamingUpsert.upsertTws(keyed).writeStream
-          .outputMode("update").format("memory").queryName(sinkName)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-          StreamingUpsert.liveRows(
-            StreamingUpsert.latestPerKey(s.table(sinkName).as[StreamingUpsert.KeyState]),
-            StructType.fromDDL("event_id LONG, user_id LONG, value DOUBLE, props STRING"))
-            .localCheckpoint(true)
-        } finally {
-          if (q.isActive) q.stop()
-          s.catalog.dropTempView(sinkName)
-        }
-      } finally {
-        prior match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None    => s.conf.unset(provKey)
-        }
+      withRocksDbState(s) {
+        memorySink(s, StreamingUpsert.upsertTws(keyedEvents(eventsStream(s, dir))), "update")(
+          (sink, _) => liveUpserts(sink))
       }
     }),
 
@@ -4229,40 +4220,15 @@ object SparkEntry {
     // collapses the sink regardless of batch split. A runtime guard
     // asserts more than one data batch actually ran.
     "stream_upsert_multibatch" -> ((s, dir) => withStateParts(s) {
-      import s.implicits._
-      import graft.streaming.StreamingUpsert
-      val inDir = stagedInputDir("musb", dir) { in =>
-        ld(s, dir, "events").repartitionByRange(4, col("event_id"))
+      val events = stagedEventsSource(s, dir, "musb") { (ev, in) =>
+        ev.repartitionByRange(4, col("event_id"))
           .write.mode("overwrite").parquet(in.toString)
-      }
-      val keyed = s.readStream.schema(ld(s, dir, "events").schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir)
-        .select(
-          col("user_id").cast("string").as("key"),
-          col("event_id").as("order"),
-          when(col("event_type") === "signup", "c")
-            .when(col("event_type") === "view", "r")
-            .when(col("event_type") === "error", "d")
-            .otherwise("u").as("op"),
-          to_json(struct(col("event_id"), col("user_id"), col("value"), col("props"))).as("payload")
-        ).as[StreamingUpsert.KeyedEvent]
-      val sinkName = s"graft_musb_${System.nanoTime()}"
-      val q = StreamingUpsert.upsert(keyed).writeStream
-        .outputMode("update").format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
+      }()
+      memorySink(s, StreamingUpsert.upsert(keyedEvents(events)), "update") { (sink, q) =>
         val dataBatches = q.recentProgress.count(_.numInputRows > 0)
         require(dataBatches > 1,
           s"multi-batch guard: expected >1 data micro-batch, saw $dataBatches")
-        StreamingUpsert.liveRows(
-          StreamingUpsert.latestPerKey(s.table(sinkName).as[StreamingUpsert.KeyState]),
-          StructType.fromDDL("event_id LONG, user_id LONG, value DOUBLE, props STRING"))
-          .localCheckpoint(true)
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(sinkName)
+        liveUpserts(sink)
       }
     }),
 
@@ -4273,29 +4239,12 @@ object SparkEntry {
     // pass, and read path all exercised in one query. Same oracle as
     // stream_upsert: the sink mechanics must not change the semantics.
     "stream_upsert_filesink" -> ((s, dir) => withStateParts(s) {
-      import s.implicits._
-      import graft.streaming.StreamingUpsert
-      val keyed = eventsStream(s, dir).select(
-        col("user_id").cast("string").as("key"),
-        col("event_id").as("order"),
-        when(col("event_type") === "signup", "c")
-          .when(col("event_type") === "view", "r")
-          .when(col("event_type") === "error", "d")
-          .otherwise("u").as("op"),
-        to_json(struct(col("event_id"), col("user_id"), col("value"), col("props"))).as("payload")
-      ).as[StreamingUpsert.KeyedEvent]
-      val root = s"/root/repo/target/tmp/fsink-${java.util.UUID.randomUUID()}"
-      StreamingUpsert.upsertToLog(keyed, s"$root/log", s"$root/ckpt")
+      val root = runScratch("fsink")
+      StreamingUpsert.upsertToLog(keyedEvents(eventsStream(s, dir)), s"$root/log", s"$root/ckpt")
       StreamingUpsert.compactLog(s, s"$root/log"): Unit
-      StreamingUpsert.readCurrent(s, s"$root/log",
-        StructType.fromDDL("event_id LONG, user_id LONG, value DOUBLE, props STRING"))
-        .localCheckpoint(true)
+      StreamingUpsert.readCurrent(s, s"$root/log", upsertPayload).localCheckpoint(true)
     }),
 
-    // Event-time windowed streaming aggregation with watermark — the
-    // stateful streaming surface the reference handles in batch
-    // (SURVEY §2.5 notes it has no watermarks/windows). Complete-mode
-    // memory sink over AvailableNow ⇒ deterministic final counts.
     // Stream enriched by a STATIC dimension (the canonical streaming
     // lookup-join): the per-user tier table is computed batch-side,
     // broadcast into every micro-batch's plan (no stream-side state,
@@ -4312,20 +4261,13 @@ object SparkEntry {
         .join(broadcast(dim), Seq("user_id"))
         .groupBy(col("event_type"), col("tier"))
         .agg(count(lit(1)).as("n"), sumD(col("value")).as("sum_value"))
-      val sinkName = s"graft_sjoin_${System.nanoTime()}"
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        s.table(sinkName).localCheckpoint(true)
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(sinkName)
-      }
+      memorySink(s, agg, "complete")(sinkRows)
     }),
 
+    // Event-time windowed streaming aggregation with watermark — the
+    // stateful streaming surface the reference handles in batch
+    // (SURVEY §2.5 notes it has no watermarks/windows). Complete-mode
+    // memory sink over AvailableNow ⇒ deterministic final counts.
     "stream_windowed_agg" -> ((s, dir) => withStateParts(s) {
       val agg = eventsStream(s, dir)
         .withWatermark("ts", "1 hour")
@@ -4333,18 +4275,7 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"), sumD(col("value")).as("sum_value"))
         .select(col("window.start").as("win_start"), col("event_type"),
           col("n"), col("sum_value"))
-      val sinkName = s"graft_winagg_${System.nanoTime()}"
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        s.table(sinkName).localCheckpoint(true)
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(sinkName)
-      }
+      memorySink(s, agg, "complete")(sinkRows)
     }),
 
     // Stateful streaming sessionization: session_window + watermark
@@ -4362,18 +4293,7 @@ object SparkEntry {
           col("session_window.start").as("w_start"),
           col("session_window.end").as("w_end"),
           col("n_events"), col("sum_value"))
-      val sinkName = s"graft_sesswin_${System.nanoTime()}"
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        s.table(sinkName).localCheckpoint(true)
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(sinkName)
-      }
+      memorySink(s, agg, "complete")(sinkRows)
     }),
 
     // Late-data discard under a watermark — the streaming semantic the
@@ -4389,8 +4309,7 @@ object SparkEntry {
     // Sink (append mode) = exactly the windows whose end precedes the
     // final watermark, counted from real events only.
     "stream_late_data" -> ((s, dir) => withStateParts(s) {
-      val ev = ld(s, dir, "events")
-      val inDir = stagedInputDir("late", dir) { in =>
+      val src = stagedEventsSource(s, dir, "late") { (ev, in) =>
         val split = lit("2024-01-15 00:00:00").cast("timestamp")
         val planted = ev.filter(col("event_id") % 100 === 0)
           .withColumn("ts", col("ts") - expr("INTERVAL 1440 HOURS"))
@@ -4401,26 +4320,16 @@ object SparkEntry {
         stageOrderedFiles(in,
           Seq(ev.filter(col("ts") < split), ev.filter(col("ts") >= split), planted))
       }
-      val agg = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir)
+      val agg = src()
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("win_start"), col("event_type"), col("n"))
-      val sinkName = s"graft_late_${System.nanoTime()}"
-      val q = agg.writeStream.outputMode("append")
-        .format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
+      memorySink(s, agg, "append") { (sink, q) =>
         val dataBatches = q.recentProgress.count(_.numInputRows > 0)
         require(dataBatches == 3,
           s"late-data guard: expected 3 data micro-batches, saw $dataBatches")
-        s.table(sinkName).localCheckpoint(true)
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(sinkName)
+        sink.localCheckpoint(true)
       }
     }),
 
@@ -4431,43 +4340,17 @@ object SparkEntry {
     // last + gap; sessions the final watermark never clears are
     // withheld — the oracle models that boundary explicitly.
     "stream_session_tws" -> ((s, dir) => withStateParts(s) {
-      val ev = ld(s, dir, "events")
-      val inDir = stagedInputDir("split2", dir) { in =>
-        val split = lit("2024-01-15 00:00:00").cast("timestamp")
-        stageOrderedFiles(in,
-          Seq(ev.filter(col("ts") < split), ev.filter(col("ts") >= split)))
-      }
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prior = s.conf.getOption(provKey)
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val src = s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(inDir)
+      val src = split2Source(s, dir)
+      withRocksDbState(s) {
         val out = graft.streaming.StreamingOps.sessionizeTws(
-          src, gapMs = 30L * 60L * 1000L, watermark = "1 hour")
-        val sinkName = s"graft_sesstws_${System.nanoTime()}"
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(sinkName)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try {
-          q.awaitTermination()
-          s.table(sinkName)
-            .select(col("user_id"),
+          src(), gapMs = 30L * 60L * 1000L, watermark = "1 hour")
+        memorySink(s, out, "append") { (sink, _) =>
+          sink.select(col("user_id"),
               timestamp_micros(col("start_us")).as("w_start"),
               timestamp_micros(col("last_us") + 1800L * 1000000L).as("w_end"),
               col("n_events"),
               (col("cents") / lit(100.0)).as("sum_value"))
             .localCheckpoint(true)
-        } finally {
-          if (q.isActive) q.stop()
-          s.catalog.dropTempView(sinkName)
-        }
-      } finally {
-        prior match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None    => s.conf.unset(provKey)
         }
       }
     }),
@@ -4479,28 +4362,7 @@ object SparkEntry {
     // scale). Inner-join matches emit in the batch they occur, so an
     // AvailableNow pass over the file source is deterministic.
     "stream_interval_join" -> ((s, dir) => withStateParts(s, joinStateParts(s)) {
-      def side(tpe: String) = eventsStream(s, dir)
-        .filter(col("event_type") === tpe)
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val joined = graft.streaming.StreamingOps.intervalJoin(
-        side("purchase"), side("click"), "user_id",
-        leftTs = "ts", rightTs = "ts",
-        before = "30 minutes", after = "0 seconds", watermark = "1 hour")
-        .select(col("event_id").as("purchase_id"), col("user_id"),
-          col("ts").as("purchase_ts"),
-          col("right_event_id").as("click_id"), col("right_ts").as("click_ts"))
-      val sinkName = s"graft_ivjoin_${System.nanoTime()}"
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        s.table(sinkName).localCheckpoint(true)
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(sinkName)
-      }
+      memorySink(s, purchaseClickJoin(() => eventsStream(s, dir), "inner"), "append")(sinkRows)
     }),
 
     // Stream-stream LEFT OUTER interval join: unmatched purchases
@@ -4513,36 +4375,7 @@ object SparkEntry {
     // withheld — correct unbounded-stream semantics, and the oracle
     // models the boundary explicitly (as stream_late_data does).
     "stream_outer_join" -> ((s, dir) => withStateParts(s, joinStateParts(s)) {
-      val ev = ld(s, dir, "events")
-      val inDir = stagedInputDir("split2", dir) { in =>
-        val split = lit("2024-01-15 00:00:00").cast("timestamp")
-        stageOrderedFiles(in,
-          Seq(ev.filter(col("ts") < split), ev.filter(col("ts") >= split)))
-      }
-      def side(tpe: String) = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir)
-        .filter(col("event_type") === tpe)
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val joined = graft.streaming.StreamingOps.intervalJoin(
-        side("purchase"), side("click"), "user_id",
-        leftTs = "ts", rightTs = "ts",
-        before = "30 minutes", after = "0 seconds", watermark = "1 hour",
-        joinType = "left_outer")
-        .select(col("event_id").as("purchase_id"), col("user_id"),
-          col("ts").as("purchase_ts"),
-          col("right_event_id").as("click_id"), col("right_ts").as("click_ts"))
-      val sinkName = s"graft_ojoin_${System.nanoTime()}"
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        s.table(sinkName).localCheckpoint(true)
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(sinkName)
-      }
+      memorySink(s, purchaseClickJoin(split2Source(s, dir), "left_outer"), "append")(sinkRows)
     }),
 
     // Stream-stream LEFT SEMI interval join over the same staged
@@ -4553,35 +4386,7 @@ object SparkEntry {
     // unmatched rows never emit, watermark withholding is unobservable
     // and the result equals the batch semi join exactly.
     "stream_semi_join" -> ((s, dir) => withStateParts(s, joinStateParts(s)) {
-      val ev = ld(s, dir, "events")
-      val inDir = stagedInputDir("split2", dir) { in =>
-        val split = lit("2024-01-15 00:00:00").cast("timestamp")
-        stageOrderedFiles(in,
-          Seq(ev.filter(col("ts") < split), ev.filter(col("ts") >= split)))
-      }
-      def side(tpe: String) = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir)
-        .filter(col("event_type") === tpe)
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val joined = graft.streaming.StreamingOps.intervalJoin(
-        side("purchase"), side("click"), "user_id",
-        leftTs = "ts", rightTs = "ts",
-        before = "30 minutes", after = "0 seconds", watermark = "1 hour",
-        joinType = "left_semi")
-        .select(col("event_id").as("purchase_id"), col("user_id"),
-          col("ts").as("purchase_ts"))
-      val sinkName = s"graft_sjoin_${System.nanoTime()}"
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        s.table(sinkName).localCheckpoint(true)
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(sinkName)
-      }
+      memorySink(s, purchaseClickJoin(split2Source(s, dir), "left_semi"), "append")(sinkRows)
     }),
 
     // FULL outer stream-stream interval join over the same staged
@@ -4591,36 +4396,7 @@ object SparkEntry {
     // ts + 30min < wm (a future purchase could still reach back). The
     // oracle models both eviction boundaries.
     "stream_full_outer_join" -> ((s, dir) => withStateParts(s, joinStateParts(s)) {
-      val ev = ld(s, dir, "events")
-      val inDir = stagedInputDir("split2", dir) { in =>
-        val split = lit("2024-01-15 00:00:00").cast("timestamp")
-        stageOrderedFiles(in,
-          Seq(ev.filter(col("ts") < split), ev.filter(col("ts") >= split)))
-      }
-      def side(tpe: String) = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir)
-        .filter(col("event_type") === tpe)
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val joined = graft.streaming.StreamingOps.intervalJoin(
-        side("purchase"), side("click"), "user_id",
-        leftTs = "ts", rightTs = "ts",
-        before = "30 minutes", after = "0 seconds", watermark = "1 hour",
-        joinType = "full_outer")
-        .select(col("event_id").as("purchase_id"), col("user_id"),
-          col("ts").as("purchase_ts"),
-          col("right_event_id").as("click_id"), col("right_ts").as("click_ts"))
-      val sinkName = s"graft_fojoin_${System.nanoTime()}"
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(sinkName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        q.awaitTermination()
-        s.table(sinkName).localCheckpoint(true)
-      } finally {
-        if (q.isActive) q.stop()
-        s.catalog.dropTempView(sinkName)
-      }
+      memorySink(s, purchaseClickJoin(split2Source(s, dir), "full_outer"), "append")(sinkRows)
     }),
 
     // End-to-end file pipeline: synthesize the raw Kafka envelope,

@@ -54,8 +54,10 @@ object Sessions {
     "spark.sql.streaming.stateStore.maintenanceInterval" -> "3600s",
     // One-shot AvailableNow streams emit everything in their data
     // batches (append joins/dedup emit on arrival; complete/update
-    // sinks emit per data batch; the only declared stateful op with
-    // timeouts, upsertWithTtl, is not wired to a no-data dependency).
+    // sinks emit per data batch). Watermark evictions and event-time
+    // timers then fire only in a data batch, never in an idle re-run:
+    // the queries that need them stage a later file to advance the
+    // watermark, and their oracles model what the final one withholds.
     // The trailing no-data micro-batch would only purge state that the
     // imminent stop discards anyway — skipping it saves a full round of
     // per-partition state-store commits per streaming query.

@@ -32,22 +32,23 @@ object StreamingUpsert {
     */
   final case class KeyState(key: String, order: Long, op: String, payload: String)
 
+  /** The LWW step both fold implementations share: the newest incoming
+    * event (max `order`) becomes the key's next state, unless the
+    * current state is at least as new (a stale arrival: no change).
+    */
+  private[graft] def lwwStep(key: String, events: Iterator[KeyedEvent],
+                             current: => Option[KeyState]): Option[KeyState] =
+    events.reduceOption((a, b) => if (a.order >= b.order) a else b)
+      .filterNot(ev => current.exists(_.order >= ev.order))
+      .map(ev => KeyState(key, ev.order, ev.op, ev.payload))
+
   private[streaming] def foldGroup(
       key: String,
       events: Iterator[KeyedEvent],
       state: GroupState[KeyState]): Iterator[KeyState] = {
-    val incoming = events.reduceOption { (a, b) => if (a.order >= b.order) a else b }
-    incoming match {
-      case None => Iterator.empty
-      case Some(ev) =>
-        val current = state.getOption
-        if (current.exists(_.order >= ev.order)) Iterator.empty // stale arrival
-        else {
-          val next = KeyState(key, ev.order, ev.op, ev.payload)
-          state.update(next)
-          Iterator.single(next)
-        }
-    }
+    val next = lwwStep(key, events, state.getOption)
+    next.foreach(state.update)
+    next.iterator
   }
 
   /** Fold a stream of [[KeyedEvent]] into per-key LWW state changes. */
@@ -58,48 +59,13 @@ object StreamingUpsert {
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(foldGroup)
   }
 
-  private[streaming] def foldGroupTtl(ttlMs: Long)(
-      key: String,
-      events: Iterator[KeyedEvent],
-      state: GroupState[KeyState]): Iterator[KeyState] = {
-    if (state.hasTimedOut) {
-      // idle key: drop its state; emit nothing (the lake already has
-      // the final value — this only bounds the in-flight state store)
-      state.remove()
-      Iterator.empty
-    } else {
-      val out = foldGroup(key, events, state)
-      if (state.exists) state.setTimeoutDuration(ttlMs)
-      out
-    }
-  }
-
-  /** [[upsert]] with processing-time state TTL: keys idle for `ttlMs`
-    * are evicted from the state store. At 100 TB of churn the live-key
-    * working set — not the all-time key count — bounds state size;
-    * late arrivals for an evicted key simply re-insert (LWW still
-    * converges because the lake merge downstream is itself LWW).
-    *
-    * Note: with `ProcessingTimeTimeout` the engine re-runs micro-batches
-    * continuously to fire timeouts, so `processAllAvailable()` on a
-    * query over this Dataset does not quiesce — use a real trigger
-    * interval in production and `TestGroupState` in tests.
-    */
-  def upsertWithTtl(events: Dataset[KeyedEvent], ttlMs: Long): Dataset[KeyState] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.ProcessingTimeTimeout)(foldGroupTtl(ttlMs))
-  }
-
   /** [[upsert]]'s LWW fold on the Spark 4 `transformWithState` API —
     * the arbitrary-state successor of `flatMapGroupsWithState`: typed
     * state handles created in `init`, RocksDB-backed (the API requires
     * the RocksDB state-store provider), native per-state TTL available
-    * via [[org.apache.spark.sql.streaming.TTLConfig]]. Semantics are
-    * IDENTICAL to [[foldGroup]] — max-order per key, stale arrivals
-    * ignored, emit only on change — and `stream_upsert_tws` pins both
+    * via [[org.apache.spark.sql.streaming.TTLConfig]]. Both folds run
+    * the one [[lwwStep]] — max-order per key, stale arrivals ignored,
+    * emit only on change — and `stream_upsert_tws` pins both
     * implementations to the same oracle.
     */
   class LwwStatefulProcessor
@@ -112,17 +78,9 @@ object StreamingUpsert {
         org.apache.spark.sql.streaming.TTLConfig.NONE)
     override def handleInputRows(key: String, rows: Iterator[KeyedEvent],
         timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[KeyState] = {
-      rows.reduceOption((a, b) => if (a.order >= b.order) a else b) match {
-        case None => Iterator.empty
-        case Some(ev) =>
-          val current = if (state.exists()) Option(state.get()) else None
-          if (current.exists(_.order >= ev.order)) Iterator.empty
-          else {
-            val next = KeyState(key, ev.order, ev.op, ev.payload)
-            state.update(next)
-            Iterator.single(next)
-          }
-      }
+      val next = lwwStep(key, rows, if (state.exists()) Option(state.get()) else None)
+      next.foreach(state.update)
+      next.iterator
     }
   }
 

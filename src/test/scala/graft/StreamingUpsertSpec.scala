@@ -14,6 +14,19 @@ class StreamingUpsertSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  test("lwwStep: the newest incoming event wins unless the state is at least as new") {
+    def events(orders: Long*) = orders.map(o => KeyedEvent("k", o, "u", s"v@$o")).iterator
+    assert(StreamingUpsert.lwwStep("k", events(3, 7, 5), None) ==
+      Some(KeyState("k", 7, "u", "v@7")))
+    assert(StreamingUpsert.lwwStep("k", events(3, 7), Some(KeyState("k", 5, "u", "s"))) ==
+      Some(KeyState("k", 7, "u", "v@7")))
+    // stale and equal-order arrivals leave the state alone
+    assert(StreamingUpsert.lwwStep("k", events(3), Some(KeyState("k", 5, "u", "s"))).isEmpty)
+    assert(StreamingUpsert.lwwStep("k", events(5), Some(KeyState("k", 5, "u", "s"))).isEmpty)
+    // no input: the state is never read
+    assert(StreamingUpsert.lwwStep("k", Iterator.empty, fail("state read")).isEmpty)
+  }
+
   test("flatMapGroupsWithState folds a CDC stream into per-key state across batches") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[KeyedEvent]
