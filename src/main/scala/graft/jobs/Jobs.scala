@@ -39,24 +39,27 @@ object Jobs {
   }
 
   /** One day's parsed, sanitized change events (S6, S7, P2-P4). Returns
-    * None when the day's partition is empty (the "no new data" case the
+    * None when the day has no record (the "no new data" case the
     * reference detects by catching AnalysisException on the missing
-    * path, `daily_data_handler.py:39-41` — with partition-pruned reads
-    * an empty day is just an empty frame, no exception control flow).
+    * path, `daily_data_handler.py:39-41` — here a missing day directory
+    * or raw root reads as an empty frame, no exception control flow).
     */
   def readDayEvents(spark: SparkSession, spec: TableSpec, ds: LocalDate,
-                    lowerNames: Boolean = false): Option[DataFrame] = {
-    // a raw root that doesn't exist yet (merge scheduled before the
-    // first ingest trigger) is "no new data", not an error — the one
-    // missing-path case the reference's blanket except covered
-    if (!Lake.pathExists(spark, spec.dataDir)) None
-    else {
-      val day = Lake.readDay(spark, spec.dataDir, ds.getYear,
-        ds.getMonthValue, ds.getDayOfMonth, spec.format)
-        .drop(Lake.partitionColumns: _*)
-      if (day.isEmpty) None
-      else Some(parseRaw(day, lowerNames))
-    }
+                    lowerNames: Boolean = false): Option[DataFrame] =
+    parsedIfAny(Lake.readDay(spark, spec.dataDir, ds.getYear,
+      ds.getMonthValue, ds.getDayOfMonth, spec.format), lowerNames)
+
+  /** A raw read without its partition columns, parsed as [[parseRaw]]
+    * parses it, or None when it holds no record. JSON inference yields
+    * fields only from records, so a non-empty payload schema proves the
+    * frame non-empty without a job of its own; only an empty schema
+    * (no record, or only `{}` records) is checked with `isEmpty`.
+    */
+  private def parsedIfAny(raw: DataFrame, lowerNames: Boolean): Option[DataFrame] = {
+    val events = raw.drop(Lake.partitionColumns: _*)
+    val schema = CdcOps.inferPayloadSchema(events)
+    if (schema.isEmpty && events.isEmpty) None
+    else Some(parseRaw(events, lowerNames, graft.schema.SchemaProvider.Declared(schema)))
   }
 
   /** Parse a raw `(timestamp, value)` frame: resolve the payload schema
@@ -100,28 +103,19 @@ object Jobs {
         val wrote =
           if (Lake.tableExists(spark, spec.historyTable))
             readDayEvents(spark, spec, ds.minusDays(1), lowered).map { ev =>
-              mergeInto(spark, spec, spec.historyTable, ev.distinct())
+              mergeInto(spark, spec, spec.historyTable, ev)
             }.isDefined
-          else {
+          else
             // Backfill: the whole raw log arrives as ONE batch, where the
             // reference's merge would keep every historical insert row for
             // a key alongside its latest update (inserts are only
             // tombstoned across batches, `daily_data_handler.py:88-101`).
             // A from-scratch rebuild has cleaner correct semantics: the
             // LWW fold of the full event log. Deliberate divergence.
-            if (!Lake.pathExists(spark, spec.dataDir)) false
-            else {
-              val all = Lake.readAll(spark, spec.dataDir, spec.format)
-                .drop(Lake.partitionColumns: _*)
-              if (all.isEmpty) false
-              else {
-                val folded = CdcOps.foldMerge(
-                  parseRaw(all, lowered).distinct(), spec.primaryKeys, spec.orderColumns)
-                Lake.overwriteTableSafely(folded, spec.historyTable, format = spec.format)
-                true
-              }
-            }
-          }
+            parsedIfAny(Lake.readAll(spark, spec.dataDir, spec.format), lowered).map { all =>
+              val folded = CdcOps.foldMerge(all.distinct(), spec.primaryKeys, spec.orderColumns)
+              Lake.overwriteTableSafely(folded, spec.historyTable, format = spec.format)
+            }.isDefined
         if (wrote && Lake.tableExists(spark, spec.dailyTable))
           Lake.truncateTable(spark, spec.dailyTable)
     }
@@ -133,13 +127,14 @@ object Jobs {
     */
   private def mergeInto(spark: SparkSession, spec: TableSpec,
                         table: String, events: DataFrame): Unit = {
-    // Materialize HERE, above any caller-side distinct(), so the count
-    // below and the merge itself read one copy (a copy below the
-    // distinct would re-run the distinct shuffle per action). A local
-    // checkpoint, not a cache: the merge reads the batch twice, and AQE
-    // shares those branches' shuffles over a checkpoint scan but not
-    // over a cache scan. Released once the merge has written.
-    val ev = events.localCheckpoint(eager = true)
+    // Materialize the batch once, so the count below and the merge read
+    // one copy. A local checkpoint, not a cache: the merge reads the
+    // batch twice, and AQE shares those branches' shuffles over a
+    // checkpoint scan but not over a cache scan. Marked lazily, it is
+    // computed and stored by the one job that counts its RDD (a Dataset
+    // count plans an aggregate and runs two jobs of its own). Released
+    // once the merge has written.
+    val ev = events.localCheckpoint(eager = false)
     try {
       val routed = CdcOps.routeOps(ev, spec.primaryKeys)
       val existing =
@@ -147,11 +142,10 @@ object Jobs {
         else CdcOps.emptyLike(routed.inserts)
       // Batch keys past the broadcast budget switch the merge to the
       // bloom-pruned joins (no full-table exchange of `existing`). The
-      // event count bounds deletes ∪ updates ∪ inserts in one scan of
-      // the checkpoint.
+      // event count bounds deletes ∪ updates ∪ inserts.
       val limit = spark.conf.getOption("graft.cdc.tombstoneBroadcastLimit")
         .map(_.toLong).getOrElse(1L << 22)
-      val beyond = ev.count() > limit
+      val beyond = ev.queryExecution.toRdd.count() > limit
       val merged = CdcOps.mergeBatch(existing, routed, spec.primaryKeys,
         spec.orderColumns, tombstonesBeyondBroadcast = beyond)
       Lake.overwriteTableSafely(merged, table, format = spec.format)

@@ -1,11 +1,12 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType, TimestampType}
 
 /** Lake-layer IO: partitioned file writes, catalog tables, versioned
   * overwrite. Covers SURVEY §2.1 S5, S6, S8, S9, S10.
@@ -133,13 +134,6 @@ object Lake {
       .drop("__z")
       .write.mode(SaveMode.Append).format(format).save(dir)
 
-  /** S6 — read one day of the raw layer. The reference constructs the
-    * partition path by hand (`daily_data_handler.py:51-58`); here the
-    * table root is read and Catalyst partition-prunes the filter — the
-    * plan's scan shows `PartitionFilters`, no full listing of other
-    * days' files — which also keeps partition columns in the result and
-    * composes with predicate pushdown.
-    */
   /** Does the data directory exist yet? First deployments run the merge
     * schedule before the first ingest trigger ever creates the raw
     * root — readers use this to treat "no directory" as "no data"
@@ -151,14 +145,35 @@ object Lake {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** The raw layer's schema: the cast envelope ([[graft.ops.CdcOps.castEnvelope]])
+    * and its date partitions ([[graft.ops.CdcOps.withDatePartitions]]).
+    * Reads pass it, so Spark runs no job to infer it from file footers.
+    */
+  val rawSchema: StructType = StructType(Seq(
+    StructField("timestamp", TimestampType), StructField("value", StringType)) ++
+    partitionColumns.map(StructField(_, IntegerType)))
+
+  /** S6 — read one day of the raw layer. As the reference does
+    * (`daily_data_handler.py:51-58`), only the day's partition directory
+    * is listed; `basePath` keeps the partition columns in the result. A
+    * day directory that does not exist (no ingest that day, or none yet
+    * at all) reads as an empty frame.
+    */
   def readDay(spark: SparkSession, dir: String, year: Int, month: Int, day: Int,
               format: String = "parquet"): DataFrame =
-    spark.read.format(format).load(dir)
-      .where(col("op_year") === year && col("op_month") === month && col("op_day") === day)
+    readRaw(spark, dir, s"$dir/op_year=$year/op_month=$month/op_day=$day", format)
 
-  /** Full-history read (backfill path, `history_data_handler.py:77-81`). */
+  /** Full-history read (backfill path, `history_data_handler.py:77-81`);
+    * a raw root that does not exist yet reads as an empty frame.
+    */
   def readAll(spark: SparkSession, dir: String, format: String = "parquet"): DataFrame =
-    spark.read.format(format).load(dir)
+    readRaw(spark, dir, dir, format)
+
+  private def readRaw(spark: SparkSession, root: String, path: String,
+                      format: String): DataFrame =
+    if (!pathExists(spark, path))
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), rawSchema)
+    else spark.read.format(format).schema(rawSchema).option("basePath", root).load(path)
 
   /** S9/S10 — catalog helpers (public Scala APIs; the reference needed a
     * private `_jsparkSession` bridge only because of its PySpark
@@ -171,14 +186,19 @@ object Lake {
     spark.catalog.refreshTable(table)
 
   /** S10 — empty the table (`daily_data_handler.py:157-158`) by
-    * committing an empty version through [[overwriteTableSafely]]. That
-    * works on the external tables a schema-changing commit registers,
-    * where Spark refuses `TRUNCATE TABLE`, and it is crash-safe the same
-    * way.
+    * committing an empty version: an empty `__v<n+1>` directory, committed
+    * as [[overwriteTableSafely]] commits a written one, with the table's
+    * current schema, format and partitioning. No job runs. That works on
+    * the external tables a schema-changing commit registers, where Spark
+    * refuses `TRUNCATE TABLE`, and it is crash-safe the same way.
     */
   def truncateTable(spark: SparkSession, table: String): Unit = {
     val current = Bridge.catalogTable(spark, table)
-    overwriteTableSafely(spark.table(table).where(lit(false)), table,
+    val to = nextVersion(new Path(current.location))
+    val fs = to.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(to, true) // the partial directory of a failed write, if any
+    require(fs.mkdirs(to), s"truncateTable: cannot create $to")
+    commitVersion(spark, table, current, to, current.schema,
       current.partitionColumnNames, current.provider.getOrElse("parquet"))
   }
 
@@ -190,19 +210,12 @@ object Lake {
     *
     * Here each overwrite commits a new version. The table's current
     * catalog location `<root>` or `<root>__v<n>` stays untouched while
-    * `df` (which may read it) is written to `<root>__v<n+1>`; then the
-    * catalog is repointed there, and only then is version n deleted. No
-    * copy of the data, no drop before the write. A write that fails
-    * leaves the table on version n; its partial directory is replaced by
-    * the next attempt. A crash after the repoint leaves at most version
-    * n's directory behind, which nothing reads.
-    *
-    * The repoint is one atomic `SET LOCATION` while the schema, format
-    * and (absent) partitioning stay the same. Otherwise the catalog
-    * entry is dropped and re-created as an external table over the new
-    * version with the new schema and partitioning, so for a moment the
-    * name is unregistered (both versions' data is still on disk). A
-    * table that does not exist yet is created with `saveAsTable`.
+    * `df` (which may read it) is written to `<root>__v<n+1>`; then
+    * [[commitVersion]] points the catalog there and deletes the older
+    * versions. No copy of the data, no drop before the write. A write
+    * that fails leaves the table on version n; its partial directory is
+    * replaced by the next attempt. A table that does not exist yet is
+    * created with `saveAsTable`.
     */
   def overwriteTableSafely(df: DataFrame, table: String,
                            partitionBy: Seq[String] = Nil,
@@ -213,36 +226,62 @@ object Lake {
     if (!tableExists(spark, table)) writer.saveAsTable(table)
     else {
       val current = Bridge.catalogTable(spark, table)
-      val from = new Path(current.location)
-      val to = nextVersion(from)
+      val to = nextVersion(new Path(current.location))
       writer.mode(SaveMode.Overwrite).save(to.toString)
-      val quotedTo = "'" + to.toString.replace("\\", "\\\\").replace("'", "\\'") + "'"
-      val sameShape = partitionBy.isEmpty && current.partitionColumnNames.isEmpty &&
-        current.provider.contains(format) &&
-        DataTypeUtils.equalsIgnoreNullability(current.schema, df.schema)
-      if (sameShape) spark.sql(s"ALTER TABLE $table SET LOCATION $quotedTo")
-      else {
-        // a managed table's drop deletes version n, already superseded
-        spark.sql(s"DROP TABLE $table")
-        val partitioned =
-          if (partitionBy.isEmpty) ""
-          else partitionBy.map(c => s"`$c`").mkString("PARTITIONED BY (", ", ", ")")
-        val schema = StructType(df.schema.filterNot(f => partitionBy.contains(f.name)) ++
-          partitionBy.map(df.schema(_)))
-        spark.sql(s"CREATE TABLE $table (${schema.toDDL}) " +
-          s"USING $format $partitioned LOCATION $quotedTo")
-        if (partitionBy.nonEmpty) spark.catalog.recoverPartitions(table)
-      }
-      from.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(from, true)
+      commitVersion(spark, table, current, to, df.schema, partitionBy, format)
     }
+  }
+
+  /** Make the written version `to` the table's contents, then delete every
+    * older version directory of the table: version n, and any a crash
+    * between an earlier repoint and its delete left behind.
+    *
+    * The repoint is one atomic `SET LOCATION` while the schema, format
+    * and (absent) partitioning stay the same. Otherwise the catalog
+    * entry is dropped and re-created as an external table over `to`
+    * with the new schema and partitioning, so for a moment the name is
+    * unregistered (both versions' data is still on disk). A table
+    * literally named `<t>__v<k>` in the same database would collide with
+    * `<t>`'s versions.
+    */
+  private def commitVersion(spark: SparkSession, table: String, current: CatalogTable,
+                            to: Path, schema: StructType, partitionBy: Seq[String],
+                            format: String): Unit = {
+    val quotedTo = "'" + to.toString.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    val sameShape = partitionBy.isEmpty && current.partitionColumnNames.isEmpty &&
+      current.provider.contains(format) &&
+      DataTypeUtils.equalsIgnoreNullability(current.schema, schema)
+    if (sameShape) spark.sql(s"ALTER TABLE $table SET LOCATION $quotedTo")
+    else {
+      // a managed table's drop deletes version n, already superseded
+      spark.sql(s"DROP TABLE $table")
+      val partitioned =
+        if (partitionBy.isEmpty) ""
+        else partitionBy.map(c => s"`$c`").mkString("PARTITIONED BY (", ", ", ")")
+      val ordered = StructType(schema.filterNot(f => partitionBy.contains(f.name)) ++
+        partitionBy.map(schema(_)))
+      spark.sql(s"CREATE TABLE $table (${ordered.toDDL}) " +
+        s"USING $format $partitioned LOCATION $quotedTo")
+      if (partitionBy.nonEmpty) spark.catalog.recoverPartitions(table)
+    }
+    val (root, n) = version(to)
+    val fs = to.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(to.getParent).map(_.getPath)
+      .filter(p => version(p) match { case (r, k) => r == root && k < n })
+      .foreach(fs.delete(_, true))
   }
 
   private val Versioned = "(.*)__v(\\d+)".r
 
-  /** `<root>` and `<root>__v<n>` are followed by `<root>__v<n+1>`. */
-  private def nextVersion(p: Path): Path = p.getName match {
-    case Versioned(root, n) => new Path(p.getParent, s"${root}__v${n.toLong + 1}")
-    case root => new Path(p.getParent, s"${root}__v1")
+  /** `<root>` is version 0 of `<root>`, `<root>__v<n>` version n. */
+  private def version(p: Path): (String, Long) = p.getName match {
+    case Versioned(root, n) => (root, n.toLong)
+    case root => (root, 0L)
+  }
+
+  /** The directory of the version after `p`'s: `<root>__v<n+1>`. */
+  private def nextVersion(p: Path): Path = version(p) match {
+    case (root, n) => new Path(p.getParent, s"${root}__v${n + 1}")
   }
 
   /** S8 — plain append `saveAsTable` (increment mode,

@@ -15,10 +15,7 @@ class CliSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp(name: String): String = {
-    val d = new java.io.File(s"target/tmp/cli-$name-${System.nanoTime()}")
-    d.mkdirs(); d.getAbsolutePath
-  }
+  private def tmp(name: String): String = TestSpark.scratchDir(s"cli-$name")
 
   private def settingsJson(root: String, mode: String = "merge"): String =
     s"""{"primary_keys": ["ID"], "data_dir": "$root/lake",

@@ -29,16 +29,13 @@ class FailingCommitProtocol(jobId: String, path: String, dynamicPartitionOverwri
 
 /** End-to-end file-based pipeline (SURVEY §7.2): streaming raw ingest
   * (file source in Kafka's place) → daily merge → history merge, in a
-  * temp lake under target/tmp.
+  * temp lake under the session scratch dir.
   */
 class JobsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp(name: String): String = {
-    val d = new java.io.File(s"target/tmp/jobs-$name-${System.nanoTime()}")
-    d.mkdirs(); d.getAbsolutePath
-  }
+  private def tmp(name: String): String = TestSpark.scratchDir(s"jobs-$name")
 
   private def ts(day: Int, i: Int) = Timestamp.valueOf(f"2024-01-$day%02d 00:00:$i%02d")
 
@@ -154,6 +151,16 @@ class JobsSpec extends AnyFunSuite {
     assert(spark.read.parquet(spec.dataDir).count() == 2)
   }
 
+  // day 1: snapshot + insert; day 2: update (out-of-order pair), delete, re-insert
+  private val day1 = Seq(
+    envelope(ts(1, 1), "r", "1", "LOAN"),
+    envelope(ts(1, 2), "c", "2", "CARD"))
+  private val day2 = Seq(
+    envelope(ts(2, 4), "u", "1", "DEPOSIT"),
+    envelope(ts(2, 3), "u", "1", "SAVINGS"),
+    envelope(ts(2, 5), "d", "2", null),
+    envelope(ts(2, 6), "c", "2", "CARD2"))
+
   test("daily merge then history merge reproduce the expected replica state") {
     val root = tmp("merge")
     val spec = TableSpec("acct", "graft_db", Seq("ID"),
@@ -162,15 +169,6 @@ class JobsSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE IF EXISTS ${spec.dailyTable}")
     spark.sql(s"DROP TABLE IF EXISTS ${spec.historyTable}")
 
-    // day 1: snapshot + insert; day 2: update (out-of-order pair), delete, re-insert
-    val day1 = Seq(
-      envelope(ts(1, 1), "r", "1", "LOAN"),
-      envelope(ts(1, 2), "c", "2", "CARD"))
-    val day2 = Seq(
-      envelope(ts(2, 4), "u", "1", "DEPOSIT"),
-      envelope(ts(2, 3), "u", "1", "SAVINGS"),
-      envelope(ts(2, 5), "d", "2", null),
-      envelope(ts(2, 6), "c", "2", "CARD2"))
     Lake.appendPartitioned(
       graft.ops.CdcOps.withDatePartitions(day1.toDF("timestamp", "value")), spec.dataDir)
     Lake.appendPartitioned(
@@ -340,5 +338,63 @@ class JobsSpec extends AnyFunSuite {
     Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 3))
     assert(rowsOf(spark.table(spec.historyTable)) == rowsOf(foldOfAll(spec)))
     assert(spark.table(spec.historyTable).count() == 3)
+  }
+
+  test("readDay lists and reads only the day's partition directory") {
+    val (spec, append) = freshLake("readday")
+    append(day1)
+    append(day2)
+    val day = Lake.readDay(spark, spec.dataDir, 2024, 1, 2)
+    assert(day.inputFiles.nonEmpty && day.inputFiles.forall(_.contains("/op_day=2/")),
+      day.inputFiles.mkString(", "))
+    assert(day.schema == Lake.rawSchema)
+    assert(day.select("op_day").as[Int].collect().toSeq == Seq.fill(4)(2))
+  }
+
+  test("readDayEvents: a missing day is None, a day of {} records is Some") {
+    val (spec, append) = freshLake("emptyday")
+    assert(Jobs.readDayEvents(spark, spec, LocalDate.of(2024, 1, 1)).isEmpty) // no raw root
+    append(Seq((ts(1, 1), "{}"), (ts(1, 2), "{}")))
+    assert(Jobs.readDayEvents(spark, spec, LocalDate.of(2024, 1, 2)).isEmpty) // no day directory
+    val day = Jobs.readDayEvents(spark, spec, LocalDate.of(2024, 1, 1))
+    assert(day.map(_.columns.toSeq).contains(Seq("timestamp")))
+    assert(day.get.count() == 2)
+  }
+
+  test("a day's daily merge and history merge run a fixed number of Spark jobs; " +
+      "the truncated daily table stays readable") {
+    import org.apache.spark.graftbridge.JobCounter.jobsOf
+    val (spec, append) = freshLake("jobcount")
+    append(day1)
+    Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 1))
+    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill
+    append(day2)
+    val daily = jobsOf(spark.sparkContext)(Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 2)))
+    val schema = spark.table(spec.dailyTable).schema
+    val history = jobsOf(spark.sparkContext)(Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 3)))
+    // 11 and 13 while each raw read inferred its schema from file footers,
+    // each read probed `isEmpty`, the batch was checkpointed and counted
+    // in separate jobs, the history batch was `distinct()`ed and the
+    // truncation wrote an empty version
+    assert((daily, history) == ((7, 7)))
+    assert(spark.table(spec.dailyTable).count() == 0)
+    assert(spark.table(spec.dailyTable).schema == schema)
+    val hist = spark.table(spec.historyTable).select($"id", $"product").as[(String, String)]
+      .collect().toMap
+    assert(hist == Map("1" -> "DEPOSIT", "2" -> "CARD2"))
+  }
+
+  test("a commit deletes an older version directory that a crash left behind") {
+    val (spec, append) = freshLake("sweep")
+    append(day1)
+    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill
+    val root = location(spec.historyTable)
+    Seq(1).toDF("x").write.parquet(new Path(root.getParent, s"${root.getName}__v0").toString)
+    append(day2)
+    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 3))
+    val now = location(spec.historyTable)
+    val onDisk = new java.io.File(now.getParent.toUri).listFiles.map(_.getName)
+      .filter(n => n == root.getName || n.startsWith(s"${root.getName}__v"))
+    assert(onDisk.toSeq == Seq(now.getName))
   }
 }

@@ -16,7 +16,7 @@ class LakeCompactSpec extends AnyFunSuite {
       .filter(f => f.getName.endsWith(".parquet")).toSeq
 
   test("compact rewrites many small files into few, preserving rows exactly") {
-    val dir = s"target/tmp/compact-${java.util.UUID.randomUUID()}"
+    val dir = TestSpark.scratchDir("compact") + "/t"
     val df = (1L to 5000L).map(i => (i, s"payload-$i")).toDF("id", "payload")
     df.repartition(40).write.parquet(dir)
     assert(parquetFiles(dir).size == 40)
@@ -35,7 +35,7 @@ class LakeCompactSpec extends AnyFunSuite {
   }
 
   test("compact to a tiny target still yields at least one file and exact rows") {
-    val dir = s"target/tmp/compact-${java.util.UUID.randomUUID()}"
+    val dir = TestSpark.scratchDir("compact") + "/t"
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").repartition(4).write.parquet(dir)
     val n = Lake.compact(spark, dir, targetBytes = 1L)
     assert(n >= 1)

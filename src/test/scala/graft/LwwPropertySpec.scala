@@ -102,4 +102,33 @@ class LwwPropertySpec extends AnyFunSuite {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(15), prop)
     assert(res.passed, res.status.toString)
   }
+
+  /** A row-distinct replica, and a batch of events with their own
+    * timestamps plus copies of some of them: exact duplicates, or
+    * duplicates that differ only in `__deleted`.
+    */
+  private val genDupCase = for {
+    rows <- Gen.listOfN(10, Gen.zip(Gen.choose(0, 3), genKey, genV))
+    events <- Gen.listOfN(10, Gen.zip(Gen.oneOf("c", "r", "u", "u", "d"), genKey, genV))
+    dups <- Gen.listOfN(8, Gen.zip(Gen.choose(0, 9), Gen.oneOf("false", "true")))
+  } yield (rows.distinct, events, dups)
+
+  test("mergeBatch over a batch with duplicate events equals mergeBatch over its " +
+      "distinct events, both anti-join paths") {
+    val prop = Prop.forAll(genDupCase) { case (rows, events, dups) =>
+      val existing = rows.map { case (t, k, v) => (new Timestamp(t * 1000L), k, v) }
+        .toDF("timestamp", "key", "v")
+      val fresh = events.zipWithIndex.map { case ((op, k, v), i) => (100 + i, op, "false", k, v) }
+      val copies = dups.map { case (i, deleted) => fresh(i).copy(_3 = deleted) }
+      val batch = (fresh ++ copies)
+        .map { case (t, op, deleted, k, v) => (new Timestamp(t * 1000L), op, deleted, k, v) }
+        .toDF("timestamp", "__op", "__deleted", "key", "v")
+      def merged(events: DataFrame, beyond: Boolean): Seq[String] =
+        CdcOps.mergeBatch(existing, CdcOps.routeOps(events, Seq("key")), Seq("key"),
+          tombstonesBeyondBroadcast = beyond).collect().map(_.toString).sorted.toSeq
+      Seq(false, true).forall(beyond => merged(batch, beyond) == merged(batch.distinct(), beyond))
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
+    assert(res.passed, res.status.toString)
+  }
 }

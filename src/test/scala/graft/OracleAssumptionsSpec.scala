@@ -27,7 +27,7 @@ class OracleAssumptionsSpec extends AnyFunSuite {
   }
 
   private def writeDocs(rows: Seq[(Long, String)]): String = {
-    val dir = s"target/tmp/oracle-guard-${System.nanoTime()}"
+    val dir = TestSpark.scratchDir("oracle-guard")
     rows.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     dir
   }

@@ -374,7 +374,7 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
-    val dir = new java.io.File(s"target/tmp/planspec-merge-${System.nanoTime()}").getAbsolutePath
+    val dir = TestSpark.scratchDir("planspec-merge") + "/replica"
     spark.range(0L, 2000L).select(col("id").as("pk"), (col("id") % 97).as("v"),
       lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("timestamp"))
       .write.parquet(dir)

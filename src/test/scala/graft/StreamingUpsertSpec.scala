@@ -210,7 +210,7 @@ class StreamingUpsertSpec extends AnyFunSuite {
   test("upsert survives a stop/restart: checkpointed state resumes, " +
       "processed files are not replayed") {
     import org.apache.spark.sql.functions.col
-    val root = s"target/tmp/upsert-restart-${System.nanoTime()}"
+    val root = TestSpark.scratchDir("upsert-restart")
     val in = s"$root/in"; val ckpt = s"$root/ckpt"; val out = s"$root/out"
     new java.io.File(in).mkdirs()
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -262,7 +262,7 @@ class StreamingUpsertSpec extends AnyFunSuite {
     // This test proves both halves: identical results, and the state
     // directory still laid out at the ORIGINAL partition count.
     import org.apache.spark.sql.functions.col
-    val root = s"target/tmp/upsert-rescale-${System.nanoTime()}"
+    val root = TestSpark.scratchDir("upsert-rescale")
     val in = s"$root/in"; val ckpt = s"$root/ckpt"; val out = s"$root/out"
     new java.io.File(in).mkdirs()
     val schema = org.apache.spark.sql.types.StructType.fromDDL(

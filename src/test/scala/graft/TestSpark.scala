@@ -14,7 +14,7 @@ object TestSpark {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"target/tmp/test-warehouse-${System.nanoTime()}")
+      .config("spark.sql.warehouse.dir", scratchDir("test-warehouse"))
     // tests are graft-owned sessions: opt into the extension +
     // window-guard confs that tuned() deliberately leaves to the
     // deployment (Sessions.graftManaged scaladoc)
@@ -23,5 +23,14 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     graft.session.Sessions.quietCheckpointRelease()
     s
+  }
+
+  /** A fresh directory under the session scratch root
+    * ([[graft.session.Sessions.scratchPath]]), removed when the JVM exits:
+    * test staging stays out of the checkout.
+    */
+  def scratchDir(name: String): String = {
+    val d = new java.io.File(graft.session.Sessions.scratchPath(s"$name-${System.nanoTime()}"))
+    d.mkdirs(); d.getAbsolutePath
   }
 }
