@@ -2931,8 +2931,8 @@ object SparkEntry {
 
     // S2 — stream/batch repartition: spreads input across the cluster;
     // row multiset unchanged (the oracle checks exactly that).
-    // Morton (z-order) curve value — the clustering key behind
-    // Lake.writeZOrdered's multi-column data skipping. Pure integer
+    // Morton (z-order) curve value — a clustering key for multi-column
+    // data skipping (Lake.zValue). Pure integer
     // projection, so the layout is reproducible and oracle-checkable.
     "q_zorder" -> ((s, dir) =>
       ld(s, dir, "events").select(col("event_id"), col("user_id"),

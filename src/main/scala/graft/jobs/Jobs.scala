@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.model.TableSpec
 import graft.ops.CdcOps
-import graft.sources.Lake
+import graft.sources.{Lake, MergeOnRead}
 
 /** The three pipeline stages, re-expressed Spark-first. Each is a thin
   * orchestration shell over the pure operators in [[CdcOps]] — the
@@ -76,11 +76,18 @@ object Jobs {
   }
 
   /** Daily merge (`pipelines/daily_data_handler.py`): merge one day of
-    * events into `<table>_daily`.
+    * events into `<table>_daily`, rewritten as a new table version.
     */
   def dailyMerge(spark: SparkSession, spec: TableSpec, ds: LocalDate): Unit =
     readDayEvents(spark, spec, ds).foreach { events =>
-      mergeInto(spark, spec, spec.dailyTable, events)
+      withBatch(spark, spec, events) { (routed, n, limit) =>
+        val existing =
+          if (Lake.tableExists(spark, spec.dailyTable)) spark.table(spec.dailyTable)
+          else CdcOps.emptyLike(routed.inserts)
+        val merged = CdcOps.mergeBatch(existing, routed, spec.primaryKeys, spec.orderColumns,
+          tombstonesBeyondBroadcast = n > limit, expectedKeys = n)
+        Lake.overwriteTableSafely(merged, spec.dailyTable, format = spec.format)
+      }
     }
 
   /** History merge (`pipelines/history_data_handler.py`): merge ds−1
@@ -89,6 +96,10 @@ object Jobs {
     * back to a full-raw backfill when the history table doesn't exist
     * yet (`:77-81`). Merge mode then truncates the daily staging table
     * (`:211-214`); increment mode appends deduped rows.
+    *
+    * Where the reference overwrites the whole history table every day,
+    * merge mode keeps it merge-on-read ([[MergeOnRead]]): a day appends
+    * its batch as a delta, and only a compaction rewrites the base.
     */
   def historyMerge(spark: SparkSession, spec: TableSpec, ds: LocalDate): Unit = {
     val lowered = true // history lowercases names (history_data_handler.py:95)
@@ -102,8 +113,11 @@ object Jobs {
       case _ =>
         val wrote =
           if (Lake.tableExists(spark, spec.historyTable))
-            readDayEvents(spark, spec, ds.minusDays(1), lowered).map { ev =>
-              mergeInto(spark, spec, spec.historyTable, ev)
+            readDayEvents(spark, spec, ds.minusDays(1), lowered).map { events =>
+              withBatch(spark, spec, events) { (routed, n, limit) =>
+                MergeOnRead.mergeTable(spark, spec.historyTable, routed, n, limit,
+                  spec.primaryKeys, spec.orderColumns, spec.format)
+              }
             }.isDefined
           else
             // Backfill: the whole raw log arrives as ONE batch, where the
@@ -111,10 +125,13 @@ object Jobs {
             // a key alongside its latest update (inserts are only
             // tombstoned across batches, `daily_data_handler.py:88-101`).
             // A from-scratch rebuild has cleaner correct semantics: the
-            // LWW fold of the full event log. Deliberate divergence.
+            // LWW fold of the full event log. Deliberate divergence. The
+            // fold needs no `distinct()`: LWW keeps one event per key, and
+            // duplicate events are equal once the meta columns are dropped.
             parsedIfAny(Lake.readAll(spark, spec.dataDir, spec.format), lowered).map { all =>
-              val folded = CdcOps.foldMerge(all.distinct(), spec.primaryKeys, spec.orderColumns)
-              Lake.overwriteTableSafely(folded, spec.historyTable, format = spec.format)
+              MergeOnRead.createTable(spark, spec.historyTable,
+                CdcOps.foldMerge(all, spec.primaryKeys, spec.orderColumns),
+                spec.primaryKeys, spec.format)
             }.isDefined
         if (wrote && Lake.tableExists(spark, spec.dailyTable))
           Lake.truncateTable(spark, spec.dailyTable)
@@ -122,11 +139,15 @@ object Jobs {
   }
 
   /** Shared merge core (`_overwrite_daily_table`,
-    * `daily_data_handler.py:75-104`): route ops, LWW-dedup updates,
-    * anti-join out tombstoned keys, union, overwrite.
+    * `daily_data_handler.py:75-104`): route the day's ops and hand them to
+    * `merge` with the event count and the broadcast budget
+    * (`graft.cdc.tombstoneBroadcastLimit`). Batch keys past the budget
+    * switch the merge to the bloom-pruned joins (no full-table exchange of
+    * the existing table); the event count bounds deletes ∪ updates ∪
+    * inserts.
     */
-  private def mergeInto(spark: SparkSession, spec: TableSpec,
-                        table: String, events: DataFrame): Unit = {
+  private def withBatch(spark: SparkSession, spec: TableSpec, events: DataFrame)
+                       (merge: (CdcOps.Routed, Long, Long) => Unit): Unit = {
     // Materialize the batch once, so the count below and the merge read
     // one copy. A local checkpoint, not a cache: the merge reads the
     // batch twice, and AQE shares those branches' shuffles over a
@@ -136,19 +157,9 @@ object Jobs {
     // once the merge has written.
     val ev = events.localCheckpoint(eager = false)
     try {
-      val routed = CdcOps.routeOps(ev, spec.primaryKeys)
-      val existing =
-        if (Lake.tableExists(spark, table)) spark.table(table)
-        else CdcOps.emptyLike(routed.inserts)
-      // Batch keys past the broadcast budget switch the merge to the
-      // bloom-pruned joins (no full-table exchange of `existing`). The
-      // event count bounds deletes ∪ updates ∪ inserts.
       val limit = spark.conf.getOption("graft.cdc.tombstoneBroadcastLimit")
         .map(_.toLong).getOrElse(1L << 22)
-      val beyond = ev.queryExecution.toRdd.count() > limit
-      val merged = CdcOps.mergeBatch(existing, routed, spec.primaryKeys,
-        spec.orderColumns, tombstonesBeyondBroadcast = beyond)
-      Lake.overwriteTableSafely(merged, table, format = spec.format)
+      merge(CdcOps.routeOps(ev, spec.primaryKeys), ev.queryExecution.toRdd.count(), limit)
     } finally graft.operators.Cluster.unpersistLocalCheckpoint(ev)
   }
 }

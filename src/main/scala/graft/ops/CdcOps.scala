@@ -218,20 +218,21 @@ object CdcOps {
     */
   def bloomPrunedAntiJoin(existing: DataFrame, tombstoneKeys: DataFrame,
                           primaryKeys: Seq[String],
-                          expectedItems: Long = 1L << 22,
-                          numBits: Long = 1L << 26): DataFrame = {
-    val probed = bloomProbed(existing, tombstoneKeys, primaryKeys, expectedItems, numBits)
+                          expectedItems: Long = 1L << 22): DataFrame = {
+    val probed = bloomProbed(existing, tombstoneKeys, primaryKeys, expectedItems)
     probed.filter(!col("__might")).drop("__might")
       .unionByName(probed.filter(col("__might")).drop("__might")
         .join(tombstoneKeys, primaryKeys, "left_anti"))
   }
 
   /** `existing` plus a boolean `__might`: false when the bloom filter
-    * over `keys` proves the row's key absent from them.
+    * over `keys` proves the row's key absent from them. The filter is
+    * sized for `expectedItems` keys as Spark sizes its own runtime bloom
+    * filters, within their item and bit caps
+    * (`spark.sql.optimizer.runtime.bloomFilter.max*`).
     */
   private def bloomProbed(existing: DataFrame, keys: DataFrame, primaryKeys: Seq[String],
-                          expectedItems: Long = 1L << 22,
-                          numBits: Long = 1L << 26): DataFrame = {
+                          expectedItems: Long): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.graftbridge.Bridge
@@ -241,8 +242,7 @@ object CdcOps {
     val bloomAgg = Bridge.column(
       new BloomFilterAggregate(
         Bridge.expression(xxhash64(primaryKeys.map(col): _*)),
-        Bridge.expression(lit(expectedItems)),
-        Bridge.expression(lit(numBits))).toAggregateExpression())
+        math.max(1L, expectedItems)).toAggregateExpression())
     // might_contain demands its filter side be a constant or scalar
     // subquery: run the sketch-building aggregate as a scalar subquery,
     // whose (single binary) result is computed once and shipped to every
@@ -271,6 +271,12 @@ object CdcOps {
     padded.join(if (broadcastRows) broadcast(other) else other, on, "left_anti").toDF(names: _*)
   }
 
+  /** A batch's tombstone keys: its deletes and its updates' keys (LWW
+    * keeps one row per key, so the updates' keys are its keys).
+    */
+  def tombstoneKeys(routed: Routed, primaryKeys: Seq[String]): DataFrame =
+    routed.deleteKeys.unionByName(routed.updates.select(primaryKeys.map(col): _*))
+
   /** The full batch merge (`_overwrite_daily_table`,
     * `daily_data_handler.py:75-104`):
     *
@@ -292,20 +298,22 @@ object CdcOps {
     * read once and never shuffled; the exchanges carry batch rows only.
     * The result equals the formula above row for row, column order
     * included.
+    *
+    * Past the broadcast budget the bloom filters are sized for
+    * `expectedKeys`, a bound on the batch's keys such as its event count.
     */
   def mergeBatch(existing: DataFrame, routed: Routed,
                  primaryKeys: Seq[String],
                  orderColumns: Seq[String] = Seq("timestamp"),
-                 tombstonesBeyondBroadcast: Boolean = false): DataFrame = {
-    // LWW keeps one row per key: the updates' keys are its keys
-    val tombstones = routed.deleteKeys
-      .unionByName(routed.updates.select(primaryKeys.map(col): _*))
+                 tombstonesBeyondBroadcast: Boolean = false,
+                 expectedKeys: Long = 1L << 22): DataFrame = {
+    val tombstones = tombstoneKeys(routed, primaryKeys)
     // one batch's tombstones normally broadcast; past the broadcast
     // budget the bloom-pruned variant keeps the existing (100 TB) side
     // from shuffling wholesale — identical result either way
     val kept =
       if (tombstonesBeyondBroadcast)
-        bloomPrunedAntiJoin(existing, tombstones, primaryKeys)
+        bloomPrunedAntiJoin(existing, tombstones, primaryKeys, expectedKeys)
       else antiJoinByKey(existing, tombstones, primaryKeys)
     // the batch's rows in the merged schema (kept's columns first, types
     // widened as the full union widens them), deduped
@@ -318,7 +326,8 @@ object CdcOps {
     // budget a bloom filter over the batch keys picks the rows to check
     val keptOnly =
       if (tombstonesBeyondBroadcast) {
-        val probed = bloomProbed(kept, batch.select(primaryKeys.map(col): _*), primaryKeys)
+        val probed = bloomProbed(kept, batch.select(primaryKeys.map(col): _*), primaryKeys,
+          expectedKeys)
         probed.filter(!col("__might")).drop("__might")
           .unionByName(withoutRowsOf(probed.filter(col("__might")).drop("__might"), batch,
             broadcastRows = false), allowMissingColumns = true)

@@ -26,21 +26,6 @@ object Lake {
       .format(format)
       .save(dir)
 
-  /** Clustered write: range-partition on the cluster keys, sort within
-    * partitions, then write. Files then carry tight min/max ranges on
-    * the keys, so later scans with key predicates prune at the
-    * row-group level (parquet statistics) on top of directory-level
-    * partition pruning — the difference between touching 100 TB and
-    * touching one key's worth of files. `nFiles` bounds output file
-    * count (small-files control, the scalable form of the reference's
-    * `coalesce(1)` at `history_data_handler.py:149`).
-    */
-  def writeClustered(df: DataFrame, dir: String, clusterCols: Seq[String],
-                     nFiles: Int, format: String = "parquet"): Unit =
-    df.repartitionByRange(nFiles, clusterCols.map(col): _*)
-      .sortWithinPartitions(clusterCols.map(col): _*)
-      .write.mode(SaveMode.Append).format(format).save(dir)
-
   /** Small-files compaction — the maintenance pass every streaming
     * ingest lake needs: micro-batch appends leave one (or more) file
     * per trigger per partition, and a year of hourly triggers makes
@@ -116,23 +101,6 @@ object Lake {
       shiftleft(xb, 2 * i) + shiftleft(yb, 2 * i + 1)
     }.reduce(_ + _)
   }
-
-  /** Z-order clustered write: [[writeClustered]] on the Morton value of
-    * two keys instead of a single-key range. A lexicographic sort on
-    * (a, b) gives tight file min/max on `a` but near-full-range spans on
-    * `b`; the space-filling curve keeps BOTH columns' per-file ranges
-    * tight, so predicates on either key (or both) prune at the
-    * row-group level. This is the standard multi-dimensional data-
-    * skipping layout (Delta/Iceberg `OPTIMIZE ZORDER BY`) expressed as
-    * plain Spark: project z → range-partition on z → sort within → write.
-    */
-  def writeZOrdered(df: DataFrame, dir: String, colA: String, colB: String,
-                    nFiles: Int, bits: Int = 16, format: String = "parquet"): Unit =
-    df.withColumn("__z", zValue(col(colA), col(colB), bits))
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode(SaveMode.Append).format(format).save(dir)
 
   /** Does the data directory exist yet? First deployments run the merge
     * schedule before the first ingest trigger ever creates the raw
@@ -237,38 +205,61 @@ object Lake {
     * between an earlier repoint and its delete left behind.
     *
     * The repoint is one atomic `SET LOCATION` while the schema, format
-    * and (absent) partitioning stay the same. Otherwise the catalog
-    * entry is dropped and re-created as an external table over `to`
-    * with the new schema and partitioning, so for a moment the name is
-    * unregistered (both versions' data is still on disk). A table
-    * literally named `<t>__v<k>` in the same database would collide with
-    * `<t>`'s versions.
+    * and (absent) partitioning stay the same. Otherwise the table is
+    * re-registered over `to` ([[register]]). A table literally named
+    * `<t>__v<k>` in the same database would collide with `<t>`'s versions.
     */
   private def commitVersion(spark: SparkSession, table: String, current: CatalogTable,
                             to: Path, schema: StructType, partitionBy: Seq[String],
                             format: String): Unit = {
-    val quotedTo = "'" + to.toString.replace("\\", "\\\\").replace("'", "\\'") + "'"
     val sameShape = partitionBy.isEmpty && current.partitionColumnNames.isEmpty &&
       current.provider.contains(format) &&
       DataTypeUtils.equalsIgnoreNullability(current.schema, schema)
-    if (sameShape) spark.sql(s"ALTER TABLE $table SET LOCATION $quotedTo")
-    else {
-      // a managed table's drop deletes version n, already superseded
-      spark.sql(s"DROP TABLE $table")
-      val partitioned =
-        if (partitionBy.isEmpty) ""
-        else partitionBy.map(c => s"`$c`").mkString("PARTITIONED BY (", ", ", ")")
-      val ordered = StructType(schema.filterNot(f => partitionBy.contains(f.name)) ++
-        partitionBy.map(schema(_)))
-      spark.sql(s"CREATE TABLE $table (${ordered.toDDL}) " +
-        s"USING $format $partitioned LOCATION $quotedTo")
-      if (partitionBy.nonEmpty) spark.catalog.recoverPartitions(table)
-    }
+    if (sameShape) spark.sql(s"ALTER TABLE $table SET LOCATION ${quoted(to)}")
+    else register(spark, table, to, schema, partitionBy, format)
+    deleteOlderVersions(spark, to)
+  }
+
+  /** (Re-)register `table` as an external table of `provider` over
+    * `location`, with `schema` and `partitionBy`. An existing entry is
+    * dropped first (a managed table's drop deletes its directory, which
+    * a caller has already superseded), so for a moment the name is
+    * unregistered while the data stays on disk.
+    */
+  private[sources] def register(spark: SparkSession, table: String, location: Path,
+                                schema: StructType, partitionBy: Seq[String],
+                                provider: String): Unit = {
+    if (tableExists(spark, table)) spark.sql(s"DROP TABLE $table")
+    val partitioned =
+      if (partitionBy.isEmpty) ""
+      else partitionBy.map(c => s"`$c`").mkString("PARTITIONED BY (", ", ", ")")
+    val ordered = StructType(schema.filterNot(f => partitionBy.contains(f.name)) ++
+      partitionBy.map(schema(_)))
+    spark.sql(s"CREATE TABLE $table (${ordered.toDDL}) " +
+      s"USING $provider $partitioned LOCATION ${quoted(location)}")
+    if (partitionBy.nonEmpty) spark.catalog.recoverPartitions(table)
+  }
+
+  private def quoted(p: Path): String =
+    "'" + p.toString.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+  /** Delete every version directory of `to`'s table older than `to`. */
+  private[sources] def deleteOlderVersions(spark: SparkSession, to: Path): Unit = {
     val (root, n) = version(to)
     val fs = to.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(to.getParent).map(_.getPath)
       .filter(p => version(p) match { case (r, k) => r == root && k < n })
       .foreach(fs.delete(_, true))
+  }
+
+  /** The catalog's default location for `table`, or the first version of
+    * it that does not exist (a dropped external table leaves its
+    * directory behind).
+    */
+  private[sources] def freshLocation(spark: SparkSession, table: String): Path = {
+    val default = Bridge.defaultTablePath(spark, table)
+    val fs = default.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Iterator.iterate(default)(nextVersion).find(!fs.exists(_)).get
   }
 
   private val Versioned = "(.*)__v(\\d+)".r
@@ -280,7 +271,7 @@ object Lake {
   }
 
   /** The directory of the version after `p`'s: `<root>__v<n+1>`. */
-  private def nextVersion(p: Path): Path = version(p) match {
+  private[sources] def nextVersion(p: Path): Path = version(p) match {
     case (root, n) => new Path(p.getParent, s"${root}__v${n + 1}")
   }
 

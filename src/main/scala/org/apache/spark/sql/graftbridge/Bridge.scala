@@ -44,4 +44,20 @@ object Bridge {
     val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
     state.catalog.getTableMetadata(state.sqlParser.parseTableIdentifier(table))
   }
+
+  /** The catalog's default (managed) location of `table`. */
+  def defaultTablePath(spark: org.apache.spark.sql.SparkSession, table: String)
+      : org.apache.hadoop.fs.Path = {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    new org.apache.hadoop.fs.Path(
+      state.catalog.defaultTablePath(state.sqlParser.parseTableIdentifier(table)))
+  }
+
+  /** `df`'s rows as Spark's internal rows, typed as the `RDD[Row]` a
+    * relation whose `needConversion` is false returns from its scan.
+    */
+  def internalRows(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.toRdd
+      .asInstanceOf[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
 }

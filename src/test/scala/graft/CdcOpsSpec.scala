@@ -147,6 +147,25 @@ class CdcOpsSpec extends AnyFunSuite {
     assert(none.count() == 500L)
   }
 
+  test("mergeBatch past the broadcast budget sizes its bloom filters for the batch's keys") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    val existing = (0L until 100L).map(i => (ts(1), i, s"row$i")).toDF("timestamp", "k", "payload")
+    val batch = (0L until 10L).map(i => (ts(2), if (i < 5) "u" else "d", "false", i * 3, s"new$i"))
+      .toDF("timestamp", "__op", "__deleted", "k", "payload")
+    val out = CdcOps.mergeBatch(existing, CdcOps.routeOps(batch, Seq("k")), Seq("k"),
+      tombstonesBeyondBroadcast = true, expectedKeys = 10)
+    def bits(p: LogicalPlan): Seq[Long] =
+      p.flatMap(_.expressions.flatMap(_.collect {
+        case b: BloomFilterAggregate => Seq(b.numBitsExpression.eval().asInstanceOf[Long])
+        case s: org.apache.spark.sql.catalyst.expressions.SubqueryExpression => bits(s.plan)
+      }.flatten))
+    val planned = bits(out.queryExecution.analyzed)
+    assert(planned.nonEmpty, out.queryExecution.analyzed)
+    assert(planned.forall(_ < (1L << 16)), planned) // 2^26 before it was sized
+    assert(out.count() == 100L - 5L)
+  }
+
   test("snapshotDiff classifies insert/delete/update/unchanged null-safely") {
     val old = Seq(
       (1L, Some(10.0), Some("a")), // unchanged

@@ -87,11 +87,38 @@ object HiveCatalogE2E {
       require(!v0.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(v0),
         s"previous version $v0 left on disk")
 
+      // a merge-on-read table (the history layer): created over a base,
+      // one day appended as a delta that adds a column (the metastore
+      // entry is re-registered with the widened schema)
+      import graft.ops.CdcOps
+      import graft.sources.MergeOnRead
+      val h = "graft_e2e.replica_history"
+      val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+      MergeOnRead.createTable(spark, h, spark.range(0, 100)
+        .select(col("id"), lit(ts).as("timestamp"), concat(lit("v"), col("id")).as("v")),
+        Seq("id"), "parquet")
+      val day = spark.range(0, 3).select(col("id"),
+        lit(java.sql.Timestamp.valueOf("2024-01-02 00:00:00")).as("timestamp"),
+        lit("new").as("v"), lit("w").as("w"), lit("u").as(CdcOps.OpColumn),
+        lit("false").as(CdcOps.DeletedColumn))
+      MergeOnRead.mergeTable(spark, h, CdcOps.routeOps(day, Seq("id")), 3, 1L << 22,
+        Seq("id"), Seq("timestamp"), "parquet")
+      require(MergeOnRead.latest(spark, location(h).toString).deltas.size == 1,
+        "the day was not appended as a delta")
+      def historyRows(s: SparkSession) = s.table(h).orderBy(col("id"))
+        .collect().map(_.toString).toSeq
+      val merged = historyRows(spark)
+      require(spark.table(h).columns.toSeq == Seq("id", "timestamp", "v", "w"),
+        s"catalog schema not widened: ${spark.table(h).columns.mkString(", ")}")
+      require(merged.size == 100 && merged.count(_.contains(",new,w]")) == 3,
+        s"merge-on-read table wrong contents: $merged")
+
       // metastore persistence: a NEW session over the SAME derby db
       // still sees the table (the property an in-memory catalog lacks)
       val s2 = spark.newSession()
       require(s2.catalog.tableExists(t), "table invisible to a new session")
       require(s2.table(m).count() == 5, "new session reads a stale version")
+      require(historyRows(s2) == merged, "new session reads the merge-on-read table differently")
 
       println("HIVE_E2E_OK")
     } finally {

@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.jobs.Jobs
 import graft.model.TableSpec
 import graft.ops.CdcOps
-import graft.sources.{Lake, RawSource}
+import graft.sources.{Lake, MergeOnRead, RawSource}
 
 /** A file commit protocol whose job commit always fails: the task files
   * are written, the output is never committed.
@@ -41,61 +41,6 @@ class JobsSpec extends AnyFunSuite {
 
   private def envelope(t: Timestamp, op: String, id: String, product: String): (Timestamp, String) =
     (t, s"""{"ID":"$id","PRODUCT":${if (product == null) "null" else s""""$product""""},"__op":"$op","__deleted":"false"}""")
-
-  test("writeClustered produces disjoint per-file key ranges and preserves rows") {
-    val dir = tmp("clustered")
-    val df = spark.range(0, 1000).select(
-      (col("id") * 7919 % 1000).as("k"), col("id").as("payload"))
-    Lake.writeClustered(df, dir, Seq("k"), nFiles = 4)
-
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 1000)
-    assert(back.agg(sum("payload")).as[Long].head() == (0L until 1000).sum)
-
-    // range-partitioned files: per-file [min,max] on k must not overlap
-    val files = new java.io.File(dir).listFiles.filter(_.getName.endsWith(".parquet"))
-    assert(files.length <= 4 && files.length >= 2)
-    val ranges = files.map { f =>
-      val r = spark.read.parquet(f.getAbsolutePath)
-        .agg(min("k"), max("k")).as[(Long, Long)].head()
-      r
-    }.sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi), (lo, _)) => assert(hi <= lo)
-      case _ =>
-    }
-  }
-
-  test("writeZOrdered interleaves correctly and keeps BOTH columns' file ranges tight") {
-    // reference Morton implementation, driver-side
-    def morton(x: Long, y: Long, bits: Int): Long =
-      (0 until bits).map(i => (((x >> i) & 1L) << (2 * i)) | (((y >> i) & 1L) << (2 * i + 1))).sum
-    val probe = Seq((0L, 0L), (1L, 0L), (0L, 1L), (3L, 5L), (65535L, 65535L), (65536L, 1L))
-      .toDF("x", "y")
-    val got = probe.select(col("x"), col("y"), Lake.zValue(col("x"), col("y")).as("z"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    got.foreach { case (x, y, z) => assert(z == morton(x & 0xFFFF, y & 0xFFFF, 16)) }
-
-    // a 2-d grid written z-ordered: every file's span on EACH key must be
-    // a fraction of the full domain (a lexicographic sort would leave one
-    // key's span at ~full range in every file)
-    val dir = tmp("zorder")
-    val n = 64
-    val grid = spark.range(0, n.toLong * n).select(
-      (col("id") % n).as("a"), floor(col("id") / n).cast("long").as("b"))
-    Lake.writeZOrdered(grid, dir, "a", "b", nFiles = 16)
-    val files = new java.io.File(dir).listFiles.filter(_.getName.endsWith(".parquet"))
-    assert(files.length >= 8)
-    val spans = files.map { f =>
-      val (alo, ahi, blo, bhi) = spark.read.parquet(f.getAbsolutePath)
-        .agg(min("a"), max("a"), min("b"), max("b")).as[(Long, Long, Long, Long)].head()
-      (ahi - alo, bhi - blo)
-    }
-    val (avgA, avgB) = (spans.map(_._1).sum.toDouble / spans.length,
-      spans.map(_._2).sum.toDouble / spans.length)
-    assert(avgA < n * 0.6, s"mean a-span $avgA not tight")
-    assert(avgB < n * 0.6, s"mean b-span $avgB not tight")
-  }
 
   test("bucketed co-located join plans with zero exchanges") {
     val a = spark.range(0, 500).select(col("id").as("k"), (col("id") * 2).as("va"))
@@ -284,37 +229,85 @@ class JobsSpec extends AnyFunSuite {
     assert(spark.table(spec.dailyTable).columns.contains("RATE"))
   }
 
-  test("after three history merges one version directory of the history table is on disk") {
+  private def onDisk(dir: Path): Seq[String] =
+    new java.io.File(dir.toUri).listFiles.map(_.getName).filterNot(_.startsWith(".")).sorted.toSeq
+
+  /** `<root>` and its version directories `<root>__v<n>` beside it. */
+  private def versionsOf(dir: Path): Seq[String] =
+    new java.io.File(dir.getParent.toUri).listFiles.map(_.getName)
+      .filter(n => n == dir.getName.replaceAll("__v\\d+$", "") ||
+        n.startsWith(dir.getName.replaceAll("__v\\d+$", "") + "__v")).sorted.toSeq
+
+  /** Snapshot rows of `n` keys, so that a few days of one-event batches
+    * fit in the history table's log before a compaction.
+    */
+  private def snapshot(n: Int): Seq[(Timestamp, String)] =
+    (1 to n).map(i => envelope(ts(1, i % 60), "r", s"$i", s"P$i"))
+
+  test("three history merges append three deltas at one location; a fourth compacts them") {
     val (spec, append) = freshLake("versions")
-    append(Seq(envelope(ts(1, 1), "c", "1", "P1")))
+    append(snapshot(30))
     Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill
-    for (d <- 2 to 4) {
-      append(Seq(envelope(ts(d, 1), "u", "1", s"P$d"), envelope(ts(d, 2), "c", s"${d + 10}", "N")))
-      Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, d + 1))
-    }
     val loc = location(spec.historyTable)
-    assert(loc.getName.endsWith("__v3"), loc)
-    val root = loc.getName.stripSuffix("__v3")
-    val onDisk = new java.io.File(loc.toUri).getParentFile.listFiles.map(_.getName)
-      .filter(n => n == root || n.startsWith(s"${root}__v"))
-    assert(onDisk.toSeq == Seq(loc.getName))
+    // one event a day: the log holds 3 of them before the fourth day's
+    // batch passes Alpha (0.1) of the base's 30 rows
+    for (d <- 2 to 4) {
+      append(Seq(envelope(ts(d, 1), "u", "1", s"P$d")))
+      Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, d + 1))
+      assert(location(spec.historyTable) == loc)
+      assert(rowsOf(spark.table(spec.historyTable)) == rowsOf(foldOfAll(spec)))
+    }
+    assert(onDisk(loc) == Seq("_graft_log", "base-0", "delta-1", "delta-2", "delta-3"))
+    assert(MergeOnRead.latest(spark, loc.toString).deltas.map(_.dir) ==
+      Seq("delta-1", "delta-2", "delta-3"))
+    assert(versionsOf(loc) == Seq(loc.getName))
+
+    append(Seq(envelope(ts(5, 1), "d", "2", null)))
+    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 6))
+    assert(location(spec.historyTable) == loc)
+    assert(onDisk(loc) == Seq("_graft_log", "base-4"))
+    assert(onDisk(new Path(loc, "_graft_log")) == Seq("4"))
     assert(rowsOf(spark.table(spec.historyTable)) == rowsOf(foldOfAll(spec)))
+    assert(spark.table(spec.historyTable).count() == 29)
   }
 
-  test("a history merge replaces the partial version directory a failed write left") {
+  test("delta files that no manifest entry names are ignored; the rerun replaces them") {
     val (spec, append) = freshLake("retry")
-    append(Seq(envelope(ts(1, 1), "c", "1", "LOAN"), envelope(ts(1, 2), "c", "2", "CARD")))
+    append(snapshot(30))
     Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill
-    val before = location(spec.historyTable)
-    val partial = new Path(before.getParent, s"${before.getName}__v1")
+    val before = rowsOf(spark.table(spec.historyTable))
+    val loc = location(spec.historyTable)
+    val partial = new Path(loc, "delta-1")
     Seq((ts(9, 9), "junk", "junk")).toDF("timestamp", "id", "product").write.parquet(partial.toString)
+    assert(rowsOf(spark.table(spec.historyTable)) == before)
 
     append(Seq(envelope(ts(2, 1), "u", "1", "DEPOSIT"), envelope(ts(2, 2), "d", "2", null)))
     Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 3))
-    assert(location(spec.historyTable) == partial)
+    assert(MergeOnRead.latest(spark, loc.toString).deltas.map(_.dir) == Seq("delta-1"))
     assert(rowsOf(spark.table(spec.historyTable)) == rowsOf(foldOfAll(spec)))
-    assert(spark.table(spec.historyTable).count() == 1)
-    assert(!new java.io.File(before.toUri).exists())
+    assert(spark.table(spec.historyTable).count() == 29)
+    assert(spark.read.parquet(partial.toString).where($"id" === "junk").isEmpty)
+  }
+
+  test("a history table an older version wrote as parquet is converted by its " +
+      "first merge; its version directories are deleted") {
+    val (spec, append) = freshLake("convert")
+    append(day1)
+    val folded = foldOfAll(spec)
+    Lake.overwriteTableSafely(folded, spec.historyTable)
+    Lake.overwriteTableSafely(spark.table(spec.historyTable), spec.historyTable)
+    val old = location(spec.historyTable)
+    assert(old.getName.endsWith("__v1"), old)
+    val stale = new Path(old.getParent, old.getName.replace("__v1", "__v0"))
+    Seq(1).toDF("x").write.parquet(stale.toString)
+
+    append(day2)
+    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 3))
+    val now = location(spec.historyTable)
+    assert(Bridge.catalogTable(spark, spec.historyTable).provider.contains(MergeOnRead.Provider))
+    assert(now.getName == old.getName.replace("__v1", "__v2"))
+    assert(versionsOf(now) == Seq(now.getName))
+    assert(rowsOf(spark.table(spec.historyTable)) == rowsOf(foldOfAll(spec)))
   }
 
   test("a history merge whose job commit fails leaves the replica intact; " +
@@ -365,36 +358,42 @@ class JobsSpec extends AnyFunSuite {
       "the truncated daily table stays readable") {
     import org.apache.spark.graftbridge.JobCounter.jobsOf
     val (spec, append) = freshLake("jobcount")
-    append(day1)
+    // 40 more snapshot keys, so day 2's four events append a delta
+    append(day1 ++ (3 to 42).map(i => envelope(ts(1, i % 60), "r", s"$i", s"P$i")))
     Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 1))
     Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill
     append(day2)
     val daily = jobsOf(spark.sparkContext)(Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 2)))
     val schema = spark.table(spec.dailyTable).schema
     val history = jobsOf(spark.sparkContext)(Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 3)))
+    assert(MergeOnRead.latest(spark, location(spec.historyTable).toString).deltas.size == 1)
     // 11 and 13 while each raw read inferred its schema from file footers,
     // each read probed `isEmpty`, the batch was checkpointed and counted
     // in separate jobs, the history batch was `distinct()`ed and the
-    // truncation wrote an empty version
-    assert((daily, history) == ((7, 7)))
+    // truncation wrote an empty version; the history merge ran 7 while it
+    // rewrote the whole table (two broadcasts over the table's scan)
+    assert((daily, history) == ((7, 5)))
     assert(spark.table(spec.dailyTable).count() == 0)
     assert(spark.table(spec.dailyTable).schema == schema)
-    val hist = spark.table(spec.historyTable).select($"id", $"product").as[(String, String)]
-      .collect().toMap
+    val hist = spark.table(spec.historyTable).where($"id".isin("1", "2"))
+      .select($"id", $"product").as[(String, String)].collect().toMap
     assert(hist == Map("1" -> "DEPOSIT", "2" -> "CARD2"))
   }
 
   test("a commit deletes an older version directory that a crash left behind") {
+    // the daily table's versioned commit (the history table keeps one root)
     val (spec, append) = freshLake("sweep")
     append(day1)
-    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill
-    val root = location(spec.historyTable)
+    Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 1))
+    val root = location(spec.dailyTable)
     Seq(1).toDF("x").write.parquet(new Path(root.getParent, s"${root.getName}__v0").toString)
     append(day2)
-    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 3))
-    val now = location(spec.historyTable)
-    val onDisk = new java.io.File(now.getParent.toUri).listFiles.map(_.getName)
-      .filter(n => n == root.getName || n.startsWith(s"${root.getName}__v"))
-    assert(onDisk.toSeq == Seq(now.getName))
+    Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 2))
+    val now = location(spec.dailyTable)
+    assert(now.getName == s"${root.getName}__v1")
+    assert(versionsOf(now) == Seq(now.getName))
+    val daily = spark.table(spec.dailyTable).select($"ID", $"PRODUCT").as[(String, String)]
+      .collect().toMap
+    assert(daily == Map("1" -> "DEPOSIT", "2" -> "CARD2"))
   }
 }

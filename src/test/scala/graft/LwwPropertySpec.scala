@@ -94,7 +94,7 @@ class LwwPropertySpec extends AnyFunSuite {
       Seq(false, true).forall { beyond =>
         val want = fullDedupMerge(existing, routed, beyond)
         val got = CdcOps.mergeBatch(existing, routed, Seq("key"),
-          tombstonesBeyondBroadcast = beyond)
+          tombstonesBeyondBroadcast = beyond, expectedKeys = copied.size + fresh.size)
         got.schema == want.schema &&
           got.collect().map(_.toString).sorted.toSeq == want.collect().map(_.toString).sorted.toSeq
       }
@@ -125,10 +125,76 @@ class LwwPropertySpec extends AnyFunSuite {
         .toDF("timestamp", "__op", "__deleted", "key", "v")
       def merged(events: DataFrame, beyond: Boolean): Seq[String] =
         CdcOps.mergeBatch(existing, CdcOps.routeOps(events, Seq("key")), Seq("key"),
-          tombstonesBeyondBroadcast = beyond).collect().map(_.toString).sorted.toSeq
+          tombstonesBeyondBroadcast = beyond, expectedKeys = fresh.size + copies.size)
+          .collect().map(_.toString).sorted.toSeq
       Seq(false, true).forall(beyond => merged(batch, beyond) == merged(batch.distinct(), beyond))
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("foldMerge over events with duplicates equals foldMerge over their distinct events") {
+    // unique timestamps per key: the fold's order is total within a key
+    val prop = Prop.forAll(genDupCase) { case (_, events, dups) =>
+      val fresh = events.zipWithIndex.map { case ((op, k, v), i) => (100 + i, op, "false", k, v) }
+      val copies = dups.map { case (i, deleted) => fresh(i).copy(_3 = deleted) }
+      val all = (fresh ++ copies)
+        .map { case (t, op, deleted, k, v) => (new Timestamp(t * 1000L), op, deleted, k, v) }
+        .toDF("timestamp", "__op", "__deleted", "key", "v")
+      def folded(events: DataFrame): Seq[String] =
+        CdcOps.foldMerge(events, Seq("key")).collect().map(_.toString).sorted.toSeq
+      folded(all) == folded(all.distinct())
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  /** A row-distinct base and a few days of events: inserts copying a
+    * base row (identical re-inserts), re-inserts of keys deleted on an
+    * earlier day, null keys, and on one day a new column. Every event has
+    * its own timestamp.
+    */
+  private val genDays = for {
+    rows <- Gen.listOfN(10, Gen.zip(Gen.choose(0, 3), genKey, genV))
+    days <- Gen.listOfN(3, Gen.listOfN(6, Gen.zip(Gen.oneOf("c", "r", "u", "u", "d"), genKey, genV)))
+    copies <- Gen.listOfN(3, Gen.zip(Gen.choose(0, 2), Gen.choose(0, 9)))
+    drift <- Gen.choose(0, 2)
+    compactAt <- Gen.choose(0, 2)
+  } yield (rows.distinct, days, copies, drift, compactAt)
+
+  test("the merge-on-read table equals sequential mergeBatch over random days, " +
+      "across a compaction") {
+    import graft.sources.MergeOnRead
+    val prop = Prop.forAll(genDays) { case (rows, days, copies, drift, compactAt) =>
+      val base = rows.map { case (t, k, v) => (new Timestamp(t * 1000L), k, v) }
+        .toDF("timestamp", "key", "v")
+      val batches = days.zipWithIndex.map { case (events, d) =>
+        val copied = copies.collect { case (`d`, i) => rows(i % rows.size) }
+          .map { case (t, k, v) => (t, "c", k, v) }
+        val fresh = events.zipWithIndex.map { case ((op, k, v), i) => (100 * (d + 1) + i, op, k, v) }
+        val df = (copied ++ fresh)
+          .map { case (t, op, k, v) => (new Timestamp(t * 1000L), op, "false", k, v) }
+          .toDF("timestamp", "__op", "__deleted", "key", "v")
+        (if (d == drift) df.withColumn("w", concat(lit("w"), col("v"))) else df,
+          (copied ++ fresh).size.toLong)
+      }
+      val root = TestSpark.scratchDir("mor-property") + "/t"
+      val logged = batches.zipWithIndex.foldLeft(
+        MergeOnRead.create(spark, root, base, Seq("key"), "parquet")) {
+        case (m, ((batch, n), d)) =>
+          val routed = CdcOps.routeOps(batch, Seq("key"))
+          if (d == compactAt) MergeOnRead.compact(spark, root, m, routed, n, 1L << 22, Seq("timestamp"))
+          else MergeOnRead.append(spark, root, m, routed, n, Seq("timestamp"))
+      }
+      val want = batches.foldLeft(base) { case (t, (batch, _)) =>
+        CdcOps.mergeBatch(t, CdcOps.routeOps(batch, Seq("key")), Seq("key"))
+      }
+      val got = MergeOnRead.read(spark, root)
+      logged.deltas.size == days.size - 1 - compactAt &&
+        got.schema.map(f => f.name -> f.dataType) == want.schema.map(f => f.name -> f.dataType) &&
+        got.collect().map(_.toString).sorted.toSeq == want.collect().map(_.toString).sorted.toSeq
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
     assert(res.passed, res.status.toString)
   }
 }
