@@ -43,10 +43,11 @@ object Eval {
     * machines (the [[KMeans]] defaultParallelism precedent): the
     * caller's `nParts` is a FLOOR, widened to the session's scheduling
     * parallelism so an unparameterized call on a wide cluster never
-    * funnels a corpus through 32 tasks. On the bench/test profiles
-    * (local[32], and the driver's low-core rerun) max(32, parallelism)
-    * resolves to the committed 32, so plans and timings there are
-    * unchanged. Every machine that uses it computes global-rank /
+    * funnels a corpus through 32 tasks. The floor is not one partition
+    * per core: Bench, Time and Verify run local[$SPARK_GRAFT_CPUS]
+    * (default 32), `cdcbench` local[nproc] and the tests local[4], so
+    * on a host of fewer cores than the floor the count is the floor.
+    * Every machine that uses it computes global-rank /
     * prefix-sum results that are partition-count-independent (the
     * exactness contract each machine's scaladoc states), so the width
     * can never move results; the per-partition offset relations stay

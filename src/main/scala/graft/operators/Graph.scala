@@ -875,47 +875,28 @@ object Graph {
     * Scale shape: mirrors [[pageRank]] — the edge list is persisted
     * once; each half-iteration shuffles only the 2-column score
     * relation (one row per node on one side), aggregates with map-side
-    * combine, and broadcasts the single-row normalizer. Lineage is cut
-    * per iteration with `localCheckpoint`. Exactness discipline: the
-    * per-node sums and the global normalizer accumulate 6-dp scores as
-    * DECIMAL(25,12) (exact, order-independent — a 6-dp double cannot
-    * hit a scale-12 rounding tie), and only the final double division
-    * is floating point, so the oracle's unrolled replay is
-    * bit-identical.
+    * combine, and brings the normalizer back as a driver scalar.
+    * Exactness discipline: the per-node sums and the global normalizer
+    * are exact scaled-long sums of the 6-dp scores ([[ExactSum]] —
+    * order-independent, equal to the oracle's DECIMAL(25,12) sums), and
+    * only the final double division is floating point, so the oracle's
+    * unrolled replay is bit-identical.
     */
   def hits(edges: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
     val e = edges.select(col("src"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val dec = "decimal(25,12)"
-    // One normalized half-step: score mass flows across `join` edges
-    // (keyed `from` → grouped `to`), Σ_to = 1 after normalization.
-    // The raw per-node sums are PERSISTED and the normalizer comes back
-    // as a driver scalar from the same materializing job — one job per
-    // half-step, and the normalization itself stays a lazy projection
-    // over the persisted sums (an eager checkpoint per half-step plus a
-    // broadcast-materialization job doubled the job count; measured
-    // ~2.5× the runtime of this shape). The division is double/double
-    // exactly as the oracle's CAST(raw AS DOUBLE)/CAST(tot AS DOUBLE).
+    // the raw from two half-steps back is dropped once the next one is
+    // materialized — repeated hits() calls in one session previously
+    // grew the block-manager cache by 2×iters frames per call (round-6
+    // advice); only the final hub/auth raws stay pinned for the
+    // caller's action
     val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def halfStep(scores: DataFrame, from: String, to: String): DataFrame = {
-      val raw = e.join(scores.withColumnRenamed("node", from), from)
-        .groupBy(col(to).as("node"))
-        .agg(sum(col("score").cast(dec)).as("raw"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // the normalizer collect MATERIALIZES raw, so the raw from two
-      // half-steps back (this new raw's grandparent input is already
-      // folded into blocks) can be dropped — repeated hits() calls in
-      // one session previously grew the block-manager cache by 2×iters
-      // frames per call (round-6 advice); only the final hub/auth raws
-      // stay pinned for the caller's action
-      val tot = raw.agg(sum(col("raw"))).collect()(0).getDecimal(0)
-      require(tot != null && tot.signum > 0,
-        "hits requires a non-empty edge relation (score mass vanished)")
+      val (raw, next) = hitsHalfStep(e, scores, from, to)
       pinned += raw
       if (pinned.length > 2) pinned.remove(0).unpersist(blocking = false)
-      raw.select(col("node"),
-        round(col("raw").cast("double") / lit(tot.doubleValue()), 6).as("score"))
+      next
     }
     var h = e.select(col("src").as("node")).distinct()
       .withColumn("score", lit(1.0))
@@ -939,5 +920,37 @@ object Graph {
     e.unpersist(blocking = false)
     h.select(col("node"), lit("hub").as("kind"), col("score"))
       .unionByName(a.select(col("node"), lit("auth").as("kind"), col("score")))
+  }
+
+  /** One normalized HITS half-step: score mass flows across `e`'s edges
+    * (keyed `from` → grouped `to`), Σ_to = 1 after normalization.
+    * Returns the persisted raw per-node sums and the normalized scores
+    * over them.
+    *
+    * The per-node sums and the normalizer are exact scaled-long sums of
+    * the 6-dp scores ([[ExactSum]]). The normalizer comes back as a
+    * driver scalar from the same job that materializes the raw sums —
+    * one job per half-step — with the largest |raw|, which proves every
+    * raw within the headroom, so the Column conversion of each raw is
+    * exact. The normalization stays a lazy projection over the
+    * persisted sums (an eager checkpoint per half-step plus a
+    * broadcast-materialization job doubled the job count; measured
+    * ~2.5× the runtime of this shape). The division is double/double
+    * on the sums' nearest doubles, exactly as the oracle's
+    * CAST(raw AS DOUBLE)/CAST(tot AS DOUBLE) of its decimal sums.
+    */
+  private[graft] def hitsHalfStep(e: DataFrame, scores: DataFrame,
+                                  from: String, to: String): (DataFrame, DataFrame) = {
+    val raw = e.join(scores.withColumnRenamed("node", from), from)
+      .groupBy(col(to).as("node"))
+      .agg(sum(ExactSum.scaled(col("score"))).as("raw"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val norm = raw.agg(sum(col("raw")), max(abs(col("raw")))).collect()(0)
+    require(!norm.isNullAt(0) && norm.getLong(0) > 0,
+      "hits requires a non-empty edge relation (score mass vanished)")
+    ExactSum.checked(norm.getLong(1))
+    val tot = ExactSum.toDouble(norm.getLong(0))
+    (raw, raw.select(col("node"),
+      round(ExactSum.toDouble(col("raw")) / lit(tot), 6).as("score")))
   }
 }

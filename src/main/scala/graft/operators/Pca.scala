@@ -12,17 +12,17 @@ import graft.functions.vecnative
   * Each iteration is ONE corpus aggregate: with the current direction
   * vₜ broadcast as a literal, every row contributes x·(x·vₜ) and the
   * per-dimension sums are taken in EXACT fixed-point arithmetic
-  * (6-dp terms recovered as scaled longs — order-independent, the same
-  * discipline as [[KMeans]] centroid means), so the fitted direction is
-  * bit-stable under any partitioning.
+  * ([[ExactSum]]: 6-dp terms as scaled longs — order-independent, the
+  * same discipline as [[KMeans]] centroid means), so the fitted
+  * direction is bit-stable under any partitioning.
   * Only `dim` numbers ever reach the driver per iteration (bounded
   * model fit, like the IVF/PQ codebooks). The final output is a pure
   * projection: every vector's 6-dp-rounded score along the fitted
   * direction via the native codegen'd dot kernel.
   *
   * Determinism/oracle parity: input components and every derived
-  * quantity are rounded to 6 dp before use (products before the
-  * decimal cast, sums after, the normalized direction after its
+  * quantity are rounded to 6 dp before use (products before they are
+  * summed, sums after, the normalized direction after its
   * divide), the start vector is the exact constant 1/√dim per
   * component, and norms use the same sequential fold as DuckDB's
   * `list_dot_product` — so the oracle replays the identical iteration.
@@ -58,6 +58,16 @@ object Pca {
         (x, dv) => round(x - round(element_at(col("__vp"), 1) * dv, 6), 6)))
       .drop("__vp")
 
+  /** One power iteration's aggregate over the rounded vectors `e(v)`
+    * and the current direction `dir`: the exact scaled sums of
+    * round6(xᵢ·d) per component, d = round6(x·dir) the row's projection
+    * ([[ExactSum.vecSum]] weighted by d — one aggregate expression, and
+    * the projection is evaluated once per row, whatever `dim` is).
+    */
+  private[graft] def powerSums(e: DataFrame, dir: Seq[Double], dim: Int): DataFrame =
+    e.select(ExactSum.vecSum(col("v"), dim,
+      Some(round(vecnative.dot_product(col("v"), typedlit(dir)), 6))).as("s"))
+
   /** The fitted unit direction after `iters` power iterations, over
     * vectors first deflated by the already-fitted `deflate` directions
     * (empty = first component).
@@ -72,11 +82,13 @@ object Pca {
     // job; without the persist every job re-reads and re-projects the
     // source). MEMORY_AND_DISK: rows are dim doubles, and a 100 TB
     // corpus spills rather than OOMs.
-    // repartition before the per-row work: a small parquet arrives as
-    // one input split, which would run every deflation product and all
-    // `dim` decimal aggregate columns on a single core; the decimal
-    // sums are order-independent, so the exchange cannot move the result
-    val e = deflate.foldLeft(base.repartition(Eval.machineParts(base, 32)))(
+    // repartition to one partition per core before the per-row work (the
+    // KMeans precedent): a small parquet arrives as one input split,
+    // which would run every deflation product and the whole aggregate on
+    // a single core, and more partitions than cores only add tasks. The
+    // exact sums are order-independent, so the exchange cannot move the
+    // result.
+    val e = deflate.foldLeft(base.repartition(base.sparkSession.sparkContext.defaultParallelism))(
         (df, dir) => deflatedFrame(df, dir, "v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -85,33 +97,10 @@ object Pca {
       // cached deflated frame — nothing for AQE to discover, one
       // blocking re-plan per iteration to skip (Iter scaladoc)
       Iter.noAqe(embs.sparkSession) { for (_ <- 1 to iters) {
-        // stage the per-row projection scalar below the aggregate — inlined
-        // into all `dim` aggregate expressions it would be folded dim times
-        val staged = e.withColumn("__d",
-          round(vecnative.dot_product(col("v"), typedlit(v)), 6))
-        // EXACT long-sum form of the former decimal(25,12) aggregate:
-        // each term round(xᵢ·d, 6) is mathematically m/1e6 for an
-        // integer m, and its nearest-double representation sits within
-        // 2 ulp, so round(term × 1e6) recovers m exactly whenever
-        // |m| < 2.3e15 (terms are products of 6-dp vector components
-        // with a unit-direction projection — orders of magnitude
-        // inside that). Summing the m's as LONGs replaces dim 128-bit
-        // Decimal conversions + adds per row with codegen'd long adds;
-        // headroom is the same order as the former decimal: long
-        // overflows at 9.2e18 (= 9.2e12 in value units) vs the
-        // decimal's 13 integer digits (1e13). Still exact and
-        // order-independent, so the fit stays bit-stable under any
-        // partitioning.
-        val sums = staged.select((0 until dim).map(i =>
-          sum(round(round(element_at(col("v"), i + 1) * col("__d"), 6) * 1e6)
-            .cast("long")).as(s"s$i")): _*).collect()(0)
-        require(!sums.isNullAt(0),
+        val sums = powerSums(e, v, dim).collect()(0).getList[java.lang.Long](0)
+        require(sums.get(0) != null,
           "power iteration needs at least one non-null embedding row")
-        // BigDecimal.valueOf(L, 6).doubleValue() is the correctly
-        // rounded nearest double of L/1e6 — bit-identical to the former
-        // Decimal(25,12).toDouble of the same mathematical value
-        val raw = (0 until dim).map(i =>
-          round6(java.math.BigDecimal.valueOf(sums.getLong(i), 6).doubleValue()))
+        val raw = (0 until dim).map(i => round6(ExactSum.toDouble(sums.get(i))))
         val nrm = math.sqrt(raw.map(x => x * x).sum) // ascending-index fold
         require(nrm > 0, "power iteration collapsed to the zero vector")
         v = raw.map(x => round6(x / nrm))

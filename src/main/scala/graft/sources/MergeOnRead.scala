@@ -197,9 +197,16 @@ object MergeOnRead {
       .unionByName(routed.inserts.withColumn(Kind, lit(Inserted)), allowMissingColumns = true)
       .unionByName(CdcOps.lastWriterWins(routed.updates, m.keys, orderColumns)
         .withColumn(Kind, when(keyed, lit(Updated)).otherwise(lit(Inserted))), allowMissingColumns = true)
-    val delta = rows.dropDuplicates(rows.columns.filterNot(_ == Kind).toSeq)
+    // the tombstone keys dedup in the rows' shuffle, a flag keeping a key
+    // apart from a row whose other columns are null: the delta is written
+    // from that one exchange, which AQE coalesces to a file or two, and
+    // not from the partitions of the batch's checkpoint
+    val tomb = "__graft_tomb"
+    val marked = rows
       .unionByName(CdcOps.tombstoneKeys(routed, m.keys).withColumn(Kind, lit(Tombstoned)),
         allowMissingColumns = true)
+      .withColumn(tomb, col(Kind) === Tombstoned)
+    val delta = marked.dropDuplicates(marked.columns.filterNot(_ == Kind).toSeq).drop(tomb)
       .withColumn(Generation, lit(m.id + 1))
     val dir = s"delta-${m.id + 1}"
     delta.write.mode(SaveMode.Overwrite).format(m.format).save(s"$root/$dir")

@@ -1,0 +1,143 @@
+package graft
+
+import scala.util.Random
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.VectorKernels.round6
+import graft.operators.{ExactSum, Graph, KMeans}
+
+/** The exact scaled-long sum against the `decimal(25,12)` formulas it
+  * replaced, in the style of PcaSpec: the k-means centroid update and
+  * the HITS half-step, over random 6-dp inputs with negative values and
+  * magnitudes near the headroom bound, and the headroom `require`.
+  */
+class ExactSumSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private val dec = "decimal(25,12)"
+
+  /** A random 6-dp double: mostly |x| < 4, negatives included, and
+    * every `bigEvery`-th one near the term bound (|x| ≈ 1e9).
+    */
+  private def value(rnd: Random, i: Int, bigEvery: Int): Double =
+    if (i % bigEvery == 0) round6((if (rnd.nextBoolean()) 1 else -1) * (1.0e9 + rnd.nextDouble() * 1.0e8))
+    else round6(rnd.nextGaussian() * 4.0)
+
+  test("the helper's conversion is the correctly rounded value of the decimal sum") {
+    val rnd = new Random(5)
+    val sums = Seq(0L, 1L, -1L, ExactSum.MaxSum, -ExactSum.MaxSum, 999999L, 1000001L) ++
+      Seq.fill(2000)(rnd.nextLong() % ExactSum.MaxSum)
+    sums.foreach { s =>
+      assert(ExactSum.toDouble(s) == java.math.BigDecimal.valueOf(s, 6).doubleValue(), s"sum $s")
+    }
+    // every 6-dp double round-trips through its scaled term
+    Seq.fill(2000)(value(rnd, rnd.nextInt(50), 7)).foreach { x =>
+      assert(ExactSum.toDouble(ExactSum.term(x)) == x, s"term of $x")
+    }
+  }
+
+  test("the k-means centroid update is bit-identical to the decimal(25,12) formula") {
+    val rnd = new Random(41)
+    val dim = 8
+    // at most 8 near-bound components per column: any cell's sum stays
+    // inside the ±2^53 headroom (8 · 1.1e9 < 9.0e9)
+    val rows = (0 until 400).map { i =>
+      (i.toLong, (0 until dim).map(j => value(rnd, i * dim + j, 401)))
+    }
+    val e = rows.toDF("vec_id", "v").repartition(3)
+    val cents = (0 until 5).map(c => c -> rows(c * 37)._2)
+    val got = KMeans.centroids(KMeans.lloydSums(e, cents, dim).collect(), dim)
+
+    // the former step: exact decimal sums, the decimal's double over n,
+    // rounded HALF_UP to 6 dp
+    val assigned = e.withColumn("cell", vecnativeCell(cents))
+    val aggs = count(lit(1)).as("n") +: (0 until dim).map(j =>
+      sum(element_at(col("v"), j + 1).cast(dec)).as(s"s$j"))
+    val want = assigned.groupBy(col("cell")).agg(aggs.head, aggs.tail: _*).collect().map { r =>
+      val n = r.getAs[Long]("n")
+      r.getAs[Int]("cell") -> (0 until dim).map { j =>
+        val mean = r.getAs[java.math.BigDecimal](s"s$j").doubleValue() / n
+        BigDecimal(mean).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      }
+    }.sortBy(_._1).toSeq
+    assert(got.map(_._1) == want.map(_._1))
+    got.zip(want).foreach { case ((c, g), (_, w)) =>
+      assert(g.map(java.lang.Double.doubleToRawLongBits) == w.map(java.lang.Double.doubleToRawLongBits),
+        s"cell $c:\n$g\n$w")
+    }
+    assert(got.exists(_._2.exists(x => math.abs(x) > 1.0e6)), "no near-bound component reached a centroid")
+  }
+
+  private def vecnativeCell(cents: Seq[(Int, Seq[Double])]) =
+    graft.functions.vecnative.cosine_argmax(col("v"),
+      cents.map(_._1).toArray, cents.map(_._2.toArray).toArray).getField("cell")
+
+  /** The former half-step: decimal per-node sums and normalizer, the
+    * division on their doubles.
+    */
+  private def decimalHalfStep(e: DataFrame, scores: DataFrame, from: String, to: String) = {
+    val raw = e.join(scores.withColumnRenamed("node", from), from)
+      .groupBy(col(to).as("node"))
+      .agg(sum(col("score").cast(dec)).as("raw"))
+    val tot = raw.agg(sum(col("raw"))).collect()(0).getDecimal(0)
+    raw.select(col("node"),
+      round(col("raw").cast("double") / lit(tot.doubleValue()), 6).as("score"))
+      .as[(Long, Double)].collect().toMap
+  }
+
+  test("the HITS half-step is bit-identical to the decimal(25,12) formula") {
+    val rnd = new Random(43)
+    for (trial <- 1 to 3) {
+      val n = 60
+      val edges = ((1L to 3L).map(0L -> _) ++
+        Seq.fill(300)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))).distinct
+        .toDF("src", "dst")
+      // mostly small scores of either sign, two negative ones of 1e8 and
+      // node 0 near the term bound: its ≥ 3 out-edges keep the total
+      // positive and put raw sums of about 1e15 (of the 9.0e15 headroom)
+      // into the half-step
+      val scores = (0 until n).map(i => (i.toLong,
+        if (i == 0) 1.0e9 + round6(rnd.nextDouble()) else if (i % 29 == 0) -1.0e8 - round6(rnd.nextDouble())
+        else round6(rnd.nextDouble() * 3 - 0.5)))
+        .toDF("node", "score")
+      val (raw, next) = Graph.hitsHalfStep(edges, scores, "src", "dst")
+      val got = next.as[(Long, Double)].collect().toMap
+      raw.unpersist()
+      val want = decimalHalfStep(edges, scores, "src", "dst")
+      assert(got.keySet == want.keySet, s"trial $trial")
+      want.foreach { case (k, w) =>
+        assert(java.lang.Double.doubleToRawLongBits(got(k)) == java.lang.Double.doubleToRawLongBits(w),
+          s"trial $trial node $k: ${got(k)} vs $w")
+      }
+    }
+  }
+
+  test("a sum past the headroom is rejected, not wrapped") {
+    intercept[IllegalArgumentException](ExactSum.add(ExactSum.MaxSum, 1L))
+    intercept[IllegalArgumentException](ExactSum.add(-ExactSum.MaxSum, -1L))
+    intercept[IllegalArgumentException](ExactSum.toDouble(ExactSum.MaxSum + 1))
+    intercept[IllegalArgumentException](ExactSum.term(2.0e9))
+    assert(ExactSum.add(ExactSum.MaxSum - 1, 1L) == ExactSum.MaxSum)
+
+    // ten components of 1e9 sum to 1e10 > 2^53 / 1e6 ≈ 9.007e9: the
+    // executor's require fails the aggregate
+    val e = (0L until 10L).map(i => (i, Seq(1.0e9, 1.0))).toDF("vec_id", "v")
+    val err = intercept[Exception](e.agg(ExactSum.vecSum(col("v"), 2)).collect())
+    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains("headroom")), s"not a headroom rejection: $err")
+    // nine stay inside it
+    assert(e.limit(9).agg(ExactSum.vecSum(col("v"), 2)).head().getSeq[Long](0) ==
+      Seq(9000000000000000L, 9000000L))
+
+    // a HITS node whose raw sum passes the headroom fails on the driver
+    val edges = (0L until 10L).map(i => (i, 100L)).toDF("src", "dst")
+    val big = (0L until 10L).map(i => (i, 1.0e9)).toDF("node", "score")
+    val hitsErr = intercept[IllegalArgumentException](Graph.hitsHalfStep(edges, big, "src", "dst"))
+    assert(hitsErr.getMessage.contains("headroom"))
+  }
+}

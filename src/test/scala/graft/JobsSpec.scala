@@ -367,6 +367,11 @@ class JobsSpec extends AnyFunSuite {
     val schema = spark.table(spec.dailyTable).schema
     val history = jobsOf(spark.sparkContext)(Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 3)))
     assert(MergeOnRead.latest(spark, location(spec.historyTable).toString).deltas.size == 1)
+    // the delta is written from the rows' dedup shuffle, tombstone keys
+    // included: one data file (4 while the tombstones were written from
+    // the batch checkpoint's partitions)
+    assert(onDisk(new Path(location(spec.historyTable), "delta-1"))
+      .count(_.startsWith("part-")) == 1)
     // 11 and 13 while each raw read inferred its schema from file footers,
     // each read probed `isEmpty`, the batch was checkpointed and counted
     // in separate jobs, the history batch was `distinct()`ed and the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Corpus, Dedup, Similarity, Sketch}
+import graft.operators.{Corpus, Dedup, KMeans, Pca, Similarity, Sketch}
 
 /** Physical-plan shape assertions — the scale contract, checked, not
   * narrated: operators that claim "no corpus shuffle" / "broadcast
@@ -27,6 +27,24 @@ class PlanSpec extends AnyFunSuite {
   private def docs = (0L until 400L)
     .map(i => (i, s"tok$i words here", if (i % 4 == 0) "web" else "books"))
     .toDF("doc_id", "text", "source")
+
+  test("a Lloyd step and a power iteration each plan a fixed number of " +
+      "aggregate expressions, whatever dim is") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    // per aggregate node (partial, final): how many aggregate expressions
+    def aggExprs(df: DataFrame): Seq[Int] =
+      df.queryExecution.sparkPlan.collect { case a: BaseAggregateExec => a.aggregateExpressions.size }
+    for (dim <- Seq(4, 64)) {
+      val e = (0L until 50L).map(i => (i, Seq.tabulate(dim)(j => ((i + j) % 7 - 3).toDouble)))
+        .toDF("vec_id", "v")
+      val cents = Seq(0 -> Seq.fill(dim)(1.0), 1 -> Seq.tabulate(dim)(j => if (j % 2 == 0) 1.0 else -1.0))
+      // a count and one array-valued exact sum, where dim + 1 sums planned
+      assert(aggExprs(KMeans.lloydSums(e, cents, dim)) == Seq(2, 2), s"Lloyd step at dim $dim")
+      // one weighted array-valued exact sum, where dim sums planned
+      assert(aggExprs(Pca.powerSums(e, Seq.fill(dim)(0.125), dim)) == Seq(1, 1),
+        s"power iteration at dim $dim")
+    }
+  }
 
   test("deterministicSplit is a pure projection: zero exchanges") {
     val plan = executed(Corpus.deterministicSplit(docs, "doc_id",
