@@ -1070,8 +1070,9 @@ FROM r$iters r CROSS JOIN n"""
     * one CTE pair per iteration (same finite-prefix trick as
     * [[graphPageRank]]). Per-node sums and the per-side normalizer
     * accumulate the 6-dp scores as DECIMAL(25,12) — exact and
-    * order-independent, matching the Spark side's cast — so only the
-    * final double division is floating point in either engine.
+    * order-independent, as the Spark side's scaled-long sums
+    * ([[graft.operators.ExactSum]]) — so only the final double division
+    * is floating point in either engine.
     */
   def graphHits(iters: Int = 3): String = {
     val steps = (1 to iters).map { t =>

@@ -3670,8 +3670,9 @@ object SparkEntry {
         labelPropCached(s, dir))),
 
     // HITS hubs/authorities on the DIRECTED customer→supplier purchase
-    // graph (operators.Graph.hits — per-iteration exact-decimal sum
-    // normalization; the oracle unrolls the identical recurrence).
+    // graph (operators.Graph.hits — driver-side scores, one job per
+    // half-step, exact scaled-long sums; the oracle unrolls the
+    // identical recurrence).
     "graph_hits" -> ((s, dir) =>
       graft.operators.Graph.hits(purchasePairsCached(s, dir)
           .select(col("c").as("src"), col("s").as("dst")),

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.functions.{ExactVecSum, VectorKernels}
@@ -21,9 +20,8 @@ import graft.functions.{ExactVecSum, VectorKernels}
   * Headroom. Every sum is kept within ±[[MaxSum]] = 2⁵³ (±9.0e9 in value
   * units). A long below 2⁵³ converts to a double exactly, so s / 10⁶ in
   * double arithmetic is one correctly rounded IEEE division: the same
-  * double as the former decimal sum's cast to double, in the driver and
-  * in a Column alike. A sum past the headroom is rejected by a
-  * `require`, never wrapped or rounded.
+  * double as the former decimal sum's cast to double. A sum past the
+  * headroom is rejected by a `require`, never wrapped or rounded.
   */
 object ExactSum {
 
@@ -58,14 +56,6 @@ object ExactSum {
 
   /** The nearest double to s / 10⁶. */
   def toDouble(s: Long): Double = checked(s).toDouble / 1e6
-
-  /** Column form of [[term]]: the caller bounds x (|x| < 1.1e9). */
-  def scaled(x: Column): Column = rint(x * 1e6).cast("long")
-
-  /** Column form of [[toDouble]] over a long sum: exact while the sum
-    * is within ±[[MaxSum]], which the caller proves on the driver.
-    */
-  def toDouble(s: Column): Column = s.cast("double") / 1e6
 
   /** Per-component exact sums of a 6-dp `array<double>` column of `dim`
     * components, in ONE aggregate: `array<bigint>` of scaled sums, a

@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+
+import graft.functions.VectorKernels.round6
 
 /** Fixed-iteration PageRank over an edge relation — the graph
   * centrality pass a training pipeline uses to pick canonical
@@ -870,12 +874,15 @@ object Graph {
     * authorities), destinations as AUTHORITIES (good hubs point at
     * them). Returns `(node, kind, score)` with kind ∈ {hub, auth};
     * scores are sum-normalized per iteration (Σ = 1 within each side)
-    * and rounded to 6 dp.
+    * and rounded to 6 dp. An edge with a null endpoint is dropped.
     *
-    * Scale shape: mirrors [[pageRank]] — the edge list is persisted
-    * once; each half-iteration shuffles only the 2-column score
-    * relation (one row per node on one side), aggregates with map-side
-    * combine, and brings the normalizer back as a driver scalar.
+    * Scale shape: the scores live on the driver, as one array per side
+    * over a dense node index built once per call ([[HitsGraph]]), and the
+    * edges are cached once as primitive index arrays. Each half-step is
+    * ONE Spark job and no query plan ([[hitsHalfStep]]); the returned
+    * relation is built from the final arrays. Driver state: the node ids
+    * and a few numbers per node — the shape MLlib's iterative fits use,
+    * and [[KMeans]]/[[Pca]] here.
     * Exactness discipline: the per-node sums and the global normalizer
     * are exact scaled-long sums of the 6-dp scores ([[ExactSum]] —
     * order-independent, equal to the oracle's DECIMAL(25,12) sums), and
@@ -884,73 +891,111 @@ object Graph {
     */
   def hits(edges: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val e = edges.select(col("src"), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the raw from two half-steps back is dropped once the next one is
-    // materialized — repeated hits() calls in one session previously
-    // grew the block-manager cache by 2×iters frames per call (round-6
-    // advice); only the final hub/auth raws stay pinned for the
-    // caller's action
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def halfStep(scores: DataFrame, from: String, to: String): DataFrame = {
-      val (raw, next) = hitsHalfStep(e, scores, from, to)
-      pinned += raw
-      if (pinned.length > 2) pinned.remove(0).unpersist(blocking = false)
-      next
-    }
-    var h = e.select(col("src").as("node")).distinct()
-      .withColumn("score", lit(1.0))
-    var a: DataFrame = null
-    // every half-step materializes (the normalizer collect) under
-    // [[Iter.noAqe]]: 2×iters identical two-stage jobs over a score
-    // relation of one row per node — nothing for AQE to discover,
-    // one blocking re-plan per stage to pay (round-10 measurement:
-    // the AQE-off loop runs ~2× faster at sf0.1, identical results)
-    Iter.noAqe(e.sparkSession) {
+    val g = HitsGraph(edges)
+    try {
+      require(g.hubs.nonEmpty, "hits requires a non-empty edge relation")
+      var h = Array.fill(g.hubs.length)(1.0)
+      var a: Array[Double] = null
       for (_ <- 1 to iters) {
-        a = halfStep(h, "src", "dst")
-        h = halfStep(a, "dst", "src")
+        a = hitsHalfStep(g, h, toAuth = true)
+        h = hitsHalfStep(g, a, toAuth = false)
       }
-    }
-    // the last two persisted raws stay pinned — the final projections
-    // read them directly, so no checkpoint is needed. The edge pin is
-    // NOT needed anymore: every half-step's raw is materialized (the
-    // normalizer collect), so releasing e leaks nothing — without this
-    // each hits() call left one corpus-sized edge relation cached
-    e.unpersist(blocking = false)
-    h.select(col("node"), lit("hub").as("kind"), col("score"))
-      .unionByName(a.select(col("node"), lit("auth").as("kind"), col("score")))
+      val rows = g.hubs.indices.map(i => Row(g.hubs(i), "hub", h(i))) ++
+        g.auths.indices.map(j => Row(g.auths(j), "auth", a(j)))
+      rowsFrame(edges.sparkSession, rows, StructType(Seq(
+        StructField("node", g.nodeType), StructField("kind", StringType, nullable = false),
+        StructField("score", DoubleType, nullable = false))))
+    } finally g.edges.unpersist(blocking = false)
   }
 
-  /** One normalized HITS half-step: score mass flows across `e`'s edges
-    * (keyed `from` → grouped `to`), Σ_to = 1 after normalization.
-    * Returns the persisted raw per-node sums and the normalized scores
-    * over them.
-    *
-    * The per-node sums and the normalizer are exact scaled-long sums of
-    * the 6-dp scores ([[ExactSum]]). The normalizer comes back as a
-    * driver scalar from the same job that materializes the raw sums —
-    * one job per half-step — with the largest |raw|, which proves every
-    * raw within the headroom, so the Column conversion of each raw is
-    * exact. The normalization stays a lazy projection over the
-    * persisted sums (an eager checkpoint per half-step plus a
-    * broadcast-materialization job doubled the job count; measured
-    * ~2.5× the runtime of this shape). The division is double/double
-    * on the sums' nearest doubles, exactly as the oracle's
-    * CAST(raw AS DOUBLE)/CAST(tot AS DOUBLE) of its decimal sums.
+  /** The edges of one [[hits]] call over dense node indices: hub i is
+    * node `hubs(i)`, authority j is node `auths(j)`, and `edges` holds
+    * each partition's edges as two primitive arrays, (hub index,
+    * authority index) at each position. `edges` is persisted and is
+    * materialized by the first half-step; the caller unpersists it.
     */
-  private[graft] def hitsHalfStep(e: DataFrame, scores: DataFrame,
-                                  from: String, to: String): (DataFrame, DataFrame) = {
-    val raw = e.join(scores.withColumnRenamed("node", from), from)
-      .groupBy(col(to).as("node"))
-      .agg(sum(ExactSum.scaled(col("score"))).as("raw"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val norm = raw.agg(sum(col("raw")), max(abs(col("raw")))).collect()(0)
-    require(!norm.isNullAt(0) && norm.getLong(0) > 0,
-      "hits requires a non-empty edge relation (score mass vanished)")
-    ExactSum.checked(norm.getLong(1))
-    val tot = ExactSum.toDouble(norm.getLong(0))
-    (raw, raw.select(col("node"),
-      round(ExactSum.toDouble(col("raw")) / lit(tot), 6).as("score")))
+  private[graft] final case class HitsGraph(hubs: Array[Any], auths: Array[Any], nodeType: DataType,
+                                            edges: RDD[(Array[Int], Array[Int])])
+
+  private[graft] object HitsGraph {
+
+    /** Indexes `edges(src, dst)`: one job collects both distinct node
+      * sides, and each edge takes its two indices from broadcast hash
+      * joins against the index relations, so the lookup runs on Spark's
+      * typed hash relations whatever the node type is.
+      */
+    def apply(edges: DataFrame): HitsGraph = {
+      val spark = edges.sparkSession
+      val e = edges.select(col("src"), col("dst"))
+        .where(col("src").isNotNull && col("dst").isNotNull)
+      val sides = e.select(col("src").as("node"), lit(true).as("hub"))
+        .union(e.select(col("dst").as("node"), lit(false).as("hub")))
+        .distinct()
+      val nodeType = sides.schema("node").dataType
+      val (hubRows, authRows) = sides.collect().partition(_.getBoolean(1))
+      def index(rows: Array[Row], name: String): DataFrame =
+        broadcast(rowsFrame(spark, rows.indices.map(i => Row(rows(i).get(0), i)),
+          StructType(Seq(StructField(name, nodeType), StructField(s"${name}_i", IntegerType)))))
+      val pairs = e.join(index(hubRows, "src"), "src").join(index(authRows, "dst"), "dst")
+        .select(col("src_i"), col("dst_i"))
+      // at most one block per core: each half-step's task count, and the
+      // arrays the driver merges, stay bounded whatever the edge
+      // relation's partitioning is
+      val blocks = pairs.queryExecution.toRdd.coalesce(spark.sparkContext.defaultParallelism)
+        .mapPartitions { rows =>
+          val hub = Array.newBuilder[Int]
+          val auth = Array.newBuilder[Int]
+          rows.foreach { r => hub += r.getInt(0); auth += r.getInt(1) }
+          Iterator((hub.result(), auth.result()))
+        }.persist(StorageLevel.MEMORY_AND_DISK)
+      HitsGraph(hubRows.map(_.get(0)), authRows.map(_.get(0)), nodeType, blocks)
+    }
+  }
+
+  /** A relation over driver-side rows, scanned from an RDD: a local
+    * relation would carry the rows in its plan, and Catalyst rewrites
+    * every row of it once per optimizer rule (at the 10× octave the
+    * 160k-row index and result relations cost seconds of planning).
+    */
+  private def rowsFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+
+  /** One normalized HITS half-step, as one Spark job: the score mass of
+    * one side flows across `g`'s edges to the other side (hubs →
+    * authorities when `toAuth`), Σ = 1 after normalization. `scores`
+    * holds the source side's 6-dp scores in index order; the result
+    * holds the target side's.
+    *
+    * The 6-dp terms ([[ExactSum.term]]) go out as one broadcast
+    * `long[]`; each task sums them per target node with
+    * [[ExactSum.add]], so every sum is exact and kept within the
+    * headroom, and the driver merges the tasks' arrays the same way.
+    * The normalizer is the exact sum of the raws, and each score is
+    * round6(raw / normalizer) on the sums' nearest doubles — the
+    * oracle's CAST(raw AS DOUBLE)/CAST(tot AS DOUBLE) of its decimal
+    * sums, rounded HALF_UP as its round(·, 6).
+    */
+  private[graft] def hitsHalfStep(g: HitsGraph, scores: Array[Double], toAuth: Boolean): Array[Double] = {
+    val n = if (toAuth) g.auths.length else g.hubs.length
+    val terms = g.edges.sparkContext.broadcast(scores.map(ExactSum.term))
+    val raw = try g.edges.map { case (hub, auth) =>
+        val (from, to) = if (toAuth) (hub, auth) else (auth, hub)
+        val t = terms.value
+        val s = new Array[Long](n)
+        var i = 0
+        while (i < from.length) {
+          s(to(i)) = ExactSum.add(s(to(i)), t(from(i)))
+          i += 1
+        }
+        s
+      }.reduce { (x, y) =>
+        var j = 0
+        while (j < n) { x(j) = ExactSum.add(x(j), y(j)); j += 1 }
+        x
+      } finally terms.destroy()
+    val tot = raw.foldLeft(0L)(ExactSum.add)
+    require(tot > 0, "hits requires a non-empty edge relation (score mass vanished)")
+    val t = ExactSum.toDouble(tot)
+    raw.map(r => round6(ExactSum.toDouble(r) / t))
   }
 }

@@ -11,8 +11,9 @@ import graft.operators.{ExactSum, Graph, KMeans}
 
 /** The exact scaled-long sum against the `decimal(25,12)` formulas it
   * replaced, in the style of PcaSpec: the k-means centroid update and
-  * the HITS half-step, over random 6-dp inputs with negative values and
-  * magnitudes near the headroom bound, and the headroom `require`.
+  * the driver-side HITS half-step, over random 6-dp inputs with
+  * negative values and magnitudes near the headroom bound, and the
+  * headroom `require`.
   */
 class ExactSumSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -103,11 +104,13 @@ class ExactSumSpec extends AnyFunSuite {
       val scores = (0 until n).map(i => (i.toLong,
         if (i == 0) 1.0e9 + round6(rnd.nextDouble()) else if (i % 29 == 0) -1.0e8 - round6(rnd.nextDouble())
         else round6(rnd.nextDouble() * 3 - 0.5)))
-        .toDF("node", "score")
-      val (raw, next) = Graph.hitsHalfStep(edges, scores, "src", "dst")
-      val got = next.as[(Long, Double)].collect().toMap
-      raw.unpersist()
-      val want = decimalHalfStep(edges, scores, "src", "dst")
+      val byNode = scores.toMap
+      val g = Graph.HitsGraph(edges)
+      val got = try {
+        val next = Graph.hitsHalfStep(g, g.hubs.map(h => byNode(h.asInstanceOf[Long])), toAuth = true)
+        g.auths.map(_.asInstanceOf[Long]).zip(next).toMap
+      } finally g.edges.unpersist()
+      val want = decimalHalfStep(edges, scores.toDF("node", "score"), "src", "dst")
       assert(got.keySet == want.keySet, s"trial $trial")
       want.foreach { case (k, w) =>
         assert(java.lang.Double.doubleToRawLongBits(got(k)) == java.lang.Double.doubleToRawLongBits(w),
@@ -115,6 +118,14 @@ class ExactSumSpec extends AnyFunSuite {
       }
     }
   }
+
+  /** Whether `err`'s cause chain holds the headroom `require`: a check
+    * that fires in a task reaches the driver wrapped in Spark's
+    * exception.
+    */
+  private def rejectedByHeadroom(err: Throwable): Boolean =
+    Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).exists(c =>
+      c.isInstanceOf[IllegalArgumentException] && c.getMessage.contains("headroom"))
 
   test("a sum past the headroom is rejected, not wrapped") {
     intercept[IllegalArgumentException](ExactSum.add(ExactSum.MaxSum, 1L))
@@ -127,17 +138,25 @@ class ExactSumSpec extends AnyFunSuite {
     // executor's require fails the aggregate
     val e = (0L until 10L).map(i => (i, Seq(1.0e9, 1.0))).toDF("vec_id", "v")
     val err = intercept[Exception](e.agg(ExactSum.vecSum(col("v"), 2)).collect())
-    val causes = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
-    assert(causes.exists(c => c.isInstanceOf[IllegalArgumentException] &&
-      c.getMessage.contains("headroom")), s"not a headroom rejection: $err")
+    assert(rejectedByHeadroom(err), s"not a headroom rejection: $err")
     // nine stay inside it
     assert(e.limit(9).agg(ExactSum.vecSum(col("v"), 2)).head().getSeq[Long](0) ==
       Seq(9000000000000000L, 9000000L))
 
-    // a HITS node whose raw sum passes the headroom fails on the driver
+    // a HITS node whose raw sum passes the headroom fails the half-step:
+    // in the task that sums all ten of its edges, and in the driver's
+    // merge when no task holds more than four of them
     val edges = (0L until 10L).map(i => (i, 100L)).toDF("src", "dst")
-    val big = (0L until 10L).map(i => (i, 1.0e9)).toDF("node", "score")
-    val hitsErr = intercept[IllegalArgumentException](Graph.hitsHalfStep(edges, big, "src", "dst"))
-    assert(hitsErr.getMessage.contains("headroom"))
+    for (parts <- Seq(edges.coalesce(1), edges.repartition(5))) {
+      val g = Graph.HitsGraph(parts)
+      val hitsErr = try intercept[Exception](
+        Graph.hitsHalfStep(g, Array.fill(g.hubs.length)(1.0e9), toAuth = true))
+      finally g.edges.unpersist()
+      assert(rejectedByHeadroom(hitsErr), s"not a headroom rejection: $hitsErr")
+    }
+    // nine stay inside it
+    val g = Graph.HitsGraph(edges.limit(9))
+    try assert(Graph.hitsHalfStep(g, Array.fill(g.hubs.length)(1.0e9), toAuth = true).toSeq == Seq(1.0))
+    finally g.edges.unpersist()
   }
 }

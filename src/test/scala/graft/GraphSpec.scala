@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CacheEntries
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Graph
@@ -378,6 +380,25 @@ class GraphSpec extends AnyFunSuite {
     assert(math.abs(got.filter(_._1._2 == "hub").values.sum - 1.0) < 1e-4)
     // s1 (pointed at by both strong hubs) must outrank the fringe s3
     assert(got(("s1", "auth")) > got(("s3", "auth")))
+  }
+
+  test("hits leaves the session's persistent RDDs and cached relations as they were") {
+    // a session that holds only the edge relation, as the query suite's
+    // memoized purchase edges are held
+    val e = edges("c1" -> "s1", "c1" -> "s2", "c2" -> "s1", "c2" -> "s3", "c3" -> "s3")
+      .persist()
+    try {
+      e.count()
+      val rdds = spark.sparkContext.getPersistentRDDs.keySet
+      val cached = CacheEntries.count(spark)
+      for (_ <- 1 to 2) {
+        val out = Graph.hits(e, iters = 2)
+        assert(out.collect().length == 6)
+        assert(spark.sparkContext.getPersistentRDDs.keySet == rdds)
+        assert(CacheEntries.count(spark) == cached && out.storageLevel == StorageLevel.NONE)
+      }
+      assert(e.storageLevel != StorageLevel.NONE, "the caller's edge cache was released")
+    } finally e.unpersist()
   }
 
   test("kCore peels a chain down to the clique core over multiple rounds") {

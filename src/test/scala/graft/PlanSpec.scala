@@ -258,11 +258,16 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("HashAggregate"), s"no counting aggregate:\n$plan")
   }
 
-  test("hits: edges joined per half-step without cartesian or corpus-side sort-merge explosion") {
+  test("hits: iters = 3 runs exactly two more Spark jobs than iters = 2") {
+    import org.apache.spark.graftbridge.JobCounter.jobsOf
+    // each half-step is one job over the cached index arrays; the index
+    // build and the result cost the same whatever iters is
     val edges = (0L until 300L)
       .map(i => (s"c${i % 40}", s"s${i % 17}")).toDF("src", "dst")
-    val plan = executed(graft.operators.Graph.hits(edges, iters = 2))
-    assert(!plan.contains("CartesianProduct"), s"cartesian in HITS:\n$plan")
+    def jobs(iters: Int): Int =
+      jobsOf(spark.sparkContext)(graft.operators.Graph.hits(edges, iters).collect(): Unit)
+    val two = jobs(2)
+    assert(jobs(3) == two + 2, s"iters = 2 ran $two jobs")
   }
 
   test("kCore: peeling is joins + aggregates only — no cartesian, no window") {

@@ -18,8 +18,12 @@ the first job). Under each execution, one line per job:
 
 with `run` and `deserialize` the summed executor run time and executor
 deserialize time of the job's tasks, in milliseconds. Jobs that belong to
-no SQL execution are listed at the end. `--match` keeps only the
-executions whose description contains TEXT (for example `KMeans.scala`).
+no SQL execution (RDD actions, such as `Graph.hits`' half-steps) are listed
+at the end, each with its call site: the name of its result stage, the
+stage of highest id in its `SparkListenerJobStart`, for example
+`reduce at Graph.scala:991`. `--match` keeps only the executions whose
+description, and the jobs outside them whose call site, contains TEXT (for
+example `KMeans.scala`).
 
 To take an event log from a benchmark run (Spark needs <dir> to exist):
 
@@ -83,9 +87,14 @@ def load(files):
                     sqls[e["executionId"]]["end"] = e["time"]
             elif kind == "SparkListenerJobStart":
                 sql = (e.get("Properties") or {}).get("spark.sql.execution.id")
+                stages = e.get("Stage Infos") or []
                 jobs[e["Job ID"]] = {
                     "start": e["Submission Time"], "end": None,
                     "sql": int(sql) if sql is not None else None,
+                    # a result stage is created after its parents, so it
+                    # has the highest id; the parents that an earlier job
+                    # already ran are named after the thread that ran them
+                    "site": max(stages, key=lambda st: st["Stage ID"])["Stage Name"] if stages else "",
                     "run": 0, "deser": 0, "done": 0}
                 for s in e["Stage IDs"]:
                     stage_job[s] = e["Job ID"]
@@ -106,7 +115,8 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("log", help="an event log file, or a directory holding one")
     ap.add_argument("--match", default=None,
-                    help="only executions whose description contains this text")
+                    help="only executions whose description, and jobs outside them whose "
+                         "call site, contains this text")
     a = ap.parse_args()
     files = event_files(a.log)
     if not files:
@@ -140,12 +150,12 @@ def main():
                   f" {ms(s['start'], first)} {len(s['jobs']):4d}  {s['description']}\n")
         for jid in sorted(s["jobs"]):
             out.write(job_line(jid) + "\n")
-    if not a.match:
-        orphans = sorted(j for j, v in jobs.items() if v["sql"] not in sqls)
-        if orphans:
-            out.write("jobs outside any SQL execution\n")
-            for jid in orphans:
-                out.write(job_line(jid) + "\n")
+    orphans = sorted(j for j, v in jobs.items()
+                     if v["sql"] not in sqls and (not a.match or a.match in v["site"]))
+    if orphans:
+        out.write("jobs outside any SQL execution\n")
+        for jid in orphans:
+            out.write(f"{job_line(jid)}  {jobs[jid]['site']}\n")
 
 
 if __name__ == "__main__":
