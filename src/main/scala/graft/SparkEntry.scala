@@ -3813,10 +3813,10 @@ object SparkEntry {
       Dedup.embeddingNearDup(ld(s, dir, "embeddings"), "embedding", "vec_id",
         dim = 64, bits = 10, threshold = 0.1)),
 
-    // First principal direction by power iteration: one exact-decimal
-    // corpus aggregate per iteration (dim numbers to the driver), then
-    // a pure codegen'd projection scores every vector — the whitening /
-    // outlier-pruning axis of an embedding table.
+    // First principal direction by power iteration: one Fit kernel job
+    // of exact sums per iteration (dim numbers per task to the driver),
+    // then a pure codegen'd projection scores every vector — the
+    // whitening / outlier-pruning axis of an embedding table.
     // The fit is the session-memoized [[pc1DirCached]] (embed_pca2
     // shares the identical PC1 prefix); the scoring pass is unchanged.
     "embed_pca" -> ((s, dir) =>
@@ -4002,8 +4002,7 @@ object SparkEntry {
 
     // Spherical k-means (2 Lloyd iterations, k=8, hash-strided init) —
     // the training pass behind a properly-fitted IVF index. Per
-    // iteration: one argmax projection + one k-row decimal aggregate;
-    // only the k×dim centroid matrix reaches the driver.
+    // iteration: one Fit kernel job; only k×dim centroid numbers travel.
     // Embedding outlier pruning (training-data curation): vectors far
     // from their k-means centroid — noisy captions, mislabeled pairs —
     // are flagged against a per-cell mean-cosine threshold. One k-row

@@ -2,10 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
@@ -357,94 +355,6 @@ case class CosineArgmaxExpr(child: Expression, cells: Array[Int],
   }
   override protected def withNewChildInternal(c: Expression): CosineArgmaxExpr =
     copy(child = c)
-}
-
-/** array<bigint> per-component exact sums of a 6-dp `array<double>`
-  * column — all `dim` components in ONE aggregate, where `dim` separate
-  * `sum`s planned, analysed and generated code for `dim` expressions.
-  * The terms and the headroom are [[graft.operators.ExactSum]]'s: vⱼ
-  * itself, or round6(vⱼ·w) when a `weight` child is given. Null
-  * elements are skipped per component, and components past a short
-  * vector are missing, so a component reads null only when no row had a
-  * value (a `sum`'s contract); rows with a null vector or weight are
-  * skipped.
-  *
-  * The buffer is `dim` scaled sums followed by `dim` value counts.
-  */
-case class ExactVecSum(vec: Expression, weight: Option[Expression], dim: Int,
-                       mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] {
-  require(dim > 0, "need at least one component")
-  import graft.operators.ExactSum
-
-  override def children: Seq[Expression] = vec +: weight.toSeq
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (vec.dataType, weight.map(_.dataType)) match {
-      case (ArrayType(DoubleType, _), None | Some(DoubleType)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (v, w) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"exact vector sum takes array<double> and an optional double weight, got " +
-            (v +: w.toSeq).map(_.catalogString).mkString(", "))
-    }
-
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](2 * dim)
-
-  override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
-    val a = vec.eval(input).asInstanceOf[ArrayData]
-    if (a != null) weight match {
-      case None => accumulate(buf, a, weighted = false, 0.0)
-      case Some(we) =>
-        val w = we.eval(input)
-        if (w != null) accumulate(buf, a, weighted = true, w.asInstanceOf[Double])
-    }
-    buf
-  }
-
-  private def accumulate(buf: Array[Long], a: ArrayData, weighted: Boolean, w: Double): Unit = {
-    val n = math.min(a.numElements(), dim)
-    var j = 0
-    while (j < n) {
-      if (!a.isNullAt(j)) {
-        val x = a.getDouble(j)
-        buf(j) = ExactSum.add(buf(j),
-          if (weighted) ExactSum.productTerm(x, w) else ExactSum.term(x))
-        buf(dim + j) += 1
-      }
-      j += 1
-    }
-  }
-
-  override def merge(buf: Array[Long], other: Array[Long]): Array[Long] = {
-    var j = 0
-    while (j < dim) {
-      buf(j) = ExactSum.add(buf(j), other(j))
-      buf(dim + j) += other(dim + j)
-      j += 1
-    }
-    buf
-  }
-
-  override def eval(buf: Array[Long]): Any =
-    new GenericArrayData(Array.tabulate[Any](dim)(j => if (buf(dim + j) == 0) null else buf(j)))
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(8 * buf.length)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = java.nio.ByteBuffer.wrap(bytes)
-    Array.fill(2 * dim)(bb.getLong)
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): ExactVecSum = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): ExactVecSum = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): ExactVecSum =
-    copy(vec = c.head, weight = weight.map(_ => c(1)))
 }
 
 /** Column-API wrappers. */

@@ -564,7 +564,6 @@ object Dedup {
                     threshold: Double = 0.7,
                     targetCellSize: Int = 64, kMin: Int = 8): DataFrame = {
     require(targetCellSize >= 1 && kMin >= 1, "cell size and kMin must be >= 1")
-    val kEff = if (k > 0) k else chooseK(embs.count(), targetCellSize, kMin)
     // assignment WITH vectors (round-13): the slim-label form re-scanned
     // and re-rounded the source and shuffle-joined it back by id — two
     // exchanges and a scan that existed only to recover the vectors the
@@ -572,13 +571,14 @@ object Dedup {
     // persisted, so (a) the within-cell self-join below reads both sides
     // from the same at-rest layout with no exchange, and (b) the
     // dropped-side subtree and the final readout no longer each
-    // recompute the assignment join.
-    val (assigned, evecs) = KMeans.sphericalKMeansWithVecs(
-      embs, vecCol, idCol, k = kEff, iters = iters)
-    val members = Eval.pinAndRelease(
-      assigned.select(col("cell_id"), col("vec_id").as("id"), col("v"))
-        .repartition(col("cell_id")),
-      evecs)
+    // recompute the assignment join. The adaptive k comes from the row
+    // count the fit's block build takes anyway.
+    val (assigned, vecs) = KMeans.sphericalKMeansWithVecs(embs, vecCol, idCol,
+      k = n => if (k > 0) k else chooseK(n, targetCellSize, kMin), iters = iters)
+    val members =
+      try Eval.pinAndRelease(
+        assigned.select(col("cell_id"), col("vec_id").as("id"), col("v")).repartition(col("cell_id")))
+      finally vecs.unpersist(blocking = false)
     val dropped = members.select(col("cell_id"), col("id").as("id_a"), col("v").as("v_a"))
       .join(members.select(col("cell_id"), col("id").as("id_b"), col("v").as("v_b")),
         Seq("cell_id"))

@@ -1,13 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.graftbridge.Bridge
-
-import graft.functions.{ExactVecSum, VectorKernels}
+import graft.functions.VectorKernels
 
 /** Exact sums of 6-dp values as scaled longs — the arithmetic of the
-  * iterative fits ([[KMeans]] centroid means, [[Pca]] power iteration,
-  * [[Graph.hits]] half-steps), which used to sum `decimal(25,12)`.
+  * [[Fit]] kernel's steps ([[KMeans]] centroid means, [[Pca]] power
+  * iteration, [[Graph.hits]] half-steps; the tasks and the driver's
+  * merge both sum with [[add]]), which used to sum `decimal(25,12)`.
   *
   * Exactness. A 6-dp double x is the nearest double to m/10⁶ for an
   * integer m. Its relative error is at most 2⁻⁵³, and x·10⁶ adds at
@@ -56,14 +54,4 @@ object ExactSum {
 
   /** The nearest double to s / 10⁶. */
   def toDouble(s: Long): Double = checked(s).toDouble / 1e6
-
-  /** Per-component exact sums of a 6-dp `array<double>` column of `dim`
-    * components, in ONE aggregate: `array<bigint>` of scaled sums, a
-    * component null where no row had a value. With `weight`, the terms
-    * are round6(vⱼ·w) of each row's weight w (rows with a null weight are
-    * skipped).
-    */
-  def vecSum(v: Column, dim: Int, weight: Option[Column] = None): Column =
-    Bridge.column(ExactVecSum(Bridge.expression(v), weight.map(Bridge.expression), dim)
-      .toAggregateExpression())
 }

@@ -879,10 +879,9 @@ object Graph {
     * Scale shape: the scores live on the driver, as one array per side
     * over a dense node index built once per call ([[HitsGraph]]), and the
     * edges are cached once as primitive index arrays. Each half-step is
-    * ONE Spark job and no query plan ([[hitsHalfStep]]); the returned
-    * relation is built from the final arrays. Driver state: the node ids
-    * and a few numbers per node — the shape MLlib's iterative fits use,
-    * and [[KMeans]]/[[Pca]] here.
+    * ONE Spark job and no query plan ([[hitsHalfStep]], a [[Fit]] step);
+    * the returned relation is built from the final arrays. Driver state:
+    * the node ids and a few numbers per node.
     * Exactness discipline: the per-node sums and the global normalizer
     * are exact scaled-long sums of the 6-dp scores ([[ExactSum]] —
     * order-independent, equal to the oracle's DECIMAL(25,12) sums), and
@@ -909,10 +908,10 @@ object Graph {
   }
 
   /** The edges of one [[hits]] call over dense node indices: hub i is
-    * node `hubs(i)`, authority j is node `auths(j)`, and `edges` holds
-    * each partition's edges as two primitive arrays, (hub index,
-    * authority index) at each position. `edges` is persisted and is
-    * materialized by the first half-step; the caller unpersists it.
+    * node `hubs(i)`, authority j is node `auths(j)`, and `edges` holds a
+    * block of (hub index, authority index) pairs per core
+    * ([[Fit.blocks]]). `edges` is materialized by the first half-step;
+    * the caller unpersists it.
     */
   private[graft] final case class HitsGraph(hubs: Array[Any], auths: Array[Any], nodeType: DataType,
                                             edges: RDD[(Array[Int], Array[Int])])
@@ -938,16 +937,12 @@ object Graph {
           StructType(Seq(StructField(name, nodeType), StructField(s"${name}_i", IntegerType)))))
       val pairs = e.join(index(hubRows, "src"), "src").join(index(authRows, "dst"), "dst")
         .select(col("src_i"), col("dst_i"))
-      // at most one block per core: each half-step's task count, and the
-      // arrays the driver merges, stay bounded whatever the edge
-      // relation's partitioning is
-      val blocks = pairs.queryExecution.toRdd.coalesce(spark.sparkContext.defaultParallelism)
-        .mapPartitions { rows =>
-          val hub = Array.newBuilder[Int]
-          val auth = Array.newBuilder[Int]
-          rows.foreach { r => hub += r.getInt(0); auth += r.getInt(1) }
-          Iterator((hub.result(), auth.result()))
-        }.persist(StorageLevel.MEMORY_AND_DISK)
+      val blocks = Fit.blocks(pairs.queryExecution.toRdd, cutLineage = true) { rows =>
+        val hub = Array.newBuilder[Int]
+        val auth = Array.newBuilder[Int]
+        rows.foreach { r => hub += r.getInt(0); auth += r.getInt(1) }
+        (hub.result(), auth.result())
+      }
       HitsGraph(hubRows.map(_.get(0)), authRows.map(_.get(0)), nodeType, blocks)
     }
   }
@@ -960,39 +955,32 @@ object Graph {
   private def rowsFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
 
-  /** One normalized HITS half-step, as one Spark job: the score mass of
-    * one side flows across `g`'s edges to the other side (hubs →
+  /** One normalized HITS half-step, as one [[Fit.step]]: the score mass
+    * of one side flows across `g`'s edges to the other side (hubs →
     * authorities when `toAuth`), Σ = 1 after normalization. `scores`
     * holds the source side's 6-dp scores in index order; the result
     * holds the target side's.
     *
-    * The 6-dp terms ([[ExactSum.term]]) go out as one broadcast
-    * `long[]`; each task sums them per target node with
-    * [[ExactSum.add]], so every sum is exact and kept within the
-    * headroom, and the driver merges the tasks' arrays the same way.
-    * The normalizer is the exact sum of the raws, and each score is
-    * round6(raw / normalizer) on the sums' nearest doubles — the
-    * oracle's CAST(raw AS DOUBLE)/CAST(tot AS DOUBLE) of its decimal
-    * sums, rounded HALF_UP as its round(·, 6).
+    * The state is the source side's 6-dp terms ([[ExactSum.term]]); each
+    * task sums them per target node with [[ExactSum.add]], and the
+    * kernel merges the tasks' arrays the same way. The normalizer is the
+    * exact sum of the raws, and each score is round6(raw / normalizer)
+    * on the sums' nearest doubles — the oracle's
+    * CAST(raw AS DOUBLE)/CAST(tot AS DOUBLE) of its decimal sums, rounded
+    * HALF_UP as its round(·, 6).
     */
   private[graft] def hitsHalfStep(g: HitsGraph, scores: Array[Double], toAuth: Boolean): Array[Double] = {
     val n = if (toAuth) g.auths.length else g.hubs.length
-    val terms = g.edges.sparkContext.broadcast(scores.map(ExactSum.term))
-    val raw = try g.edges.map { case (hub, auth) =>
-        val (from, to) = if (toAuth) (hub, auth) else (auth, hub)
-        val t = terms.value
-        val s = new Array[Long](n)
-        var i = 0
-        while (i < from.length) {
-          s(to(i)) = ExactSum.add(s(to(i)), t(from(i)))
-          i += 1
-        }
-        s
-      }.reduce { (x, y) =>
-        var j = 0
-        while (j < n) { x(j) = ExactSum.add(x(j), y(j)); j += 1 }
-        x
-      } finally terms.destroy()
+    val raw = Fit.step(g.edges, scores.map(ExactSum.term)) { (block, t) =>
+      val (from, to) = if (toAuth) block else block.swap
+      val s = new Array[Long](n)
+      var i = 0
+      while (i < from.length) {
+        s(to(i)) = ExactSum.add(s(to(i)), t(from(i)))
+        i += 1
+      }
+      s
+    }
     val tot = raw.foldLeft(0L)(ExactSum.add)
     require(tot > 0, "hits requires a non-empty edge relation (score mass vanished)")
     val t = ExactSum.toDouble(tot)

@@ -2,13 +2,13 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Execution-conf scope for the fixed-iteration loop bodies
-  * ([[Graph.pageRank]]/[[Cluster]] fixpoints, frontier BFS, the
-  * [[KMeans]] Lloyd step and the [[Pca]] power iteration): runs the
-  * loop's materializing jobs with adaptive execution OFF and (when the
-  * per-iteration state size is known) the shuffle partition count sized
-  * ONCE from that size. [[Graph.hits]] needs no scope: its half-steps
-  * are RDD jobs over driver-side scores and plan no query.
+/** Execution-conf scope for the fixed-iteration loop bodies that still
+  * plan a query per round ([[Graph.pageRank]]/[[Cluster]] fixpoints,
+  * frontier BFS): runs the loop's materializing jobs with adaptive
+  * execution OFF and (when the per-iteration state size is known) the
+  * shuffle partition count sized ONCE from that size. The [[Fit]]
+  * kernel's fits (HITS, k-means, PCA) need no scope: each step is an RDD
+  * job over cached blocks and plans no query.
   *
   * Why this is the scale-honest choice and not a local-mode hack: an
   * iterative operator runs the SAME two-stage plan every round over a

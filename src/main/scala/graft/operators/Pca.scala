@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,14 +10,15 @@ import graft.functions.vecnative
   * — the dimensionality-reduction / whitening primitive (top PC scores
   * drive outlier pruning and cheap 1-d indexing of embedding spaces).
   *
-  * Each iteration is ONE corpus aggregate: with the current direction
-  * vₜ broadcast as a literal, every row contributes x·(x·vₜ) and the
-  * per-dimension sums are taken in EXACT fixed-point arithmetic
+  * The (deflated) vectors are cached once as [[Fit]] blocks, and each
+  * iteration is ONE Spark job and no query plan ([[powerStep]]): with
+  * the current direction vₜ broadcast, every row contributes x·(x·vₜ)
+  * and the per-dimension sums are taken in EXACT fixed-point arithmetic
   * ([[ExactSum]]: 6-dp terms as scaled longs — order-independent, the
   * same discipline as [[KMeans]] centroid means), so the fitted
   * direction is bit-stable under any partitioning.
-  * Only `dim` numbers ever reach the driver per iteration (bounded
-  * model fit, like the IVF/PQ codebooks). The final output is a pure
+  * Only `dim` numbers per task ever reach the driver per iteration
+  * (bounded model fit, like the IVF/PQ codebooks). The final output is a pure
   * projection: every vector's 6-dp-rounded score along the fitted
   * direction via the native codegen'd dot kernel.
   *
@@ -58,15 +60,38 @@ object Pca {
         (x, dv) => round(x - round(element_at(col("__vp"), 1) * dv, 6), 6)))
       .drop("__vp")
 
-  /** One power iteration's aggregate over the rounded vectors `e(v)`
-    * and the current direction `dir`: the exact scaled sums of
-    * round6(xᵢ·d) per component, d = round6(x·dir) the row's projection
-    * ([[ExactSum.vecSum]] weighted by d — one aggregate expression, and
-    * the projection is evaluated once per row, whatever `dim` is).
+  /** Σ x(o + i)·d(i) over `d`, in the native dot kernel's fold order. */
+  private def dot(x: Array[Double], o: Int, d: Array[Double]): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < d.length) { acc += x(o + i) * d(i); i += 1 }
+    acc
+  }
+
+  /** One power iteration, as one [[Fit.step]]: per row the projection
+    * d = round6(x·dir) (the dot kernel's sequential fold), then the exact
+    * sums of round6(xᵢ·d) per component and the row count; the next
+    * direction is the sums' 6-dp values over their norm, rounded to 6 dp.
     */
-  private[graft] def powerSums(e: DataFrame, dir: Seq[Double], dim: Int): DataFrame =
-    e.select(ExactSum.vecSum(col("v"), dim,
-      Some(round(vecnative.dot_product(col("v"), typedlit(dir)), 6))).as("s"))
+  private def powerStep(blocks: RDD[Array[Double]], dir: Seq[Double], dim: Int): Seq[Double] = {
+    val s = Fit.step(blocks, dir.toArray) { (x, d) =>
+      val s = new Array[Long](dim + 1) // the component sums, then the row count
+      var o = 0
+      while (o < x.length) {
+        val p = round6(dot(x, o, d))
+        var i = 0
+        while (i < dim) { s(i) = ExactSum.add(s(i), ExactSum.productTerm(x(o + i), p)); i += 1 }
+        s(dim) += 1
+        o += dim
+      }
+      s
+    }
+    require(s(dim) > 0, "power iteration needs at least one non-null embedding row")
+    val raw = (0 until dim).map(i => round6(ExactSum.toDouble(s(i))))
+    val nrm = math.sqrt(raw.map(x => x * x).sum) // ascending-index fold
+    require(nrm > 0, "power iteration collapsed to the zero vector")
+    raw.map(x => round6(x / nrm))
+  }
 
   /** The fitted unit direction after `iters` power iterations, over
     * vectors first deflated by the already-fitted `deflate` directions
@@ -77,50 +102,32 @@ object Pca {
     val base = embs
       .filter(col(idCol).isNotNull && col(vecCol).isNotNull)
       .select(transform(col(vecCol), x => round(x.cast("double"), 6)).as("v"))
-    // cache the (deflated) input across the power iterations — the
-    // standard iterative-ML pattern (each iteration is one aggregate
-    // job; without the persist every job re-reads and re-projects the
-    // source). MEMORY_AND_DISK: rows are dim doubles, and a 100 TB
-    // corpus spills rather than OOMs.
-    // repartition to one partition per core before the per-row work (the
-    // KMeans precedent): a small parquet arrives as one input split,
-    // which would run every deflation product and the whole aggregate on
-    // a single core, and more partitions than cores only add tasks. The
-    // exact sums are order-independent, so the exchange cannot move the
-    // result.
-    val e = deflate.foldLeft(base.repartition(base.sparkSession.sparkContext.defaultParallelism))(
-        (df, dir) => deflatedFrame(df, dir, "v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // spread over the cores before the per-row deflation: a small
+    // parquet arrives as one input split, which would run every
+    // deflation product on a single core
+    val e = deflate.foldLeft(base.repartition(embs.sparkSession.sparkContext.defaultParallelism))(
+      (df, dir) => deflatedFrame(df, dir, "v"))
+    // flat `dim`-component rows; one with a null element or of another
+    // length, whose projection is null, is left out
+    val blocks = Fit.blocks(e.queryExecution.toRdd, cutLineage = true) { it =>
+      val flat = Array.newBuilder[Double]
+      it.map(_.getArray(0)).filter(v => v.numElements() == dim && (0 until dim).forall(!v.isNullAt(_)))
+        .foreach(v => flat ++= v.toDoubleArray())
+      flat.result()
+    }
     try {
       var v: Seq[Double] = Seq.fill(dim)(round6(1.0 / math.sqrt(dim.toDouble)))
-      // each power iteration replays ONE fixed aggregate job over the
-      // cached deflated frame — nothing for AQE to discover, one
-      // blocking re-plan per iteration to skip (Iter scaladoc)
-      Iter.noAqe(embs.sparkSession) { for (_ <- 1 to iters) {
-        val sums = powerSums(e, v, dim).collect()(0).getList[java.lang.Long](0)
-        require(sums.get(0) != null,
-          "power iteration needs at least one non-null embedding row")
-        val raw = (0 until dim).map(i => round6(ExactSum.toDouble(sums.get(i))))
-        val nrm = math.sqrt(raw.map(x => x * x).sum) // ascending-index fold
-        require(nrm > 0, "power iteration collapsed to the zero vector")
-        v = raw.map(x => round6(x / nrm))
-      } }
+      for (_ <- 1 to iters) v = powerStep(blocks, v, dim)
       v
-    } finally e.unpersist()
+    } finally blocks.unpersist(blocking = false)
   }
 
   /** (id, pc1): every vector's score along the fitted first principal
-    * direction. The scoring pass is a single codegen'd projection.
+    * direction — [[pcaScores]] of one component.
     */
   def pc1Scores(embs: DataFrame, vecCol: String, idCol: String,
-                dim: Int, iters: Int = 3): DataFrame = {
-    val v = fitPc(embs, vecCol, idCol, dim, iters)
-    embs.filter(col(idCol).isNotNull && col(vecCol).isNotNull)
-      .select(col(idCol).cast("long").as("vec_id"),
-        round(vecnative.dot_product(
-          transform(col(vecCol), x => round(x.cast("double"), 6)), typedlit(v)), 6)
-          .as("pc1"))
-  }
+                dim: Int, iters: Int = 3): DataFrame =
+    pcaScores(embs, vecCol, idCol, dim, iters, nComponents = 1)
 
   /** (id, pc1, …, pcK): scores along the first `nComponents` principal
     * directions, each further direction fit by power iteration over

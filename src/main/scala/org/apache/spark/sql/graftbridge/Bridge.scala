@@ -53,6 +53,12 @@ object Bridge {
       state.catalog.defaultTablePath(state.sqlParser.parseTableIdentifier(table)))
   }
 
+  /** A relation scanned from an RDD of Spark's internal rows. */
+  def internalFrame(spark: org.apache.spark.sql.SparkSession,
+                    rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+                    schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].internalCreateDataFrame(rows, schema)
+
   /** `df`'s rows as Spark's internal rows, typed as the `RDD[Row]` a
     * relation whose `needConversion` is false returns from its scan.
     */

@@ -10,10 +10,10 @@ import graft.functions.VectorKernels.round6
 import graft.operators.{ExactSum, Graph, KMeans}
 
 /** The exact scaled-long sum against the `decimal(25,12)` formulas it
-  * replaced, in the style of PcaSpec: the k-means centroid update and
-  * the driver-side HITS half-step, over random 6-dp inputs with
-  * negative values and magnitudes near the headroom bound, and the
-  * headroom `require`.
+  * replaced, in the style of PcaSpec: the [[graft.operators.Fit]]
+  * kernel's k-means Lloyd step and HITS half-step, over random 6-dp
+  * inputs with negative values and magnitudes near the headroom bound,
+  * and the headroom `require`, in a task and in the driver's merge.
   */
 class ExactSumSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -51,7 +51,8 @@ class ExactSumSpec extends AnyFunSuite {
     }
     val e = rows.toDF("vec_id", "v").repartition(3)
     val cents = (0 until 5).map(c => c -> rows(c * 37)._2)
-    val got = KMeans.centroids(KMeans.lloydSums(e, cents, dim).collect(), dim)
+    val blocks = KMeans.vectorBlocks(e)
+    val got = try KMeans.lloydStep(blocks, cents, dim) finally blocks.unpersist()
 
     // the former step: exact decimal sums, the decimal's double over n,
     // rounded HALF_UP to 6 dp
@@ -134,20 +135,29 @@ class ExactSumSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](ExactSum.term(2.0e9))
     assert(ExactSum.add(ExactSum.MaxSum - 1, 1L) == ExactSum.MaxSum)
 
-    // ten components of 1e9 sum to 1e10 > 2^53 / 1e6 ≈ 9.007e9: the
-    // executor's require fails the aggregate
-    val e = (0L until 10L).map(i => (i, Seq(1.0e9, 1.0))).toDF("vec_id", "v")
-    val err = intercept[Exception](e.agg(ExactSum.vecSum(col("v"), 2)).collect())
-    assert(rejectedByHeadroom(err), s"not a headroom rejection: $err")
+    // ten components of 1e9 sum to 1e10 > 2^53 / 1e6 ≈ 9.007e9: a Lloyd
+    // step whose one cell holds all ten fails, in the task of the block
+    // that holds all ten (every row in one of the input's partitions),
+    // and in the driver's merge when no block holds more than four
+    val cores = spark.sparkContext.defaultParallelism
+    val vecs = (0L until 10L).map(i => (i, Seq(1.0e9, 1.0))).toDF("vec_id", "v")
+    val cent = Seq(0 -> Seq(1.0, 0.0))
+    for (parts <- Seq(vecs.repartition(cores, lit(0)), vecs.repartition(5))) {
+      val blocks = KMeans.vectorBlocks(parts)
+      val err = try intercept[Exception](KMeans.lloydStep(blocks, cent, 2))
+      finally blocks.unpersist()
+      assert(rejectedByHeadroom(err), s"not a headroom rejection: $err")
+    }
     // nine stay inside it
-    assert(e.limit(9).agg(ExactSum.vecSum(col("v"), 2)).head().getSeq[Long](0) ==
-      Seq(9000000000000000L, 9000000L))
+    val nine = KMeans.vectorBlocks(vecs.limit(9))
+    try assert(KMeans.lloydStep(nine, cent, 2) == Seq(0 -> Seq(1.0e9, 1.0)))
+    finally nine.unpersist()
 
     // a HITS node whose raw sum passes the headroom fails the half-step:
     // in the task that sums all ten of its edges, and in the driver's
     // merge when no task holds more than four of them
     val edges = (0L until 10L).map(i => (i, 100L)).toDF("src", "dst")
-    for (parts <- Seq(edges.coalesce(1), edges.repartition(5))) {
+    for (parts <- Seq(edges.repartition(cores, lit(0)), edges.repartition(5))) {
       val g = Graph.HitsGraph(parts)
       val hitsErr = try intercept[Exception](
         Graph.hitsHalfStep(g, Array.fill(g.hubs.length)(1.0e9), toAuth = true))

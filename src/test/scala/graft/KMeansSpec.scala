@@ -44,4 +44,34 @@ class KMeansSpec extends AnyFunSuite {
     // identical vectors all share one cell
     assert(out.select("cell_id").distinct().count() == 1)
   }
+
+  test("the result recomputes from its source once its pinned copy is dropped") {
+    // the fit's cached vector blocks are released once the result is
+    // pinned; a dropped (evicted or lost) pinned copy must recompute
+    // through them from the source, not fail on the released blocks
+    val out = KMeans.sphericalKMeans(planted, "embedding", "vec_id", k = 2, iters = 2)
+    val first = out.collect().toSet
+    out.unpersist(blocking = true)
+    assert(out.collect().toSet == first)
+  }
+
+  test("a malformed vector stays on the floor and counts toward no centroid") {
+    // two 4-d clusters, a pair near a third axis, and two malformed
+    // vectors: one of 2 elements and one with a null element
+    val good = (1 to 4).map(i => (i.toLong, Seq(1.0, 0.1 * i, 0.0, 0.0))) ++
+      (5 to 6).map(i => (i.toLong, Seq(0.1, 1.0, 0.0, 0.05 * i))) ++
+      (7 to 10).map(i => (i.toLong, Seq(0.0, 0.0, 1.0, 0.1 * i)))
+    val bad = Seq(11L -> Seq(Some(0.0), Some(1.0)), 12L -> Seq(Some(0.5), None, Some(0.5), Some(0.0)))
+    val goodDf = good.map { case (i, v) => (i, v.map(Option(_))) }.toDF("vec_id", "embedding")
+    def fit(df: org.apache.spark.sql.DataFrame) =
+      KMeans.sphericalKMeans(df, "embedding", "vec_id", k = 2, iters = 2)
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    val out = fit(goodDf.union(bad.toDF("vec_id", "embedding")))
+    // the malformed vectors keep the floor
+    assert(out(11L) == (Int.MaxValue.toLong, Double.NegativeInfinity))
+    assert(out(12L) == (Int.MaxValue.toLong, Double.NegativeInfinity))
+    // and the well-formed ones are assigned as if they were absent: no
+    // phantom cell Int.MaxValue made of the malformed vectors' sums
+    assert(out -- Seq(11L, 12L) == fit(goodDf), s"assignment moved:\n$out")
+  }
 }

@@ -16,6 +16,37 @@ class PcaSpec extends AnyFunSuite {
 
   private val dim = 16
 
+  private def round6(x: Double) = graft.functions.VectorKernels.round6(x)
+
+  /** Rounds to 6 dp in `mode`, as Spark's `round` does in HALF_UP. */
+  private def round6In(mode: java.math.RoundingMode)(x: Double) =
+    java.math.BigDecimal.valueOf(x).setScale(6, mode).doubleValue()
+
+  /** `iters` power iterations over the rounded `vecs`, replayed in the
+    * driver with exact decimal sums: the projection is an ascending
+    * fold, every committed rounding point HALF_UP 6-dp, and each sum of
+    * round6(x_i · round6(x·v)) an exact BigDecimal (the former
+    * decimal(25,12) semantics).
+    */
+  private def decimalReplay(vecs: Seq[Seq[Double]], d: Int, iters: Int): Seq[Double] = {
+    var v = Seq.fill(d)(round6(1.0 / math.sqrt(d.toDouble)))
+    for (_ <- 1 to iters) {
+      val sums = Array.fill(d)(java.math.BigDecimal.ZERO)
+      vecs.foreach { x =>
+        val proj = round6(x.zip(v).map(t => t._1 * t._2).sum)
+        (0 until d).foreach { i =>
+          sums(i) = sums(i).add(new java.math.BigDecimal(
+            java.math.BigDecimal.valueOf(round6(x(i) * proj)).setScale(6,
+              java.math.RoundingMode.HALF_UP).toPlainString))
+        }
+      }
+      val raw = (0 until d).map(i => round6(sums(i).doubleValue()))
+      val nrm = math.sqrt(raw.map(x => x * x).sum)
+      v = raw.map(x => round6(x / nrm))
+    }
+    v
+  }
+
   test("fitPc1 recovers a planted dominant direction") {
     val rnd = new Random(7)
     val u = {
@@ -67,8 +98,9 @@ class PcaSpec extends AnyFunSuite {
   }
 
   test("the long-sum power-iteration aggregate is bit-identical to an exact decimal reference") {
-    // fitPc's per-dimension sums are longs of round6(term)·1e6 — this
-    // pins that one full iteration equals an exact BigDecimal replay
+    // fitPc's per-dimension sums are longs of round6(term)·1e6, taken by
+    // one Fit kernel step (Pca.powerStep) — this pins that one full
+    // iteration equals an exact BigDecimal replay
     // of the SAME 6-dp contract in the driver (the former
     // decimal(25,12) semantics), component for component, including
     // inputs near half-ulp boundaries where a truncating cast would
@@ -82,28 +114,44 @@ class PcaSpec extends AnyFunSuite {
         case g               => g * 3.7
       }))
     }
-    val df = rows.toDF("vec_id", "embedding")
+    // plus a row with a null element and a row of another length: the
+    // projection of each is null, so neither may enter the sums
+    val df = rows.toDF("vec_id", "embedding").union(Seq(
+      (1000L, Seq.tabulate[Option[Double]](d)(j => if (j == 3) None else Some(5.0))),
+      (1001L, Seq[Option[Double]](Some(7.0), Some(7.0)))).toDF("vec_id", "embedding"))
     val fitted = Pca.fitPc(df, "embedding", "vec_id", d, iters = 1)
 
-    def round6(x: Double) = graft.functions.VectorKernels.round6(x)
-    val vecs = rows.map(_._2.map(round6)) // the base projection's 6-dp cast
-    val v0 = Seq.fill(d)(round6(1.0 / math.sqrt(d.toDouble)))
-    // exact decimal sums of round6(x_i · round6(x·v0)) — ascending fold
-    // for the dot, HALF_UP 6-dp at every committed rounding point
-    val sums = Array.fill(d)(java.math.BigDecimal.ZERO)
-    vecs.foreach { v =>
-      val proj = round6(v.zip(v0).map(t => t._1 * t._2).sum)
-      (0 until d).foreach { i =>
-        sums(i) = sums(i).add(new java.math.BigDecimal(
-          java.math.BigDecimal.valueOf(round6(v(i) * proj)).setScale(6,
-            java.math.RoundingMode.HALF_UP).toPlainString))
-      }
-    }
-    val raw = (0 until d).map(i => round6(sums(i).doubleValue()))
-    val nrm = math.sqrt(raw.map(x => x * x).sum)
-    val expect = raw.map(x => round6(x / nrm))
+    val expect = decimalReplay(rows.map(_._2.map(round6)), d, iters = 1) // the base projection's 6-dp cast
     assert(fitted == expect,
       s"long-sum fit diverged from the exact decimal reference:\n$fitted\n$expect")
+  }
+
+  test("the deflated power iteration is bit-identical to a replay of the 6-dp deflation") {
+    // fitPc deflates in SQL (the scoring's deflatedFrame) and sums on
+    // the Fit kernel; this pins two deflations and two iterations
+    // against a driver replay of x <- round6(x - round6(p*dir)),
+    // p = round6(x.dir). The directions are binary fractions, so every
+    // product of a 6-dp projection lands on or next to a 7th-digit half.
+    val d = 8
+    val rnd = new Random(131)
+    val rows = (1L to 203L).map(i => (i, Seq.fill(d)(math.rint(rnd.nextGaussian() * 3e6) / 1e6)))
+    val dirs = Seq(Seq(0.5, -0.5, 0.5, -0.5, 0.25, 0.25, 0.125, -0.375),
+      Seq(0.125, 0.625, -0.25, 0.5, -0.5, 0.0, 0.375, 0.25))
+    val fitted = Pca.fitPc(rows.toDF("vec_id", "embedding"), "embedding", "vec_id", d,
+      iters = 2, deflate = dirs)
+
+    def deflated(r: Double => Double) = rows.map(_._2.map(round6)).map { x0 =>
+      dirs.foldLeft(x0) { (x, dir) =>
+        val p = round6(x.zip(dir).map(t => t._1 * t._2).sum)
+        x.zip(dir).map { case (xi, di) => r(xi - r(p * di)) }
+      }
+    }
+    val expect = decimalReplay(deflated(round6In(java.math.RoundingMode.HALF_UP)), d, iters = 2)
+    assert(fitted == expect,
+      s"deflated fit diverged from the 6-dp replay:\n$fitted\n$expect")
+    // the inputs do sit on the boundaries: rounding the deflation's
+    // halves to even instead moves the fit
+    assert(decimalReplay(deflated(round6In(java.math.RoundingMode.HALF_EVEN)), d, iters = 2) != expect)
   }
 
   test("pc1Scores is deterministic and scores scale with the planted coefficient") {

@@ -28,21 +28,23 @@ class PlanSpec extends AnyFunSuite {
     .map(i => (i, s"tok$i words here", if (i % 4 == 0) "web" else "books"))
     .toDF("doc_id", "text", "source")
 
-  test("a Lloyd step and a power iteration each plan a fixed number of " +
-      "aggregate expressions, whatever dim is") {
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    // per aggregate node (partial, final): how many aggregate expressions
-    def aggExprs(df: DataFrame): Seq[Int] =
-      df.queryExecution.sparkPlan.collect { case a: BaseAggregateExec => a.aggregateExpressions.size }
-    for (dim <- Seq(4, 64)) {
-      val e = (0L until 50L).map(i => (i, Seq.tabulate(dim)(j => ((i + j) % 7 - 3).toDouble)))
-        .toDF("vec_id", "v")
-      val cents = Seq(0 -> Seq.fill(dim)(1.0), 1 -> Seq.tabulate(dim)(j => if (j % 2 == 0) 1.0 else -1.0))
-      // a count and one array-valued exact sum, where dim + 1 sums planned
-      assert(aggExprs(KMeans.lloydSums(e, cents, dim)) == Seq(2, 2), s"Lloyd step at dim $dim")
-      // one weighted array-valued exact sum, where dim sums planned
-      assert(aggExprs(Pca.powerSums(e, Seq.fill(dim)(0.125), dim)) == Seq(1, 1),
-        s"power iteration at dim $dim")
+  test("a Lloyd step and a power iteration each add one Spark job and no SQL execution") {
+    import org.apache.spark.graftbridge.JobCounter.{executionsOf, jobsOf}
+    // each step is one job over the cached vector blocks; the build, the
+    // init and the final assignment cost the same whatever iters is
+    val dim = 8
+    val e = (0L until 60L).map(i => (i, Seq.tabulate(dim)(j => ((i + j) % 7 - 3).toDouble)))
+      .toDF("vec_id", "v")
+    val fits: Seq[(String, Int => Unit)] = Seq(
+      "Lloyd step" -> (iters => KMeans.sphericalKMeans(e, "v", "vec_id", k = 3, iters = iters).collect(): Unit),
+      "power iteration" -> (iters => Pca.fitPc(e, "v", "vec_id", dim, iters): Unit))
+    for ((name, fit) <- fits) {
+      def counts(iters: Int) =
+        (jobsOf(spark.sparkContext)(fit(iters)), executionsOf(spark.sparkContext)(fit(iters)))
+      val (jobs2, sql2) = counts(2)
+      val (jobs3, sql3) = counts(3)
+      assert(jobs3 == jobs2 + 1, s"$name: iters = 2 ran $jobs2 jobs, iters = 3 ran $jobs3")
+      assert(sql3 == sql2, s"$name: iters = 2 started $sql2 SQL executions, iters = 3 $sql3")
     }
   }
 

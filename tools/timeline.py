@@ -17,13 +17,13 @@ the first job). Under each execution, one line per job:
     job <id>  start  duration  tasks  run  deserialize
 
 with `run` and `deserialize` the summed executor run time and executor
-deserialize time of the job's tasks, in milliseconds. Jobs that belong to
-no SQL execution (RDD actions, such as `Graph.hits`' half-steps) are listed
-at the end, each with its call site: the name of its result stage, the
-stage of highest id in its `SparkListenerJobStart`, for example
-`reduce at Graph.scala:991`. `--match` keeps only the executions whose
-description, and the jobs outside them whose call site, contains TEXT (for
-example `KMeans.scala`).
+deserialize time of the job's tasks, in milliseconds. A job that belongs to
+no SQL execution (an RDD action, such as a step of the `Fit` kernel) is
+printed unindented, in start order among the executions, with its call
+site: the name of its result stage, the stage of highest id in its
+`SparkListenerJobStart`, for example `reduce at Fit.scala:48`. `--match`
+keeps only the executions whose description, and the jobs outside them
+whose call site, contains TEXT (for example `KMeans.scala`).
 
 To take an event log from a benchmark run (Spark needs <dir> to exist):
 
@@ -131,32 +131,31 @@ def main():
     def ms(a, b):
         return f"{b - a:7d}" if a is not None and b is not None else "      ?"
 
-    def job_line(jid):
+    def job_line(jid, indent):
         j = jobs[jid]
         # tasks: the tasks that ran; a stage skipped from an earlier job's
         # shuffle output is counted in the job's stages but runs none
-        return (f"    job {jid:<5d} {(j['start'] - t0) / 1000:9.3f} {ms(j['start'], j['end'])}"
+        return (f"{indent}job {jid:<5d} {(j['start'] - t0) / 1000:9.3f} {ms(j['start'], j['end'])}"
                 f" {j['done']:6d} {j['run']:7d} {j['deser']:7d}")
 
     out = sys.stdout
     out.write(f"{'':8s} {'start_s':>9s} {'dur_ms':>7s} {'wait_ms':>7s} {'jobs':>4s}  description\n")
     out.write(f"{'':10s} {'start_s':>9s} {'dur_ms':>7s} {'tasks':>6s} {'run_ms':>7s} {'deser_ms':>7s}\n")
-    for sid in sorted(sqls, key=lambda k: sqls[k]["start"]):
-        s = sqls[sid]
-        if a.match and a.match not in s["description"]:
+    # executions and the jobs outside them, merged in start order
+    rows = [(s["start"], 0, sid) for sid, s in sqls.items()
+            if not a.match or a.match in s["description"]]
+    rows += [(j["start"], 1, jid) for jid, j in jobs.items()
+             if j["sql"] not in sqls and (not a.match or a.match in j["site"])]
+    for _, kind, key in sorted(rows):
+        if kind == 1:
+            out.write(f"{job_line(key, '')}  {jobs[key]['site']}\n")
             continue
+        s = sqls[key]
         first = min((jobs[j]["start"] for j in s["jobs"]), default=None)
-        out.write(f"sql {sid:<4d} {(s['start'] - t0) / 1000:9.3f} {ms(s['start'], s['end'])}"
+        out.write(f"sql {key:<4d} {(s['start'] - t0) / 1000:9.3f} {ms(s['start'], s['end'])}"
                   f" {ms(s['start'], first)} {len(s['jobs']):4d}  {s['description']}\n")
         for jid in sorted(s["jobs"]):
-            out.write(job_line(jid) + "\n")
-    orphans = sorted(j for j, v in jobs.items()
-                     if v["sql"] not in sqls and (not a.match or a.match in v["site"]))
-    if orphans:
-        out.write("jobs outside any SQL execution\n")
-        for jid in orphans:
-            out.write(f"{job_line(jid)}  {jobs[jid]['site']}\n")
-
+            out.write(job_line(jid, "    ") + "\n")
 
 if __name__ == "__main__":
     main()
