@@ -76,17 +76,23 @@ object Jobs {
   }
 
   /** Daily merge (`pipelines/daily_data_handler.py`): merge one day of
-    * events into `<table>_daily`, rewritten as a new table version.
+    * events into `<table>_daily`, a merge-on-read table ([[MergeOnRead]])
+    * as the history table is. The history merge truncates it, so a day's
+    * first merge rewrites it whole (its base holds no rows); a later merge
+    * before the next truncation appends its batch as a delta while the log
+    * stays within [[MergeOnRead.Alpha]] of the base.
     */
   def dailyMerge(spark: SparkSession, spec: TableSpec, ds: LocalDate): Unit =
     readDayEvents(spark, spec, ds).foreach { events =>
       withBatch(spark, spec, events) { (routed, n, limit) =>
-        val existing =
-          if (Lake.tableExists(spark, spec.dailyTable)) spark.table(spec.dailyTable)
-          else CdcOps.emptyLike(routed.inserts)
-        val merged = CdcOps.mergeBatch(existing, routed, spec.primaryKeys, spec.orderColumns,
-          tombstonesBeyondBroadcast = n > limit, expectedKeys = n)
-        Lake.overwriteTableSafely(merged, spec.dailyTable, format = spec.format)
+        if (Lake.tableExists(spark, spec.dailyTable))
+          MergeOnRead.mergeTable(spark, spec.dailyTable, routed, n, limit,
+            spec.primaryKeys, spec.orderColumns, spec.format)
+        else
+          MergeOnRead.createTable(spark, spec.dailyTable,
+            CdcOps.mergeBatch(CdcOps.emptyLike(routed.inserts), routed, spec.primaryKeys,
+              spec.orderColumns, tombstonesBeyondBroadcast = n > limit, expectedKeys = n),
+            spec.primaryKeys, spec.format)
       }
     }
 
@@ -134,7 +140,7 @@ object Jobs {
                 spec.primaryKeys, spec.format)
             }.isDefined
         if (wrote && Lake.tableExists(spark, spec.dailyTable))
-          Lake.truncateTable(spark, spec.dailyTable)
+          MergeOnRead.truncate(spark, spec.dailyTable, spec.primaryKeys, spec.format)
     }
   }
 

@@ -1,15 +1,13 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.CatalogTable
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType, TimestampType}
 
-/** Lake-layer IO: partitioned file writes, catalog tables, versioned
-  * overwrite. Covers SURVEY §2.1 S5, S6, S8, S9, S10.
+/** Lake-layer IO: partitioned file writes and reads, the catalog's
+  * existence probe and the increment-mode append. Covers SURVEY §2.1 S5,
+  * S6, S8, S9; the keyed catalog tables, their overwrite (S8) and their
+  * truncation (S10) are [[MergeOnRead]]'s.
   */
 object Lake {
 
@@ -143,137 +141,12 @@ object Lake {
       spark.createDataFrame(java.util.Collections.emptyList[Row](), rawSchema)
     else spark.read.format(format).schema(rawSchema).option("basePath", root).load(path)
 
-  /** S9/S10 — catalog helpers (public Scala APIs; the reference needed a
-    * private `_jsparkSession` bridge only because of its PySpark
-    * version, `daily_data_handler.py:160-162`).
+  /** S9 — the catalog's existence probe (a public Scala API; the
+    * reference needed a private `_jsparkSession` bridge only because of
+    * its PySpark version, `daily_data_handler.py:160-162`).
     */
   def tableExists(spark: SparkSession, table: String): Boolean =
     spark.catalog.tableExists(table)
-
-  def refreshTable(spark: SparkSession, table: String): Unit =
-    spark.catalog.refreshTable(table)
-
-  /** S10 — empty the table (`daily_data_handler.py:157-158`) by
-    * committing an empty version: an empty `__v<n+1>` directory, committed
-    * as [[overwriteTableSafely]] commits a written one, with the table's
-    * current schema, format and partitioning. No job runs. That works on
-    * the external tables a schema-changing commit registers, where Spark
-    * refuses `TRUNCATE TABLE`, and it is crash-safe the same way.
-    */
-  def truncateTable(spark: SparkSession, table: String): Unit = {
-    val current = Bridge.catalogTable(spark, table)
-    val to = nextVersion(new Path(current.location))
-    val fs = to.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(to, true) // the partial directory of a failed write, if any
-    require(fs.mkdirs(to), s"truncateTable: cannot create $to")
-    commitVersion(spark, table, current, to, current.schema,
-      current.partitionColumnNames, current.provider.getOrElse("parquet"))
-  }
-
-  /** S8 — overwrite of a catalog table whose current contents feed
-    * the new plan. The reference works around Spark's cannot-overwrite-
-    * what-you-read restriction with a two-phase tmp-table dance
-    * (`daily_data_handler.py:125-155`: write tmp → refresh → read back →
-    * overwrite real → TRUNCATE tmp) — non-atomic across three jobs.
-    *
-    * Here each overwrite commits a new version. The table's current
-    * catalog location `<root>` or `<root>__v<n>` stays untouched while
-    * `df` (which may read it) is written to `<root>__v<n+1>`; then
-    * [[commitVersion]] points the catalog there and deletes the older
-    * versions. No copy of the data, no drop before the write. A write
-    * that fails leaves the table on version n; its partial directory is
-    * replaced by the next attempt. A table that does not exist yet is
-    * created with `saveAsTable`.
-    */
-  def overwriteTableSafely(df: DataFrame, table: String,
-                           partitionBy: Seq[String] = Nil,
-                           format: String = "parquet"): Unit = {
-    val spark = df.sparkSession
-    val w = df.write.format(format)
-    val writer = if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w
-    if (!tableExists(spark, table)) writer.saveAsTable(table)
-    else {
-      val current = Bridge.catalogTable(spark, table)
-      val to = nextVersion(new Path(current.location))
-      writer.mode(SaveMode.Overwrite).save(to.toString)
-      commitVersion(spark, table, current, to, df.schema, partitionBy, format)
-    }
-  }
-
-  /** Make the written version `to` the table's contents, then delete every
-    * older version directory of the table: version n, and any a crash
-    * between an earlier repoint and its delete left behind.
-    *
-    * The repoint is one atomic `SET LOCATION` while the schema, format
-    * and (absent) partitioning stay the same. Otherwise the table is
-    * re-registered over `to` ([[register]]). A table literally named
-    * `<t>__v<k>` in the same database would collide with `<t>`'s versions.
-    */
-  private def commitVersion(spark: SparkSession, table: String, current: CatalogTable,
-                            to: Path, schema: StructType, partitionBy: Seq[String],
-                            format: String): Unit = {
-    val sameShape = partitionBy.isEmpty && current.partitionColumnNames.isEmpty &&
-      current.provider.contains(format) &&
-      DataTypeUtils.equalsIgnoreNullability(current.schema, schema)
-    if (sameShape) spark.sql(s"ALTER TABLE $table SET LOCATION ${quoted(to)}")
-    else register(spark, table, to, schema, partitionBy, format)
-    deleteOlderVersions(spark, to)
-  }
-
-  /** (Re-)register `table` as an external table of `provider` over
-    * `location`, with `schema` and `partitionBy`. An existing entry is
-    * dropped first (a managed table's drop deletes its directory, which
-    * a caller has already superseded), so for a moment the name is
-    * unregistered while the data stays on disk.
-    */
-  private[sources] def register(spark: SparkSession, table: String, location: Path,
-                                schema: StructType, partitionBy: Seq[String],
-                                provider: String): Unit = {
-    if (tableExists(spark, table)) spark.sql(s"DROP TABLE $table")
-    val partitioned =
-      if (partitionBy.isEmpty) ""
-      else partitionBy.map(c => s"`$c`").mkString("PARTITIONED BY (", ", ", ")")
-    val ordered = StructType(schema.filterNot(f => partitionBy.contains(f.name)) ++
-      partitionBy.map(schema(_)))
-    spark.sql(s"CREATE TABLE $table (${ordered.toDDL}) " +
-      s"USING $provider $partitioned LOCATION ${quoted(location)}")
-    if (partitionBy.nonEmpty) spark.catalog.recoverPartitions(table)
-  }
-
-  private def quoted(p: Path): String =
-    "'" + p.toString.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-  /** Delete every version directory of `to`'s table older than `to`. */
-  private[sources] def deleteOlderVersions(spark: SparkSession, to: Path): Unit = {
-    val (root, n) = version(to)
-    val fs = to.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(to.getParent).map(_.getPath)
-      .filter(p => version(p) match { case (r, k) => r == root && k < n })
-      .foreach(fs.delete(_, true))
-  }
-
-  /** The catalog's default location for `table`, or the first version of
-    * it that does not exist (a dropped external table leaves its
-    * directory behind).
-    */
-  private[sources] def freshLocation(spark: SparkSession, table: String): Path = {
-    val default = Bridge.defaultTablePath(spark, table)
-    val fs = default.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Iterator.iterate(default)(nextVersion).find(!fs.exists(_)).get
-  }
-
-  private val Versioned = "(.*)__v(\\d+)".r
-
-  /** `<root>` is version 0 of `<root>`, `<root>__v<n>` version n. */
-  private def version(p: Path): (String, Long) = p.getName match {
-    case Versioned(root, n) => (root, n.toLong)
-    case root => (root, 0L)
-  }
-
-  /** The directory of the version after `p`'s: `<root>__v<n+1>`. */
-  private[sources] def nextVersion(p: Path): Path = version(p) match {
-    case (root, n) => new Path(p.getParent, s"${root}__v${n + 1}")
-  }
 
   /** S8 — plain append `saveAsTable` (increment mode,
     * `history_data_handler.py:146-155`). AQE coalesces output

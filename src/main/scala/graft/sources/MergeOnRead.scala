@@ -12,12 +12,15 @@ import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.sources.{BaseRelation, SchemaRelationProvider, TableScan}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
 import graft.ops.CdcOps
 
 /** A keyed replica kept merge-on-read: a row-distinct base plus a log of
-  * per-day deltas, so a day writes its batch and not the replica.
+  * per-day deltas, so a day writes its batch and not the replica. Both
+  * catalog tables of the pipeline, `<table>_daily` and `<table>_history`,
+  * are kept this way, and this module alone decides where a table's files
+  * live and how a new state of it is committed.
   *
   * Under the table's location `<root>`:
   *  - `base-<n>`: the base, written by the commit with id n;
@@ -42,9 +45,14 @@ import graft.ops.CdcOps
   * later delta's R holds an equal row (null-safe on every column, missing
   * columns null-padded, as `mergeBatch` compares rows).
   *
-  * [[compact]] is the only step that rewrites the base: it runs
-  * `mergeBatch` over the merged read and the day's batch, commits the
-  * result as the new base and deletes what it supersedes.
+  * [[compact]] rewrites the base: it runs `mergeBatch` over the merged
+  * read and the day's batch, commits the result as the new base and
+  * deletes what it supersedes. [[truncate]] commits an empty base the
+  * same way, with no job.
+  *
+  * A table's root stays where it is created: a commit, a truncation
+  * included, never moves the catalog entry. Only a table an older version
+  * wrote moves, once, to a new root when it is converted.
   */
 object MergeOnRead {
 
@@ -221,9 +229,8 @@ object MergeOnRead {
     rebase(spark, root, m, CdcOps.mergeBatch(read(spark, root, m), routed, m.keys, orderColumns,
       tombstonesBeyondBroadcast = events > limit, expectedKeys = events))
 
-  /** Commit `rows` as the base of the commit after `m`, then delete every
-    * other directory and every older manifest entry under `root`. The row
-    * count comes from the write itself, no job of its own.
+  /** Commit `rows` as the base of the commit after `m`. The row count
+    * comes from the write itself, no job of its own.
     */
   private def rebase(spark: SparkSession, root: String, m: Manifest, rows: DataFrame): Manifest = {
     val id = m.id + 1
@@ -233,13 +240,21 @@ object MergeOnRead {
     based.observe(counted, count(lit(1)).as("rows"))
       .write.mode(SaveMode.Overwrite).format(m.format).save(s"$root/$dir")
     val n = Await.result(counted.future, 1.minute).getAs[Long]("rows")
-    val next = commit(spark, root, Manifest(id, m.format, m.keys, Part(dir, n, based.schema), Nil))
+    commitBase(spark, root, m, Part(dir, n, based.schema))
+  }
+
+  /** Commit the written `base` as the base of the commit after `m`, then
+    * delete every other directory and every older manifest entry under
+    * `root`.
+    */
+  private def commitBase(spark: SparkSession, root: String, m: Manifest, base: Part): Manifest = {
+    val next = commit(spark, root, Manifest(m.id + 1, m.format, m.keys, base, Nil))
     val fsys = fs(spark, root)
     fsys.listStatus(new Path(root)).map(_.getPath)
-      .filterNot(p => p.getName == LogDir || p.getName == dir)
+      .filterNot(p => p.getName == LogDir || p.getName == base.dir)
       .foreach(fsys.delete(_, true))
     fsys.listStatus(new Path(root, LogDir)).map(_.getPath)
-      .filter(p => p.getName match { case Entry(k) => k.toLong < id; case _ => true })
+      .filter(p => p.getName match { case Entry(k) => k.toLong < next.id; case _ => true })
       .foreach(fsys.delete(_, false))
     next
   }
@@ -256,27 +271,25 @@ object MergeOnRead {
     * table, or its first free version beside it.
     */
   def createTable(spark: SparkSession, table: String, rows: DataFrame, keys: Seq[String],
-                  format: String): Unit = {
-    val root = Lake.freshLocation(spark, table)
-    val m = create(spark, root.toString, rows, keys, format)
-    Lake.register(spark, table, root, schema(spark, m), Nil, Provider)
-  }
+                  format: String): Unit =
+    createAt(spark, table, Bridge.defaultTablePath(spark, table), rows, keys, format)
 
   /** Merge a day's batch (`events` events, as routed) into `table`:
     * append it as a delta, or compact when [[needsCompaction]]. When a
     * delta widens the schema, the catalog entry is re-registered.
     *
     * A table an older version wrote (a plain parquet or ORC table) is
-    * converted by its first merge, through the compaction path: the
-    * merged rows become the base of a new root at the table's next
-    * version directory, and older versions are deleted.
+    * converted by its first merge, through the compaction path ([[createAt]]).
     */
   def mergeTable(spark: SparkSession, table: String, routed: CdcOps.Routed, events: Long,
                  limit: Long, keys: Seq[String], orderColumns: Seq[String],
                  format: String): Unit = {
     val current = Bridge.catalogTable(spark, table)
     val at = new Path(current.location)
-    if (current.provider.contains(Provider)) {
+    if (!current.provider.contains(Provider))
+      createAt(spark, table, nextVersion(at), CdcOps.mergeBatch(spark.table(table), routed, keys,
+        orderColumns, tombstonesBeyondBroadcast = events > limit, expectedKeys = events), keys, format)
+    else {
       val root = at.toString
       val m = latest(spark, root)
       val next =
@@ -284,14 +297,79 @@ object MergeOnRead {
         else append(spark, root, m, routed, events, orderColumns)
       val widened = schema(spark, next)
       if (!DataTypeUtils.equalsIgnoreNullability(current.schema, widened))
-        Lake.register(spark, table, at, widened, Nil, Provider)
-    } else {
-      val root = Lake.nextVersion(at)
-      val m = create(spark, root.toString, CdcOps.mergeBatch(spark.table(table), routed, keys,
-        orderColumns, tombstonesBeyondBroadcast = events > limit, expectedKeys = events), keys, format)
-      Lake.register(spark, table, root, schema(spark, m), Nil, Provider)
-      Lake.deleteOlderVersions(spark, root)
+        register(spark, table, at, widened)
     }
+  }
+
+  /** Empty `table` (`daily_data_handler.py:157-158`): commit an empty base
+    * directory that carries the table's current schema. No job runs and
+    * the catalog entry stays as it is. A table an older version wrote is
+    * converted, with no rows ([[createAt]]).
+    */
+  def truncate(spark: SparkSession, table: String, keys: Seq[String], format: String): Unit = {
+    val current = Bridge.catalogTable(spark, table)
+    val at = new Path(current.location)
+    if (!current.provider.contains(Provider))
+      createAt(spark, table, nextVersion(at), CdcOps.emptyLike(spark.table(table)), keys, format)
+    else {
+      val root = at.toString
+      val m = latest(spark, root)
+      val dir = new Path(root, s"base-${m.id + 1}")
+      val fsys = fs(spark, root)
+      fsys.delete(dir, true) // the partial write of a failed compaction, if any
+      require(fsys.mkdirs(dir), s"truncate: cannot create $dir")
+      commitBase(spark, root, m,
+        Part(dir.getName, 0, schema(spark, m).add(Generation, LongType, nullable = false)))
+    }
+  }
+
+  /** Write `rows` as the base of a new root, at `from` or the first
+    * version after it that does not exist (what a crash before
+    * [[register]] left behind is never reused), register `table` over it,
+    * then delete every older version directory of the root: the table's
+    * former location, and any root a crash left behind.
+    *
+    * This also converts a table an older version wrote at `at` (a plain
+    * parquet or ORC table at `<root>` or `<root>__v<n>`), from
+    * `from = nextVersion(at)`.
+    */
+  private def createAt(spark: SparkSession, table: String, from: Path, rows: DataFrame,
+                       keys: Seq[String], format: String): Unit = {
+    val fsys = fs(spark, from.toString)
+    val root = Iterator.iterate(from)(nextVersion).find(!fsys.exists(_)).get
+    val m = create(spark, root.toString, rows, keys, format)
+    register(spark, table, root, schema(spark, m))
+    val (name, n) = version(root)
+    fsys.listStatus(root.getParent).map(_.getPath)
+      .filter(p => version(p) match { case (r, k) => r == name && k < n })
+      .foreach(fsys.delete(_, true))
+  }
+
+  /** (Re-)register `table` as a merge-on-read table over `location`, with
+    * `schema`. An existing entry is dropped first (a managed table's drop
+    * deletes its directory, which the caller has already superseded), so
+    * for a moment the name is unregistered while the data stays on disk.
+    */
+  private def register(spark: SparkSession, table: String, location: Path, schema: StructType): Unit = {
+    if (spark.catalog.tableExists(table)) spark.sql(s"DROP TABLE $table")
+    val quoted = "'" + location.toString.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    spark.sql(s"CREATE TABLE $table (${schema.toDDL}) USING $Provider LOCATION $quoted")
+  }
+
+  private val Versioned = "(.*)__v(\\d+)".r
+
+  /** `<root>` is version 0 of `<root>`, `<root>__v<n>` version n. A table
+    * literally named `<t>__v<k>` in the same database would collide with
+    * `<t>`'s versions.
+    */
+  private def version(p: Path): (String, Long) = p.getName match {
+    case Versioned(root, n) => (root, n.toLong)
+    case root => (root, 0L)
+  }
+
+  /** The directory of the version after `p`'s: `<root>__v<n+1>`. */
+  private def nextVersion(p: Path): Path = version(p) match {
+    case (root, n) => new Path(p.getParent, s"${root}__v${n + 1}")
   }
 }
 

@@ -5,11 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** Forked-JVM main for the REAL-catalog e2e (see HiveCatalogSpec):
   * builds a Hive-backed session over a fresh embedded-Derby metastore
-  * and drives the S8–S10 catalog operators (`graft.sources.Lake`)
-  * against it — the reference's actual persistence surface
-  * (`daily_data_handler.py:130-155`, `history_data_handler.py:184-214`
-  * run saveAsTable/TRUNCATE/refresh against a Hive metastore, which
-  * the in-memory-catalog unit tests could only fake).
+  * and drives the S8–S10 catalog operators (`graft.sources.Lake`,
+  * `graft.sources.MergeOnRead`) against it — the reference's actual
+  * persistence surface (`daily_data_handler.py:130-155`,
+  * `history_data_handler.py:184-214` run saveAsTable/TRUNCATE/refresh
+  * against a Hive metastore, which the in-memory-catalog unit tests
+  * could only fake).
   *
   * Must be a separate JVM: `spark.sql.catalogImplementation` is fixed
   * in the per-context SharedState, so the suite's in-memory TestSpark
@@ -33,12 +34,13 @@ object HiveCatalogE2E {
       .enableHiveSupport()
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import graft.sources.Lake
+    import graft.ops.CdcOps
+    import graft.sources.{Lake, MergeOnRead}
     try {
       require(spark.conf.get("spark.sql.catalogImplementation") == "hive",
         "session did not come up Hive-backed")
       spark.sql("CREATE DATABASE graft_e2e")
-      val t = "graft_e2e.daily_events"
+      val t = "graft_e2e.increment_events"
       require(!Lake.tableExists(spark, t), "table must not pre-exist")
 
       // S8 append path (history increment, history_data_handler.py:146-155)
@@ -52,46 +54,50 @@ object HiveCatalogE2E {
       require(spark.table(t).count() == 200, "second append lost rows")
 
       // S10 refresh — must not invalidate subsequent reads
-      Lake.refreshTable(spark, t)
+      spark.catalog.refreshTable(t)
       require(spark.table(t).count() == 200, "refreshTable broke the read")
 
-      // S8 overwrite of a table from a plan READING that table — the
-      // reference's tmp-table dance, done as a versioned commit. The
-      // schema and partitioning change here, so the commit re-registers
-      // the table over its new version in the Hive metastore.
-      val folded = spark.table(t).filter(col("k") < 3)
-        .groupBy(col("k")).agg(count(lit(1)).as("n"))
-      Lake.overwriteTableSafely(folded, t)
-      val after = spark.table(t).orderBy(col("k"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      require(after == Seq((0L, 30L), (1L, 30L), (2L, 28L)),
-        s"overwriteTableSafely wrong contents: $after")
-
-      // S10 TRUNCATE (daily_data_handler.py:157-158) of the now
-      // external table: rows gone, table + schema still registered
-      Lake.truncateTable(spark, t)
-      require(spark.table(t).count() == 0, "TRUNCATE left rows")
-      require(Lake.tableExists(spark, t), "TRUNCATE dropped the table")
-
-      // S8 versioned commit with the schema unchanged on a managed
-      // table: the metastore entry is repointed to `<root>__v1` and the
-      // previous version's directory is deleted
-      val m = "graft_e2e.replica"
+      // the daily table's lifecycle (daily_data_handler.py:125-158), a
+      // merge-on-read table: created by day 1's merge, merged by day 2 in
+      // a compaction, whose plan reads the table itself (the reference's
+      // tmp-table dance), then truncated with its schema kept. The
+      // metastore entry never moves.
+      import spark.implicits._
+      import graft.jobs.Jobs
+      import graft.model.TableSpec
+      val lake = root.resolve("lake").toString
+      val spec = TableSpec("events", "graft_e2e", Seq("ID"), s"$lake/raw", s"$lake/ckpt", "topic")
+      def ingest(day: Int, ops: Seq[(String, Int)]): Unit =
+        Lake.appendPartitioned(CdcOps.withDatePartitions(ops.zipWithIndex.map { case ((op, id), i) =>
+          (java.sql.Timestamp.valueOf(f"2024-01-0$day 00:00:$i%02d"),
+            s"""{"ID":"$id","V":"d$day","__op":"$op","__deleted":"false"}""")
+        }.toDF("timestamp", "value")), spec.dataDir)
       def location(table: String) = new org.apache.hadoop.fs.Path(
         org.apache.spark.sql.graftbridge.Bridge.catalogTable(spark, table).location)
-      Lake.overwriteTableSafely(spark.range(0, 10).toDF("id"), m)
-      val v0 = location(m)
-      Lake.overwriteTableSafely(spark.table(m).where(col("id") < 5), m)
-      require(spark.table(m).count() == 5, "versioned overwrite wrong contents")
-      require(location(m).getName == s"${v0.getName}__v1", s"not repointed: ${location(m)}")
-      require(!v0.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(v0),
-        s"previous version $v0 left on disk")
+      def dailyRows(s: SparkSession) = s.table(spec.dailyTable).select("ID", "V").as[(String, String)]
+        .collect().toMap
+      ingest(1, (0 until 20).map("c" -> _))
+      Jobs.dailyMerge(spark, spec, java.time.LocalDate.of(2024, 1, 1))
+      val d = location(spec.dailyTable)
+      require(dailyRows(spark) == (0 until 20).map(i => s"$i" -> "d1").toMap, "day 1 not merged")
+      ingest(2, (0 until 5).map("u" -> _) ++ Seq("d" -> 5, "d" -> 6, "c" -> 20))
+      Jobs.dailyMerge(spark, spec, java.time.LocalDate.of(2024, 1, 2))
+      val want = (0 until 21).filterNot(Set(5, 6))
+        .map(i => s"$i" -> (if (i < 5 || i == 20) "d2" else "d1"))
+      require(dailyRows(spark) == want.toMap, s"daily merge wrong contents: ${dailyRows(spark)}")
+      require(MergeOnRead.latest(spark, d.toString).base.dir == "base-1", "day 2 did not compact")
+      val superseded = new org.apache.hadoop.fs.Path(d, "base-0")
+      require(!superseded.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(superseded),
+        "the superseded base is left on disk")
+      val schema = spark.table(spec.dailyTable).schema
+      MergeOnRead.truncate(spark, spec.dailyTable, spec.primaryKeys, spec.format)
+      require(spark.table(spec.dailyTable).count() == 0, "the truncation left rows")
+      require(spark.table(spec.dailyTable).schema == schema, "the truncation lost the schema")
+      require(location(spec.dailyTable) == d, s"the daily table moved: ${location(spec.dailyTable)}")
 
       // a merge-on-read table (the history layer): created over a base,
       // one day appended as a delta that adds a column (the metastore
       // entry is re-registered with the widened schema)
-      import graft.ops.CdcOps
-      import graft.sources.MergeOnRead
       val h = "graft_e2e.replica_history"
       val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
       MergeOnRead.createTable(spark, h, spark.range(0, 100)
@@ -117,7 +123,8 @@ object HiveCatalogE2E {
       // still sees the table (the property an in-memory catalog lacks)
       val s2 = spark.newSession()
       require(s2.catalog.tableExists(t), "table invisible to a new session")
-      require(s2.table(m).count() == 5, "new session reads a stale version")
+      require(s2.table(spec.dailyTable).count() == 0 && s2.table(spec.dailyTable).schema == schema,
+        "new session reads the truncated daily table differently")
       require(historyRows(s2) == merged, "new session reads the merge-on-read table differently")
 
       println("HIVE_E2E_OK")

@@ -7,7 +7,7 @@ import java.time.LocalDate
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.JobContext
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -202,10 +202,12 @@ class JobsSpec extends AnyFunSuite {
   private def rowsOf(df: DataFrame): Seq[String] =
     df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).sorted.toSeq
 
-  /** The LWW fold of every raw event, as the history layer names columns. */
-  private def foldOfAll(spec: TableSpec): DataFrame =
+  /** The LWW fold of every raw event, with the history layer's lowered
+    * column names unless `lowerNames` is false.
+    */
+  private def foldOfAll(spec: TableSpec, lowerNames: Boolean = true): DataFrame =
     CdcOps.foldMerge(Jobs.parseRaw(Lake.readAll(spark, spec.dataDir)
-      .drop(Lake.partitionColumns: _*), lowerNames = true).distinct(),
+      .drop(Lake.partitionColumns: _*), lowerNames).distinct(),
       spec.primaryKeys, spec.orderColumns)
 
   test("a payload column that appears on day 2 reaches the daily and the history table") {
@@ -289,48 +291,128 @@ class JobsSpec extends AnyFunSuite {
     assert(spark.read.parquet(partial.toString).where($"id" === "junk").isEmpty)
   }
 
+  /** `table` as an older version left it: `rows` as a plain parquet table
+    * at `<root>__v1`, registered with plain SQL, beside a stale `<root>`
+    * (version 0) that a crash after a repoint left behind. Returns
+    * `<root>__v1`.
+    */
+  private def legacyTable(table: String, rows: DataFrame): Path = {
+    val root = Bridge.defaultTablePath(spark, table)
+    val at = new Path(root.getParent, s"${root.getName}__v1")
+    rows.write.parquet(at.toString)
+    spark.sql(s"CREATE TABLE $table USING parquet LOCATION '$at'")
+    Seq(1).toDF("x").write.parquet(root.toString)
+    at
+  }
+
+  /** `table` is a merge-on-read table at version `n` of the root of `old`,
+    * and no other version directory of that root is left.
+    */
+  private def assertConverted(table: String, old: Path, n: Int): Unit = {
+    val now = location(table)
+    assert(Bridge.catalogTable(spark, table).provider.contains(MergeOnRead.Provider))
+    assert(now.getName == old.getName.replace("__v1", s"__v$n"))
+    assert(versionsOf(now) == Seq(now.getName))
+  }
+
   test("a history table an older version wrote as parquet is converted by its " +
       "first merge; its version directories are deleted") {
     val (spec, append) = freshLake("convert")
     append(day1)
-    val folded = foldOfAll(spec)
-    Lake.overwriteTableSafely(folded, spec.historyTable)
-    Lake.overwriteTableSafely(spark.table(spec.historyTable), spec.historyTable)
-    val old = location(spec.historyTable)
-    assert(old.getName.endsWith("__v1"), old)
-    val stale = new Path(old.getParent, old.getName.replace("__v1", "__v0"))
-    Seq(1).toDF("x").write.parquet(stale.toString)
-
+    val old = legacyTable(spec.historyTable, foldOfAll(spec))
     append(day2)
     Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 3))
-    val now = location(spec.historyTable)
-    assert(Bridge.catalogTable(spark, spec.historyTable).provider.contains(MergeOnRead.Provider))
-    assert(now.getName == old.getName.replace("__v1", "__v2"))
-    assert(versionsOf(now) == Seq(now.getName))
+    assertConverted(spec.historyTable, old, 2)
     assert(rowsOf(spark.table(spec.historyTable)) == rowsOf(foldOfAll(spec)))
   }
 
-  test("a history merge whose job commit fails leaves the replica intact; " +
-      "the rerun lands the batch") {
-    val (spec, append) = freshLake("crash")
-    append(Seq(envelope(ts(1, 1), "r", "1", "LOAN"), envelope(ts(1, 2), "c", "2", "CARD"),
-      envelope(ts(1, 3), "r", "3", "BOND")))
-    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill
-    val before = rowsOf(spark.table(spec.historyTable))
-    assert(before.size == 3)
-
-    append(Seq(envelope(ts(2, 4), "u", "1", "DEPOSIT"), envelope(ts(2, 3), "u", "1", "SAVINGS"),
-      envelope(ts(2, 5), "d", "2", null), envelope(ts(2, 6), "c", "4", "FX")))
-    // a session of its own, so no other suite's writes see the fault
-    val faulty = spark.newSession()
-    faulty.conf.set("spark.sql.sources.commitProtocolClass", classOf[FailingCommitProtocol].getName)
-    intercept[Exception](Jobs.historyMerge(faulty, spec, LocalDate.of(2024, 1, 3)))
-    assert(Lake.tableExists(spark, spec.historyTable), "the failed merge lost the replica")
-    assert(rowsOf(spark.table(spec.historyTable)) == before)
-
+  test("a conversion that crashed after committing its new root, before registering it, " +
+      "reruns at the next free version; every older version is deleted") {
+    val (spec, append) = freshLake("reconvert")
+    append(day1)
+    val old = legacyTable(spec.historyTable, foldOfAll(spec))
+    // the crash left the new root with its entry 0 committed, and the
+    // catalog on the old table
+    val crashed = new Path(old.getParent, old.getName.replace("__v1", "__v2"))
+    MergeOnRead.create(spark, crashed.toString, foldOfAll(spec), spec.primaryKeys, "parquet")
+    append(day2)
     Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 3))
+    assertConverted(spec.historyTable, old, 3)
     assert(rowsOf(spark.table(spec.historyTable)) == rowsOf(foldOfAll(spec)))
-    assert(spark.table(spec.historyTable).count() == 3)
+  }
+
+  test("a daily table an older version wrote as parquet is converted by its first " +
+      "daily merge; its version directories are deleted") {
+    val (spec, append) = freshLake("dailyconvert")
+    append(day1)
+    val old = legacyTable(spec.dailyTable, foldOfAll(spec, lowerNames = false))
+    append(day2)
+    Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 2))
+    assertConverted(spec.dailyTable, old, 2)
+    val daily = spark.table(spec.dailyTable).select($"ID", $"PRODUCT").as[(String, String)]
+      .collect().toMap
+    assert(daily == Map("1" -> "DEPOSIT", "2" -> "CARD2"))
+  }
+
+  test("a daily table an older version wrote as parquet is converted by its first " +
+      "truncation, which keeps its schema") {
+    val (spec, append) = freshLake("truncconvert")
+    append(day1)
+    val old = legacyTable(spec.dailyTable, foldOfAll(spec, lowerNames = false))
+    val schema = spark.table(spec.dailyTable).schema
+    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill, truncates daily
+    assertConverted(spec.dailyTable, old, 2)
+    assert(spark.table(spec.dailyTable).count() == 0)
+    assert(spark.table(spec.dailyTable).schema == schema)
+    append(day2)
+    Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 2))
+    assert(location(spec.dailyTable).getName == old.getName.replace("__v1", "__v2"))
+    val daily = spark.table(spec.dailyTable).select($"ID", $"PRODUCT").as[(String, String)]
+      .collect().toMap
+    assert(daily == Map("1" -> "DEPOSIT", "2" -> "CARD2"))
+  }
+
+  // Day 1 is in both tables when the stage's job commit fails on day 2,
+  // whose batch also brings a new column. The stage is the history merge
+  // of day 2 (which would truncate the daily table) or its daily merge.
+  Seq[(String, (SparkSession, TableSpec) => Unit)](
+    "history" -> ((s, spec) => Jobs.historyMerge(s, spec, LocalDate.of(2024, 1, 3))),
+    "daily" -> ((s, spec) => Jobs.dailyMerge(s, spec, LocalDate.of(2024, 1, 2)))
+  ).foreach { case (stage, merge) =>
+    test(s"a $stage merge whose job commit fails leaves the replica intact; " +
+        "the rerun lands the batch") {
+      val (spec, append) = freshLake(s"crash$stage")
+      append(Seq(envelope(ts(1, 1), "r", "1", "LOAN"), envelope(ts(1, 2), "c", "2", "CARD"),
+        envelope(ts(1, 3), "r", "3", "BOND")))
+      Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill
+      Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 1))
+      val tables = Seq(spec.historyTable, spec.dailyTable)
+      def state = tables.map(t => (rowsOf(spark.table(t)), spark.table(t).schema))
+      val before = state
+      assert(before.map(_._1.size) == Seq(3, 3))
+
+      append(Seq(envelope(ts(2, 4), "u", "1", "DEPOSIT"), envelope(ts(2, 3), "u", "1", "SAVINGS"),
+        envelope(ts(2, 5), "d", "2", null),
+        (ts(2, 6), """{"ID":"4","PRODUCT":"FX","RATE":"0.05","__op":"c","__deleted":"false"}""")))
+      // a session of its own, so no other suite's writes see the fault
+      val faulty = spark.newSession()
+      faulty.conf.set("spark.sql.sources.commitProtocolClass", classOf[FailingCommitProtocol].getName)
+      intercept[Exception](merge(faulty, spec))
+      assert(tables.forall(Lake.tableExists(spark, _)), "the failed merge lost a table")
+      // rows and schema of both tables; the daily table is not truncated
+      assert(state == before)
+
+      merge(spark, spec)
+      if (stage == "history") {
+        assert(rowsOf(spark.table(spec.historyTable)) == rowsOf(foldOfAll(spec)))
+        assert(spark.table(spec.historyTable).count() == 3)
+        assert(spark.table(spec.dailyTable).count() == 0)
+      } else {
+        val daily = spark.table(spec.dailyTable).select($"ID", $"PRODUCT", $"RATE")
+          .as[(String, String, String)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+        assert(daily == Map("1" -> ("DEPOSIT", null), "3" -> ("BOND", null), "4" -> ("FX", "0.05")))
+      }
+    }
   }
 
   test("readDay lists and reads only the day's partition directory") {
@@ -361,6 +443,7 @@ class JobsSpec extends AnyFunSuite {
     // 40 more snapshot keys, so day 2's four events append a delta
     append(day1 ++ (3 to 42).map(i => envelope(ts(1, i % 60), "r", s"$i", s"P$i")))
     Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 1))
+    val dailyAt = location(spec.dailyTable)
     Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill
     append(day2)
     val daily = jobsOf(spark.sparkContext)(Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 2)))
@@ -380,25 +463,10 @@ class JobsSpec extends AnyFunSuite {
     assert((daily, history) == ((7, 5)))
     assert(spark.table(spec.dailyTable).count() == 0)
     assert(spark.table(spec.dailyTable).schema == schema)
+    // neither the merge nor the truncations moved the daily table
+    assert(location(spec.dailyTable) == dailyAt)
     val hist = spark.table(spec.historyTable).where($"id".isin("1", "2"))
       .select($"id", $"product").as[(String, String)].collect().toMap
     assert(hist == Map("1" -> "DEPOSIT", "2" -> "CARD2"))
-  }
-
-  test("a commit deletes an older version directory that a crash left behind") {
-    // the daily table's versioned commit (the history table keeps one root)
-    val (spec, append) = freshLake("sweep")
-    append(day1)
-    Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 1))
-    val root = location(spec.dailyTable)
-    Seq(1).toDF("x").write.parquet(new Path(root.getParent, s"${root.getName}__v0").toString)
-    append(day2)
-    Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 2))
-    val now = location(spec.dailyTable)
-    assert(now.getName == s"${root.getName}__v1")
-    assert(versionsOf(now) == Seq(now.getName))
-    val daily = spark.table(spec.dailyTable).select($"ID", $"PRODUCT").as[(String, String)]
-      .collect().toMap
-    assert(daily == Map("1" -> "DEPOSIT", "2" -> "CARD2"))
   }
 }
