@@ -4234,7 +4234,7 @@ object SparkEntry {
 
     // The PRODUCTION sink shape for the streaming upsert: state changes
     // append to a parquet log via foreachBatch (nothing driver-buffered),
-    // the log is compacted to one row per key (staged rename), and the
+    // the log is compacted to one row per key (rewritten in place), and the
     // current table is read back from files — write path, maintenance
     // pass, and read path all exercised in one query. Same oracle as
     // stream_upsert: the sink mechanics must not change the semantics.
@@ -4410,7 +4410,7 @@ object SparkEntry {
 
     // The same e2e pipeline with a COMPACTION maintenance pass between
     // ingest and read-back: the day's partition directory is rewritten
-    // by Lake.compact (staged swap, coalesce — shuffle-free) and the
+    // by Lake.compact (in place, coalesce — shuffle-free) and the
     // merge result must be bit-identical (same oracle as
     // cdc_pipeline_file). This is the oracle-checked version of what
     // LakeCompactSpec pins at unit scale: compaction changes file

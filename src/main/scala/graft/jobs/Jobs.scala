@@ -85,7 +85,7 @@ object Jobs {
   def dailyMerge(spark: SparkSession, spec: TableSpec, ds: LocalDate): Unit =
     readDayEvents(spark, spec, ds).foreach { events =>
       withBatch(spark, spec, events) { (routed, n, limit) =>
-        if (Lake.tableExists(spark, spec.dailyTable))
+        if (spark.catalog.tableExists(spec.dailyTable))
           MergeOnRead.mergeTable(spark, spec.dailyTable, routed, n, limit,
             spec.primaryKeys, spec.orderColumns, spec.format)
         else
@@ -118,7 +118,7 @@ object Jobs {
         }
       case _ =>
         val wrote =
-          if (Lake.tableExists(spark, spec.historyTable))
+          if (spark.catalog.tableExists(spec.historyTable))
             readDayEvents(spark, spec, ds.minusDays(1), lowered).map { events =>
               withBatch(spark, spec, events) { (routed, n, limit) =>
                 MergeOnRead.mergeTable(spark, spec.historyTable, routed, n, limit,
@@ -139,7 +139,7 @@ object Jobs {
                 CdcOps.foldMerge(all, spec.primaryKeys, spec.orderColumns),
                 spec.primaryKeys, spec.format)
             }.isDefined
-        if (wrote && Lake.tableExists(spark, spec.dailyTable))
+        if (wrote && spark.catalog.tableExists(spec.dailyTable))
           MergeOnRead.truncate(spark, spec.dailyTable, spec.primaryKeys, spec.format)
     }
   }

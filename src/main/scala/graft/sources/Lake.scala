@@ -1,13 +1,20 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType, TimestampType}
 
-/** Lake-layer IO: partitioned file writes and reads, the catalog's
-  * existence probe and the increment-mode append. Covers SURVEY §2.1 S5,
-  * S6, S8, S9; the keyed catalog tables, their overwrite (S8) and their
-  * truncation (S10) are [[MergeOnRead]]'s.
+/** Lake-layer IO: partitioned file writes and reads, the compaction of
+  * graft's two append-only logs (the raw layer and the streaming upsert
+  * log) and the increment-mode append. Covers SURVEY §2.1 S5, S6, S8; the
+  * keyed catalog tables, their overwrite (S8) and their truncation (S10)
+  * are [[MergeOnRead]]'s, committed through its manifest log. The logs
+  * commit each write through Spark's job commit and compact in place
+  * ([[rewriteInPlace]]), as their readers collapse duplicate rows.
   */
 object Lake {
 
@@ -35,54 +42,54 @@ object Lake {
     * Scale shape: one read + one `coalesce` write. `coalesce` (not
     * `repartition`) so the rewrite is shuffle-free — output tasks read
     * whole input files; at 100 TB you compact per partition directory,
-    * bounding each rewrite to one day's data. The rewrite is staged
-    * (tmp dir + atomic-ish rename) so a concurrent reader never sees a
-    * half-compacted directory.
+    * bounding each rewrite to one day's data. The rewrite runs in place
+    * ([[rewriteInPlace]]): the directory never disappears, and rows an
+    * ingest appends meanwhile are kept.
     */
   def compact(spark: SparkSession, dir: String, targetBytes: Long,
               format: String = "parquet"): Int = {
     require(targetBytes > 0)
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(path).getLength
+    val path = new Path(dir)
+    val bytes = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(path).getLength
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val tmp = new org.apache.hadoop.fs.Path(dir + ".compact-tmp")
-    val old = new org.apache.hadoop.fs.Path(dir + ".compact-old")
-    spark.read.format(format).load(dir)
-      .coalesce(nFiles)
-      .write.mode(SaveMode.Overwrite).format(format).save(tmp.toString)
-    stagedSwap(fs, path, tmp, old)
+    rewriteInPlace(spark, dir, format)(_.coalesce(nFiles))
     nFiles
   }
 
-  /** The checked staged-directory swap shared by [[compact]] and
-    * [[graft.streaming.StreamingUpsert.compactLog]]: back the live
-    * `path` up to `old`, move `tmp` in, clean up — with every Hadoop
-    * rename CHECKED (they signal failure by RETURNING FALSE, not
-    * throwing; unchecked, stale `old` debris silently no-ops the swap,
-    * and a failure between the renames deletes the only copy).
+  /** Rewrite the files of `dir` (a leaf directory of one of graft's
+    * append-only logs: a raw day, or the streaming upsert log) as
+    * `rewrite` of their rows, in place: plan the read of `dir`, append
+    * the rewritten rows into `dir` itself, then delete exactly the files
+    * that read scanned, checking every delete. Returns the rows written.
     *
-    * Honest limits, by design: (a) there is an instant between the two
-    * renames where `path` does not exist — a concurrent reader can hit
-    * PATH_NOT_FOUND and must retry; (b) rows appended to `path` after
-    * the rewrite's snapshot read are swept into `old` and deleted.
-    * Without a transaction log a plain directory cannot do better, so
-    * run compaction only on CLOSED partitions (past days) or in a
-    * maintenance window — [[compact]]'s per-day usage satisfies this.
+    * - A run that does not crash keeps `rewrite`'s rows exactly, as a
+    *   multiset, and leaves only its own files.
+    * - Rows appended to `dir` after the read was planned are not read,
+    *   so they are not deleted.
+    * - A crashed run loses no row but may leave some rows twice: the
+    *   rewritten copy beside the files not yet deleted. Every reader of
+    *   both logs collapses duplicates, as the at-least-once appends that
+    *   fill them already require.
+    * - A rerun completes; it reads the crashed run's copy with the rest.
     */
-  private[graft] def stagedSwap(fs: org.apache.hadoop.fs.FileSystem,
-                                path: org.apache.hadoop.fs.Path,
-                                tmp: org.apache.hadoop.fs.Path,
-                                old: org.apache.hadoop.fs.Path): Unit = {
-    if (fs.exists(old)) // debris from a crashed prior run; path is live
-      require(fs.delete(old, true), s"cannot clear stale $old")
-    require(fs.rename(path, old), s"stagedSwap: rename $path -> $old failed")
-    if (!fs.rename(tmp, path)) {
-      fs.rename(old, path) // roll back so readers still see the data
-      throw new IllegalStateException(
-        s"stagedSwap: rename $tmp -> $path failed; rolled back")
-    }
-    require(fs.delete(old, true), s"stagedSwap: cleanup of $old failed")
+  private[graft] def rewriteInPlace(spark: SparkSession, dir: String, format: String)
+                                   (rewrite: DataFrame => DataFrame): Long = {
+    val read = spark.read.format(format).load(dir)
+    val files = read.inputFiles.map(new Path(_))
+    val n = countedWrite(rewrite(read), _.mode(SaveMode.Append).format(format).save(dir))
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    files.foreach(f => require(fs.delete(f, false), s"rewrite of $dir: cannot delete $f"))
+    n
+  }
+
+  /** Run `write` over `df` and return the rows it wrote, counted by the
+    * write's own job.
+    */
+  private[sources] def countedWrite(df: DataFrame, write: DataFrameWriter[Row] => Unit): Long = {
+    val counted = Observation()
+    write(df.observe(counted, count(lit(1)).as("rows")).write)
+    Await.result(counted.future, 1.minute).getAs[Long]("rows")
   }
 
   /** Z-order (Morton) curve value of two non-negative integer keys:
@@ -107,7 +114,7 @@ object Lake {
     * `daily_data_handler.py:39-41`, without swallowing real errors).
     */
   def pathExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val p = new Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
@@ -140,13 +147,6 @@ object Lake {
     if (!pathExists(spark, path))
       spark.createDataFrame(java.util.Collections.emptyList[Row](), rawSchema)
     else spark.read.format(format).schema(rawSchema).option("basePath", root).load(path)
-
-  /** S9 — the catalog's existence probe (a public Scala API; the
-    * reference needed a private `_jsparkSession` bridge only because of
-    * its PySpark version, `daily_data_handler.py:160-162`).
-    */
-  def tableExists(spark: SparkSession, table: String): Boolean =
-    spark.catalog.tableExists(table)
 
   /** S8 — plain append `saveAsTable` (increment mode,
     * `history_data_handler.py:146-155`). AQE coalesces output

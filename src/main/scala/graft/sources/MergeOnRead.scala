@@ -2,12 +2,9 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import scala.concurrent.Await
-import scala.concurrent.duration._
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -235,11 +232,8 @@ object MergeOnRead {
   private def rebase(spark: SparkSession, root: String, m: Manifest, rows: DataFrame): Manifest = {
     val id = m.id + 1
     val dir = s"base-$id"
-    val counted = Observation()
     val based = rows.withColumn(Generation, lit(id))
-    based.observe(counted, count(lit(1)).as("rows"))
-      .write.mode(SaveMode.Overwrite).format(m.format).save(s"$root/$dir")
-    val n = Await.result(counted.future, 1.minute).getAs[Long]("rows")
+    val n = Lake.countedWrite(based, _.mode(SaveMode.Overwrite).format(m.format).save(s"$root/$dir"))
     commitBase(spark, root, m, Part(dir, n, based.schema))
   }
 
@@ -275,8 +269,9 @@ object MergeOnRead {
     createAt(spark, table, Bridge.defaultTablePath(spark, table), rows, keys, format)
 
   /** Merge a day's batch (`events` events, as routed) into `table`:
-    * append it as a delta, or compact when [[needsCompaction]]. When a
-    * delta widens the schema, the catalog entry is re-registered.
+    * append it as a delta, or compact when [[needsCompaction]]. When the
+    * batch widens the schema, the catalog entry's schema is widened in
+    * place: the name stays registered throughout.
     *
     * A table an older version wrote (a plain parquet or ORC table) is
     * converted by its first merge, through the compaction path ([[createAt]]).
@@ -297,7 +292,7 @@ object MergeOnRead {
         else append(spark, root, m, routed, events, orderColumns)
       val widened = schema(spark, next)
       if (!DataTypeUtils.equalsIgnoreNullability(current.schema, widened))
-        register(spark, table, at, widened)
+        Bridge.alterTableDataSchema(spark, table, widened)
     }
   }
 
@@ -324,36 +319,30 @@ object MergeOnRead {
   }
 
   /** Write `rows` as the base of a new root, at `from` or the first
-    * version after it that does not exist (what a crash before
-    * [[register]] left behind is never reused), register `table` over it,
+    * version after it that does not exist (what a crash before the
+    * registration left behind is never reused), register `table` over it,
     * then delete every older version directory of the root: the table's
     * former location, and any root a crash left behind.
     *
     * This also converts a table an older version wrote at `at` (a plain
     * parquet or ORC table at `<root>` or `<root>__v<n>`), from
-    * `from = nextVersion(at)`.
+    * `from = nextVersion(at)`. Its entry is dropped first (a managed
+    * table's drop deletes its directory, which the new root has already
+    * superseded), so for a moment the name is unregistered while the
+    * data stays on disk.
     */
   private def createAt(spark: SparkSession, table: String, from: Path, rows: DataFrame,
                        keys: Seq[String], format: String): Unit = {
     val fsys = fs(spark, from.toString)
     val root = Iterator.iterate(from)(nextVersion).find(!fsys.exists(_)).get
     val m = create(spark, root.toString, rows, keys, format)
-    register(spark, table, root, schema(spark, m))
+    if (spark.catalog.tableExists(table)) spark.sql(s"DROP TABLE $table")
+    val quoted = "'" + root.toString.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    spark.sql(s"CREATE TABLE $table (${schema(spark, m).toDDL}) USING $Provider LOCATION $quoted")
     val (name, n) = version(root)
     fsys.listStatus(root.getParent).map(_.getPath)
       .filter(p => version(p) match { case (r, k) => r == name && k < n })
       .foreach(fsys.delete(_, true))
-  }
-
-  /** (Re-)register `table` as a merge-on-read table over `location`, with
-    * `schema`. An existing entry is dropped first (a managed table's drop
-    * deletes its directory, which the caller has already superseded), so
-    * for a moment the name is unregistered while the data stays on disk.
-    */
-  private def register(spark: SparkSession, table: String, location: Path, schema: StructType): Unit = {
-    if (spark.catalog.tableExists(table)) spark.sql(s"DROP TABLE $table")
-    val quoted = "'" + location.toString.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    spark.sql(s"CREATE TABLE $table (${schema.toDDL}) USING $Provider LOCATION $quoted")
   }
 
   private val Versioned = "(.*)__v(\\d+)".r

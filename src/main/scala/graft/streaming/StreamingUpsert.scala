@@ -152,7 +152,8 @@ object StreamingUpsert {
     * re-appends the SAME (key, order, op, payload) rows on recovery;
     * [[latestPerKey]] collapses them, so the log is idempotent on read
     * (same at-least-once-append + LWW-merge contract as the reference's
-    * raw layer).
+    * raw layer). [[compactLog]] relies on the same contract: a crashed
+    * compaction may leave rows twice, never lose one.
     */
   def upsertToLog(events: Dataset[KeyedEvent], dataDir: String,
                   checkpointDir: String): Unit = {
@@ -178,24 +179,15 @@ object StreamingUpsert {
 
   /** Semantic compaction of the upsert log: rewrite it to ONE row per
     * key (the LWW winner — tombstones kept, they must keep suppressing
-    * late stale arrivals), staged tmp-dir + rename as in
-    * [[graft.sources.Lake.compact]] so a concurrent reader never sees a
-    * half-written log. Run periodically so log size tracks the live key
+    * late stale arrivals), in place as [[graft.sources.Lake.compact]]
+    * rewrites a raw day ([[graft.sources.Lake.rewriteInPlace]]): a
+    * concurrent reader always sees the log, and a batch appended
+    * meanwhile is kept. Run periodically so log size tracks the live key
     * set, not all-time change history. Returns the compacted row count.
     */
   def compactLog(spark: org.apache.spark.sql.SparkSession, dataDir: String): Long = {
     import spark.implicits._
-    val path = new org.apache.hadoop.fs.Path(dataDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(dataDir + ".compact-tmp")
-    val old = new org.apache.hadoop.fs.Path(dataDir + ".compact-old")
-    val compacted = latestPerKey(spark.read.parquet(dataDir).as[KeyState])
-      .toDF().localCheckpoint(true) // materialize before the source dir moves
-    val n = compacted.count()
-    compacted.write.mode("overwrite").parquet(tmp.toString)
-    // checked-rename choreography shared with Lake.compact — see
-    // Lake.stagedSwap for the failure modes and honest limits
-    graft.sources.Lake.stagedSwap(fs, path, tmp, old)
-    n
+    graft.sources.Lake.rewriteInPlace(spark, dataDir, "parquet")(log =>
+      latestPerKey(log.as[KeyState]).toDF())
   }
 }

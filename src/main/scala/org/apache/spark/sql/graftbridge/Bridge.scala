@@ -9,7 +9,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * classic converters live behind `private[sql]`). This is the only
   * place the engine reaches past the public API: to wrap its own
   * Catalyst expressions as `Column`s, and to read a table's catalog
-  * entry.
+  * entry or widen its schema.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -43,6 +43,16 @@ object Bridge {
       : org.apache.spark.sql.catalyst.catalog.CatalogTable = {
     val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
     state.catalog.getTableMetadata(state.sqlParser.parseTableIdentifier(table))
+  }
+
+  /** Replace `table`'s data schema in the catalog, keeping the entry,
+    * and refresh the session's cached relation of it.
+    */
+  def alterTableDataSchema(spark: org.apache.spark.sql.SparkSession, table: String,
+                           schema: org.apache.spark.sql.types.StructType): Unit = {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    state.catalog.alterTableDataSchema(state.sqlParser.parseTableIdentifier(table), schema)
+    spark.catalog.refreshTable(table)
   }
 
   /** The catalog's default (managed) location of `table`. */

@@ -144,7 +144,7 @@ class CliSpec extends AnyFunSuite {
     val rawCount = spark.read.parquet(s"$root/lake").count()
     assert(rawCount == 5)
 
-    // 2. Lake.compact the day's partition leaf (rename choreography #1);
+    // 2. Lake.compact the day's partition leaf (rewritten in place);
     //    rows must survive exactly
     graft.sources.Lake.compact(spark,
       s"$root/lake/op_year=2024/op_month=1/op_day=1", targetBytes = 512L * 1024 * 1024)
@@ -164,8 +164,8 @@ class CliSpec extends AnyFunSuite {
         .parquet(keyedDir).as[KeyedEvent],
       s"$root/log", s"$root/logckpt")
 
-    // 4. compactLog (rename choreography #2): one row per key incl. the
-    //    tombstone; current state identical before and after
+    // 4. compactLog (the same in-place rewrite): one row per key incl.
+    //    the tombstone; current state identical before and after
     val payloadSchema = StructType.fromDDL("ID STRING, PRODUCT STRING")
     def current() = StreamingUpsert.readCurrent(spark, s"$root/log", payloadSchema)
       .select($"ID", $"PRODUCT").as[(String, String)].collect().toMap

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.catalog.{DropTableEvent, ExternalCatalogEvent, ExternalCatalogEventListener}
 import org.apache.spark.sql.functions._
 
 /** Forked-JVM main for the REAL-catalog e2e (see HiveCatalogSpec):
@@ -40,14 +41,24 @@ object HiveCatalogE2E {
       require(spark.conf.get("spark.sql.catalogImplementation") == "hive",
         "session did not come up Hive-backed")
       spark.sql("CREATE DATABASE graft_e2e")
+      // no merge drops a table, not even one that widens its schema (the
+      // catalog posts its events on the calling thread)
+      val drops = new java.util.concurrent.atomic.AtomicInteger
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.externalCatalog
+        .addListener(new ExternalCatalogEventListener {
+          override def onEvent(e: ExternalCatalogEvent): Unit = e match {
+            case _: DropTableEvent => drops.incrementAndGet(): Unit
+            case _ =>
+          }
+        })
       val t = "graft_e2e.increment_events"
-      require(!Lake.tableExists(spark, t), "table must not pre-exist")
+      require(!spark.catalog.tableExists(t), "table must not pre-exist")
 
       // S8 append path (history increment, history_data_handler.py:146-155)
       val d1 = spark.range(0, 100).select(col("id"),
         (col("id") % 7).as("k"), lit("2024-01-01").as("day"))
       Lake.appendTable(d1, t, partitionBy = Seq("day"))
-      require(Lake.tableExists(spark, t), "appendTable must create the table")
+      require(spark.catalog.tableExists(t), "appendTable must create the table")
       require(spark.table(t).count() == 100, "first append lost rows")
       Lake.appendTable(d1.withColumn("day", lit("2024-01-02")), t,
         partitionBy = Seq("day"))
@@ -97,7 +108,7 @@ object HiveCatalogE2E {
 
       // a merge-on-read table (the history layer): created over a base,
       // one day appended as a delta that adds a column (the metastore
-      // entry is re-registered with the widened schema)
+      // entry's schema is widened in place)
       val h = "graft_e2e.replica_history"
       val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
       MergeOnRead.createTable(spark, h, spark.range(0, 100)
@@ -126,6 +137,18 @@ object HiveCatalogE2E {
       require(s2.table(spec.dailyTable).count() == 0 && s2.table(spec.dailyTable).schema == schema,
         "new session reads the truncated daily table differently")
       require(historyRows(s2) == merged, "new session reads the merge-on-read table differently")
+
+      // day 3 brings a column to the truncated daily table: its merge
+      // widens the metastore entry's schema in place
+      Lake.appendPartitioned(CdcOps.withDatePartitions(Seq((
+        java.sql.Timestamp.valueOf("2024-01-03 00:00:00"),
+        """{"ID":"7","V":"d3","W":"w3","__op":"c","__deleted":"false"}""")).toDF("timestamp", "value")),
+        spec.dataDir)
+      Jobs.dailyMerge(spark, spec, java.time.LocalDate.of(2024, 1, 3))
+      require(location(spec.dailyTable) == d, s"the daily table moved: ${location(spec.dailyTable)}")
+      require(spark.newSession().table(spec.dailyTable).select("ID", "V", "W").as[(String, String, String)]
+        .collect().toSeq == Seq(("7", "d3", "w3")), "day 3's column did not reach the daily table")
+      require(drops.get == 0, s"${drops.get} tables were dropped; a widening must alter in place")
 
       println("HIVE_E2E_OK")
     } finally {

@@ -8,6 +8,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.JobContext
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.{DropTableEvent, ExternalCatalogEvent, ExternalCatalogEventListener}
 import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -212,23 +213,37 @@ class JobsSpec extends AnyFunSuite {
 
   test("a payload column that appears on day 2 reaches the daily and the history table") {
     val (spec, append) = freshLake("drift")
-    append(Seq(envelope(ts(1, 1), "c", "1", "LOAN"), envelope(ts(1, 2), "c", "2", "CARD")))
-    Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 1))
-    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill, truncates daily
-    append(Seq((ts(2, 1),
-      """{"ID":"1","PRODUCT":"LOAN","RATE":"0.05","__op":"u","__deleted":"false"}""")))
-    Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 2))
-    val daily = spark.table(spec.dailyTable).select($"ID", $"RATE").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(daily == Map("1" -> "0.05"))
+    // the catalog posts its events on the calling thread
+    val drops = new java.util.concurrent.atomic.AtomicInteger
+    val catalog = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.externalCatalog
+    val listener = new ExternalCatalogEventListener {
+      override def onEvent(e: ExternalCatalogEvent): Unit = e match {
+        case _: DropTableEvent => drops.incrementAndGet(): Unit
+        case _ =>
+      }
+    }
+    catalog.addListener(listener)
+    try {
+      append(Seq(envelope(ts(1, 1), "c", "1", "LOAN"), envelope(ts(1, 2), "c", "2", "CARD")))
+      Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 1))
+      Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill, truncates daily
+      append(Seq((ts(2, 1),
+        """{"ID":"1","PRODUCT":"LOAN","RATE":"0.05","__op":"u","__deleted":"false"}""")))
+      Jobs.dailyMerge(spark, spec, LocalDate.of(2024, 1, 2))
+      val daily = spark.table(spec.dailyTable).select($"ID", $"RATE").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(daily == Map("1" -> "0.05"))
 
-    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 3)) // merges day 2
-    val hist = spark.table(spec.historyTable).select($"id", $"rate").collect()
-      .map(r => r.getString(0) -> Option(r.getString(1))).toMap
-    assert(hist == Map("1" -> Some("0.05"), "2" -> None))
-    // the truncation keeps the new column
-    assert(spark.table(spec.dailyTable).count() == 0)
-    assert(spark.table(spec.dailyTable).columns.contains("RATE"))
+      Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 3)) // merges day 2
+      val hist = spark.table(spec.historyTable).select($"id", $"rate").collect()
+        .map(r => r.getString(0) -> Option(r.getString(1))).toMap
+      assert(hist == Map("1" -> Some("0.05"), "2" -> None))
+      // the truncation keeps the new column
+      assert(spark.table(spec.dailyTable).count() == 0)
+      assert(spark.table(spec.dailyTable).columns.contains("RATE"))
+    } finally catalog.removeListener(listener)
+    // each widening altered the schema in place
+    assert(drops.get == 0)
   }
 
   private def onDisk(dir: Path): Seq[String] =
@@ -398,7 +413,7 @@ class JobsSpec extends AnyFunSuite {
       val faulty = spark.newSession()
       faulty.conf.set("spark.sql.sources.commitProtocolClass", classOf[FailingCommitProtocol].getName)
       intercept[Exception](merge(faulty, spec))
-      assert(tables.forall(Lake.tableExists(spark, _)), "the failed merge lost a table")
+      assert(tables.forall(spark.catalog.tableExists), "the failed merge lost a table")
       // rows and schema of both tables; the daily table is not truncated
       assert(state == before)
 

