@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Duplicate-cluster resolution: the step after candidate generation
   * ([[Dedup.minHashCandidates]] et al.) that a real corpus-dedup
@@ -24,18 +25,43 @@ import org.apache.spark.sql.functions._
   */
 object Cluster {
 
-  /** Connected components of an undirected edge list.
+  /** Connected components of an undirected edge list: the
+    * [[minLabels]] rounds run to their fixpoint.
     *
     * @return (id, comp) for every node appearing in some edge; comp =
     *         smallest node id in the component (deterministic).
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIter: Int = 20): DataFrame = {
-    val e = edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-    // symmetrize once so propagation is direction-free
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+    val (labels, converged) = minLabels(
+      edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")), maxIter)
+    // Partial labels are silently WRONG (two nodes of one component
+    // can still carry different labels), so non-convergence is an
+    // error, never a degraded result. Min-label propagation needs
+    // O(component diameter) iterations; raise maxIter for long-chain
+    // graphs.
+    if (!converged)
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIter iterations; " +
+          "component diameter exceeds maxIter - raise it")
+    labels
+  }
+
+  /** Synchronous min-label rounds over the directed `(src, dst)` pairs
+    * `edges`, symmetrized once so propagation is direction-free: every
+    * node starts labeled with itself, and each round every node takes
+    * the min of its own label and its neighbors'. The rounds stop at
+    * the fixpoint (a round that changes no label) or after `maxRounds`.
+    * Returns the `(id, comp)` labels, eagerly checkpointed, and whether
+    * they reached the fixpoint; a converged state never changes in a
+    * later round, so stopping there moves no label.
+    * [[connectedComponents]] and [[Graph.labelPropagation]] both run
+    * this loop.
+    */
+  private[operators] def minLabels(edges: DataFrame, maxRounds: Int): (DataFrame, Boolean) = {
+    val sym = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       var labels = sym.select(col("src").as("id")).distinct()
         .select(col("id"), col("id").as("comp"))
@@ -47,9 +73,9 @@ object Cluster {
       // aggregate volume is bounded by the edge join, not the state
       // alone (Iter.RowsPerPartition scaladoc).
       val n = math.max(labels.count(), sym.count())
-      var iter = 0
+      var rounds = 0
       var converged = false
-      Iter.tuned(edges.sparkSession, n) { while (!converged && iter < maxIter) {
+      Iter.tuned(edges.sparkSession, n) { while (!converged && rounds < maxRounds) {
         // min label among each node's neighbors. SHUFFLE_HASH on the
         // LABELS side pins it as the hash build: a localCheckpoint'd
         // relation carries the default (effectively infinite) size
@@ -75,26 +101,17 @@ object Cluster {
           .localCheckpoint(true) // cut lineage: plan stays O(1) per iter
         converged = next.filter(col("__changed")).isEmpty
         // next is materialized (eager checkpoint) — the previous
-        // round's blocks are dead; without this a maxIter-round run
-        // holds maxIter full label copies in executor storage until
+        // round's blocks are dead; without this a maxRounds-round run
+        // holds maxRounds full label copies in executor storage until
         // the ContextCleaner's periodic GC gets around to them.
         // Dataset.unpersist() is a NO-OP here (a localCheckpoint
         // Dataset is not CacheManager-registered) — release the
         // checkpointed RDD under the LogicalRDD leaf instead.
         unpersistLocalCheckpoint(labels)
         labels = next.drop("__changed")
-        iter += 1
+        rounds += 1
       } }
-      // Partial labels are silently WRONG (two nodes of one component
-      // can still carry different labels), so non-convergence is an
-      // error, never a degraded result. Min-label propagation needs
-      // O(component diameter) iterations; raise maxIter for long-chain
-      // graphs.
-      if (!converged)
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxIter iterations; " +
-            "component diameter exceeds maxIter - raise it")
-      labels
+      (labels, converged)
     } finally sym.unpersist()
   }
 

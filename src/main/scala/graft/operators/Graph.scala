@@ -534,32 +534,6 @@ object Graph {
       .limit(topN)
   }
 
-  /** Minimum-hop BFS distances from a seed node set, bounded to
-    * `maxHops` frontier expansions — the bounded-radius reachability
-    * pass behind "documents within k links of a trusted site" crawl
-    * scoping (OPIC-style seeding) and blast-radius queries.
-    *
-    * Scale shape: classic frontier BFS. The symmetrized edge list is
-    * hash-partitioned by `src` once and persisted; each hop joins only
-    * the CURRENT frontier (newly discovered nodes, never the visited
-    * set) against it, so per-iteration shuffle is frontier × avg-degree
-    * rows of 1–2 columns. The visited set stays distributed — new
-    * frontiers are carved out with a left-anti join, each INTERMEDIATE
-    * hop's result is `localCheckpoint`ed (lineage stays flat, the
-    * union of ≤ `maxHops`+1 cached pieces), and nothing but the
-    * empty-frontier probe count reaches the driver. The FINAL hop is
-    * left lazy: its frontier feeds no further expansion, so
-    * materializing it (write + re-read + emptiness probe) would be a
-    * pure barrier — the consumer's one readout job computes it in
-    * place (round-13: the final hop is the walk's LARGEST relation,
-    * and closeness paid a full extra materialization of it per run).
-    * Hop count is FIXED so the oracle replays the identical unrolled
-    * expansion.
-    *
-    * `edges` is undirected canonical `(a, b)`; `seeds` is a one-column
-    * `node` relation. Returns `(node, hop)` for every node reachable
-    * within `maxHops` (seeds at hop 0); unreachable nodes are absent.
-    */
   /** The symmetrized, src-hash-partitioned frontier-join relation the
     * BFS operators walk: both directions of the canonical `(a, b)`
     * edge set, repartitioned by `src` so every per-hop frontier join
@@ -574,24 +548,93 @@ object Graph {
       .union(edges.select(col("b").as("src"), col("a").as("dst")))
       .repartition(col("src"))
 
+  /** Minimum-hop BFS distances from a seed node set, bounded to
+    * `maxHops` frontier expansions — the bounded-radius reachability
+    * pass behind "documents within k links of a trusted site" crawl
+    * scoping (OPIC-style seeding) and blast-radius queries. The walk is
+    * [[frontierWalk]] with no key.
+    *
+    * `edges` is undirected canonical `(a, b)`; `seeds` is a one-column
+    * `node` relation. Returns `(node, hop)` for every node reachable
+    * within `maxHops` (seeds at hop 0); unreachable nodes are absent.
+    */
   def kHopDistances(edges: DataFrame, seeds: DataFrame,
-                    maxHops: Int): DataFrame = {
-    val sym = symmetrizeBySrc(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize before releasing sym: the walk's FINAL hop is lazy
-    // (kHopDistancesOver scaladoc) and still references the relation
-    val out = kHopDistancesOver(sym, seeds, maxHops).localCheckpoint()
-    sym.unpersist()
-    out
-  }
+                    maxHops: Int): DataFrame =
+    overSymmetrized(edges)(kHopDistancesOver(_, seeds, maxHops))
 
   /** [[kHopDistances]] over a pre-built (ideally persisted)
     * [[symmetrizeBySrc]] relation — the caller owns its lifecycle.
     */
   def kHopDistancesOver(sym: DataFrame, seeds: DataFrame,
-                        maxHops: Int): DataFrame = {
+                        maxHops: Int): DataFrame =
+    frontierWalk(sym, seeds.select(col("node")).distinct().withColumn("hop", lit(0L)),
+      Nil, maxHops)
+
+  /** Multi-source BFS keyed by landmark: like [[kHopDistances]] but the
+    * frontier carries WHICH landmark reached the node, so one pass
+    * yields `(lm, node, hop)` — exact distance from every landmark to
+    * every node within `maxHops`. This is the landmark/pivot scheme for
+    * closeness-style centrality at scale (Indyk 1999; HADI's exact
+    * small-radius regime): |landmarks| bounded ⇒ the frontier relation
+    * is ≤ |landmarks|×|nodes| 2-long-column rows, shuffled on `node`
+    * per round, edges persisted at rest — never an all-pairs walk.
+    * The walk is [[frontierWalk]] keyed by `lm`.
+    *
+    * `edges` is undirected canonical `(a, b)`; `landmarks` is a
+    * one-column `lm` relation. Seeds appear at hop 0 (lm = node).
+    */
+  def landmarkDistances(edges: DataFrame, landmarks: DataFrame,
+                        maxHops: Int): DataFrame =
+    overSymmetrized(edges)(landmarkDistancesOver(_, landmarks, maxHops))
+
+  /** [[landmarkDistances]] over a pre-built (ideally persisted)
+    * [[symmetrizeBySrc]] relation — the caller owns its lifecycle.
+    */
+  def landmarkDistancesOver(sym: DataFrame, landmarks: DataFrame,
+                            maxHops: Int): DataFrame =
+    frontierWalk(sym, landmarks.select(col("lm")).distinct()
+      .select(col("lm"), col("lm").as("node"), lit(0L).as("hop")), Seq("lm"), maxHops)
+
+  /** `walkOver` of the persisted [[symmetrizeBySrc]] relation of
+    * `edges`, materialized before the relation is released: the walk's
+    * FINAL hop is lazy ([[frontierWalk]]) and still references it.
+    */
+  private def overSymmetrized(edges: DataFrame)(walkOver: DataFrame => DataFrame): DataFrame = {
+    val sym = symmetrizeBySrc(edges).persist(StorageLevel.MEMORY_AND_DISK)
+    val out = walkOver(sym).localCheckpoint()
+    sym.unpersist()
+    out
+  }
+
+  /** The frontier BFS behind [[kHopDistances]] and [[landmarkDistances]]:
+    * from `start` `(keys…, node, hop = 0)`, each hop expands every
+    * key's frontier one edge of `sym` and keeps the `(keys…, node)`
+    * pairs not yet visited, at that hop. Returns the visited
+    * `(keys…, node, hop)` rows; keys never interact, so a walk keyed by
+    * landmark is one independent BFS per landmark.
+    *
+    * Scale shape: classic frontier BFS. The symmetrized edge list is
+    * hash-partitioned by `src` once and persisted; each hop joins only
+    * the CURRENT frontier (newly discovered nodes, never the visited
+    * set) against it, so per-iteration shuffle is frontier × avg-degree
+    * rows of a few columns. The visited set stays distributed — new
+    * frontiers are carved out with a left-anti join, each INTERMEDIATE
+    * hop's result is `localCheckpoint`ed (lineage stays flat, the
+    * union of ≤ `maxHops`+1 cached pieces), and nothing but the
+    * empty-frontier probe count reaches the driver. The FINAL hop is
+    * left lazy: its frontier feeds no further expansion, so
+    * materializing it (write + re-read + emptiness probe) would be a
+    * pure barrier — the consumer's one readout job computes it in
+    * place (round-13: the final hop is the walk's LARGEST relation,
+    * and closeness paid a full extra materialization of it per run).
+    * Hop count is FIXED so the oracle replays the identical unrolled
+    * expansion.
+    */
+  private def frontierWalk(sym: DataFrame, start: DataFrame, keys: Seq[String],
+                           maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    var visited = seeds.select(col("node")).distinct()
-      .withColumn("hop", lit(0L)).localCheckpoint()
+    val at = keys :+ "node"
+    var visited = start.localCheckpoint()
     var frontier = visited
     var h = 1
     var exhausted = false
@@ -601,10 +644,10 @@ object Graph {
       // frontier is the bounded side — hint it as the hash build (a
       // checkpointed frontier's default size estimate would otherwise
       // let the planner build on the persisted edge relation)
-      val nextPlan = frontier.select(col("node")).hint("shuffle_hash")
+      val nextPlan = frontier.select(at.map(col): _*).hint("shuffle_hash")
         .join(sym, col("node") === col("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(visited, Seq("node"), "left_anti")
+        .select(keys.map(col) :+ col("dst").as("node"): _*).distinct()
+        .join(visited, at, "left_anti")
         .withColumn("hop", lit(h.toLong))
       if (h == maxHops) {
         // final hop: no further expansion consumes it, so skip the
@@ -615,65 +658,6 @@ object Graph {
         val next = nextPlan.localCheckpoint()
         // the emptiness probe doubles as the materializing action; an
         // empty frontier ends the walk early (correct: no node beyond it)
-        exhausted = next.isEmpty
-        if (!exhausted) {
-          visited = visited.union(next)
-          frontier = next
-        }
-      }
-      h += 1
-    } }
-    visited
-  }
-
-  /** Multi-source BFS keyed by landmark: like [[kHopDistances]] but the
-    * frontier carries WHICH landmark reached the node, so one pass
-    * yields `(lm, node, hop)` — exact distance from every landmark to
-    * every node within `maxHops`. This is the landmark/pivot scheme for
-    * closeness-style centrality at scale (Indyk 1999; HADI's exact
-    * small-radius regime): |landmarks| bounded ⇒ the frontier relation
-    * is ≤ |landmarks|×|nodes| 2-long-column rows, shuffled on `node`
-    * per round, edges persisted at rest — never an all-pairs walk.
-    *
-    * `edges` is undirected canonical `(a, b)`; `landmarks` is a
-    * one-column `lm` relation. Seeds appear at hop 0 (lm = node).
-    */
-  def landmarkDistances(edges: DataFrame, landmarks: DataFrame,
-                        maxHops: Int): DataFrame = {
-    val sym = symmetrizeBySrc(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize before releasing sym (the final hop is lazy — see
-    // [[kHopDistances]])
-    val out = landmarkDistancesOver(sym, landmarks, maxHops).localCheckpoint()
-    sym.unpersist()
-    out
-  }
-
-  /** [[landmarkDistances]] over a pre-built (ideally persisted)
-    * [[symmetrizeBySrc]] relation — the caller owns its lifecycle.
-    */
-  def landmarkDistancesOver(sym: DataFrame, landmarks: DataFrame,
-                            maxHops: Int): DataFrame = {
-    require(maxHops >= 0, "maxHops must be >= 0")
-    var visited = landmarks.select(col("lm")).distinct()
-      .select(col("lm"), col("lm").as("node"), lit(0L).as("hop"))
-      .localCheckpoint()
-    var frontier = visited
-    var h = 1
-    var exhausted = false
-    // same fixed-plan/varying-frontier shape as [[kHopDistances]],
-    // including the lazy FINAL hop (nothing expands it — the readout's
-    // one job computes it in place instead of paying a checkpoint)
-    Iter.noAqe(sym.sparkSession) { while (h <= maxHops && !exhausted) {
-      // same bounded-frontier build hint as [[kHopDistances]]
-      val nextPlan = frontier.select(col("lm"), col("node")).hint("shuffle_hash")
-        .join(sym, col("node") === col("src"))
-        .select(col("lm"), col("dst").as("node")).distinct()
-        .join(visited, Seq("lm", "node"), "left_anti")
-        .withColumn("hop", lit(h.toLong))
-      if (h == maxHops) {
-        visited = visited.union(nextPlan)
-      } else {
-        val next = nextPlan.localCheckpoint()
         exhausted = next.isEmpty
         if (!exhausted) {
           visited = visited.union(next)
@@ -703,20 +687,9 @@ object Graph {
     */
   def landmarkEccentricity(edges: DataFrame, landmarks: DataFrame,
                            maxHops: Int): DataFrame =
-    landmarkDistances(edges, landmarks, maxHops)
-      .groupBy(col("lm"))
-      .agg(count(lit(1)).as("n_reached"), max(col("hop")).as("ecc"))
-      .withColumn("capped", col("ecc") === maxHops.toLong)
+    landmarkEccentricityOf(landmarkDistances(edges, landmarks, maxHops), maxHops)
 
-  /** [[landmarkEccentricity]] over a pre-built (ideally persisted)
-    * [[symmetrizeBySrc]] relation — the caller owns its lifecycle.
-    */
-  def landmarkEccentricityOver(sym: DataFrame, landmarks: DataFrame,
-                               maxHops: Int): DataFrame =
-    landmarkEccentricityOf(landmarkDistancesOver(sym, landmarks, maxHops),
-      maxHops)
-
-  /** The [[landmarkEccentricityOver]] readout over a pre-built
+  /** The [[landmarkEccentricity]] readout over a pre-built
     * `(lm, node, hop)` walk relation — for callers sharing ONE
     * multi-source BFS across several landmark readouts. `maxHops` must
     * be the cap the walk ran with (it defines `capped`); a walk over a
@@ -791,41 +764,15 @@ object Graph {
     * the fixed count makes the recurrence finite so the oracle unrolls
     * it CTE-per-round instead of recursing.
     *
-    * Scale shape: per round one join of the 2-column label relation
-    * against the persisted symmetrized edges + one map-side-combined
-    * min aggregate; `localCheckpoint` caps lineage. Returns
-    * `(node, label)`.
+    * The rounds are [[Cluster.minLabels]]' capped at `iters`: a round
+    * that changes no label ends them early, which moves no label (a
+    * converged state never changes again). Returns `(node, label)`.
     */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "iters must be >= 1")
-    val e = edges.select(col("a").as("src"), col("b").as("dst"))
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = sym.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("lbl")).localCheckpoint()
-    // fixed per-round plan, sized by the larger of the label state and
-    // the symmetrized edges the rounds join (both cached/checkpointed
-    // by now, so both counts are narrow scans)
-    Iter.tuned(edges.sparkSession,
-        math.max(labels.count(), sym.count())) { for (_ <- 1 to iters) {
-      // the label state is the bounded side by Iter's sizing contract;
-      // hint it as the hash build — a checkpointed state relation
-      // carries the default size estimate, so the planner would
-      // otherwise build on whichever side it happens to know (the
-      // pageRank 100×-octave lesson: that picked the 117M-row edge
-      // cache, 6 GB spill per round)
-      val nbrMin = sym
-        .join(labels.select(col("id").as("dst"), col("lbl").as("nl"))
-          .hint("shuffle_hash"), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("nl")).as("nm"))
-      labels = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"), least(col("lbl"), coalesce(col("nm"), col("lbl"))).as("lbl"))
-        .localCheckpoint()
-    } }
-    sym.unpersist()
-    labels.select(col("id").as("node"), col("lbl").as("label"))
+    val (labels, _) = Cluster.minLabels(
+      edges.select(col("a").as("src"), col("b").as("dst")), iters)
+    labels.select(col("id").as("node"), col("comp").as("label"))
   }
 
   /** Newman modularity of a node partition over an undirected canonical

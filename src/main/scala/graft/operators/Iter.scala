@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 
 /** Execution-conf scope for the fixed-iteration loop bodies that still
-  * plan a query per round ([[Graph.pageRank]]/[[Cluster]] fixpoints,
-  * frontier BFS): runs the loop's materializing jobs with adaptive
+  * plan a query per round: [[Graph.pageRank]], [[Graph.kCore]], the
+  * min-label loop [[Cluster.minLabels]] (connected components, label
+  * propagation) and the frontier BFS behind [[Graph.kHopDistances]] and
+  * [[Graph.landmarkDistances]]. It runs the loop's materializing jobs with adaptive
   * execution OFF and (when the per-iteration state size is known) the
   * shuffle partition count sized ONCE from that size. The [[Fit]]
   * kernel's fits (HITS, k-means, PCA) need no scope: each step is an RDD

@@ -181,8 +181,9 @@ object Sessions {
                  appName: String = "graft-bench"): SparkSession =
     local(cores, shufflePartitions, appName, streamIntegrity = false)
 
-  /** Iterative operators (Cluster.connectedComponents) deterministically
-    * release dead localCheckpoint blocks each round; Spark logs a WARN
+  /** The min-label loop (Cluster.connectedComponents,
+    * Graph.labelPropagation) deterministically releases dead
+    * localCheckpoint blocks each round; Spark logs a WARN
     * per release ("lineage has been truncated...") aimed at accidental
     * unpersists. Ours are intentional — the frames are provably dead —
     * so silence that one logger rather than spamming every run.

@@ -290,9 +290,14 @@ object MergeOnRead {
       val next =
         if (needsCompaction(m, events, limit)) compact(spark, root, m, routed, events, limit, orderColumns)
         else append(spark, root, m, routed, events, orderColumns)
-      val widened = schema(spark, next)
-      if (!DataTypeUtils.equalsIgnoreNullability(current.schema, widened))
-        Bridge.alterTableDataSchema(spark, table, widened)
+      // compared by name (a compaction's base puts the key columns first):
+      // the entry keeps its column order and takes new columns at the end
+      val merged = schema(spark, next)
+      val altered = StructType(current.schema.map(f =>
+        merged.find(_.name.equalsIgnoreCase(f.name)).fold(f)(m => f.copy(dataType = m.dataType))) ++
+        merged.filterNot(m => current.schema.exists(_.name.equalsIgnoreCase(m.name))))
+      if (!DataTypeUtils.equalsIgnoreNullability(current.schema, altered))
+        Bridge.alterTableDataSchema(spark, table, altered)
     }
   }
 

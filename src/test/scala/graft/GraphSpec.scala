@@ -304,13 +304,45 @@ class GraphSpec extends AnyFunSuite {
     // the two BFS variants must agree: min over lm of d(lm, node) is
     // exactly the multi-seed min-hop — on a deterministic pseudo-random
     // graph with several components
-    val rnd = new scala.util.Random(7)
-    val es = (1 to 40).map(_ => (rnd.nextInt(18).toLong, rnd.nextInt(18).toLong))
-      .filter { case (a, b) => a != b }.distinct
+    val es = randomGraph
     val lms = Seq(0L, 5L, 11L)
     val viaLm = lmdist(es, lms, 4).groupBy(_._1._2).view
       .mapValues(_.values.min).toMap
     assert(viaLm == khop(es, lms, 4))
+  }
+
+  /** 40 seeded pseudo-random edges over node ids 0–17, plus the same
+    * edges over ids 18–35: at least two components.
+    */
+  private def randomGraph: Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(7)
+    val es = (1 to 40).map(_ => (rnd.nextInt(18).toLong, rnd.nextInt(18).toLong))
+      .filter { case (a, b) => a != b }.distinct
+    es ++ es.map { case (a, b) => (a + 18, b + 18) }
+  }
+
+  test("labelPropagation with iters >= the node count = connectedComponents") {
+    // enough rounds reach the fixpoint, where the two min-label
+    // operators must agree
+    val es = randomGraph.toDF("a", "b")
+    val lp = Graph.labelPropagation(es, iters = 36)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cc = graft.operators.Cluster.connectedComponents(es, "a", "b")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(cc.values.toSet.size > 1, "the graph has several components")
+    assert(lp == cc)
+  }
+
+  test("labelPropagation leaves no persisted RDD behind but the one it returns") {
+    val path = Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L).toDF("a", "b")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = Graph.labelPropagation(path, iters = 3)
+    val returned = out.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    assert(returned.size == 1)
+    assert(sc.getPersistentRDDs.keySet -- before == returned.toSet)
   }
 
   test("labelPropagation: labels travel exactly `iters` hops") {

@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.JobContext
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.{DropTableEvent, ExternalCatalogEvent, ExternalCatalogEventListener}
+import org.apache.spark.sql.catalyst.catalog.{AlterTableEvent, DropTableEvent, ExternalCatalogEvent, ExternalCatalogEventListener}
 import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
@@ -286,6 +286,35 @@ class JobsSpec extends AnyFunSuite {
     assert(onDisk(new Path(loc, "_graft_log")) == Seq("4"))
     assert(rowsOf(spark.table(spec.historyTable)) == rowsOf(foldOfAll(spec)))
     assert(spark.table(spec.historyTable).count() == 29)
+  }
+
+  test("the first compaction after a backfill keeps the history table's columns and " +
+      "alters no catalog entry") {
+    val (spec, append) = freshLake("order")
+    append(snapshot(30))
+    Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, 2)) // backfill
+    val columns = spark.table(spec.historyTable).columns.toSeq
+    val loc = location(spec.historyTable)
+    // the catalog posts its events on the calling thread
+    val alters = new java.util.concurrent.atomic.AtomicInteger
+    val catalog = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.externalCatalog
+    val listener = new ExternalCatalogEventListener {
+      override def onEvent(e: ExternalCatalogEvent): Unit = e match {
+        case _: AlterTableEvent => alters.incrementAndGet(): Unit
+        case _ =>
+      }
+    }
+    catalog.addListener(listener)
+    // three days append deltas, the fourth compacts them (as in the
+    // versions case above)
+    try for (d <- 2 to 5) {
+      append(Seq(envelope(ts(d, 1), "u", "1", s"P$d")))
+      Jobs.historyMerge(spark, spec, LocalDate.of(2024, 1, d + 1))
+      assert(spark.table(spec.historyTable).columns.toSeq == columns, s"day $d")
+    } finally catalog.removeListener(listener)
+    assert(onDisk(loc) == Seq("_graft_log", "base-4"), "the fourth merge compacts")
+    assert(alters.get == 0)
+    assert(rowsOf(spark.table(spec.historyTable)) == rowsOf(foldOfAll(spec)))
   }
 
   test("delta files that no manifest entry names are ignored; the rerun replaces them") {
